@@ -16,6 +16,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """A quarter of host memory, clamped to 1-48 GiB. A fixed large heap
+    lets the driver JVM grow past what a small host has, and the kernel
+    then kills it mid-session; ``SPARK_GRAFT_DRIVER_MEM`` overrides."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, max(1024, total_mb // 4))}m"
+
+
 def get_spark(app_name: str = "pulsar_3_2_codedump_spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     builder = (
@@ -28,7 +36,7 @@ def get_spark(app_name: str = "pulsar_3_2_codedump_spark", cpus: int | None = No
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")

@@ -28,9 +28,16 @@ Reference mapping:
     transaction buffer's all-or-nothing visibility
     (TopicTransactionBuffer.java:258,301).
 
-Scale posture: read tasks are one per (topic-partition × offset-range) —
-the natural parallel unit; Arrow batches cross the Python boundary (no
-per-row serde); segment pruning happens before any file IO.
+Scale posture: the batch and stream readers plan through one function,
+``plan_tasks``. It splits each topic partition's offset range at segment
+boundaries into chunks of at most ``maxRowsPerTask`` rows, so a large scan
+fans out over many tasks that each open only their own files. It then packs
+adjacent small ranges into one task until the task reaches ``PACK_ROWS`` (or
+``maxRowsPerTask``, if lower). Every read task runs in a Python worker, whose
+fixed cost does not depend on how few rows it reads, so a live micro-batch of
+a few hundred rows over eight partitions is one task, not eight. A range at
+or above that size keeps its own task. Arrow batches cross the Python
+boundary (no per-row serde); segment pruning happens before any file IO.
 """
 
 from __future__ import annotations
@@ -64,6 +71,11 @@ from pyspark.sql.types import StructType
 from pulsar_3_2_codedump_spark.envelope import ENVELOPE_SCHEMA
 
 FORMAT_NAME = "pulsarlike"
+
+# a read task packs adjacent offset ranges until it holds this many rows
+PACK_ROWS = 100_000
+# default maxRowsPerTask: the most rows one task reads when segments allow
+MAX_ROWS_PER_TASK = 5_000_000
 
 # envelope minus offset/partition (stamped at read from manifest base)
 _DATA_FIELDS = [f for f in ENVELOPE_SCHEMA.fields if f.name not in ("offset", "partition")]
@@ -204,10 +216,66 @@ class RangePartition(InputPartition):
 
 
 @dataclass
+class PackedPartition(InputPartition):
+    """Several small offset ranges read by one task, in order."""
+
+    ranges: list[RangePartition]
+
+
+@dataclass
 class SnapshotPartition(InputPartition):
     """The compacted snapshot (readCompacted=true, §2.D3)."""
 
     rel_path: str
+
+
+def _split_range(segs: list[dict], p: str, lo: int, hi: int, max_rows: int) -> list[RangePartition]:
+    """Cut ``[lo, hi)`` of partition ``p`` into chunks of at most
+    ``max_rows`` rows, aligned to segment boundaries so that every chunk
+    opens only its own files (the reference's dispatcher reads per
+    ledger-entry range the same way). Whole segments accumulate until the
+    next one would pass the budget; a segment larger than the budget is a
+    chunk on its own."""
+    out = []
+    chunk_lo, acc = lo, 0
+    for seg in sorted(segs, key=lambda s: s["start"]):
+        s_lo = max(seg["start"], lo)
+        s_hi = min(seg["start"] + seg["count"], hi)
+        if s_lo >= s_hi:
+            continue
+        if acc and acc + (s_hi - s_lo) > max_rows:
+            out.append(RangePartition(p, chunk_lo, s_lo))
+            chunk_lo, acc = s_lo, 0
+        acc += s_hi - s_lo
+    out.append(RangePartition(p, chunk_lo, hi))
+    return out
+
+
+def plan_tasks(
+    manifest: dict, bounds: dict[str, tuple[int, int]], max_rows: int
+) -> list[InputPartition]:
+    """Read tasks for the offset ranges ``bounds`` (partition -> [lo, hi)):
+    each range is split at ``max_rows`` (``_split_range``), then adjacent
+    chunks, in partition order, are packed into one task until it would pass
+    ``min(PACK_ROWS, max_rows)`` rows. A chunk already that large is a task
+    on its own. The plan depends only on the bounds and on the segments
+    inside them, so a replayed micro-batch plans the same tasks."""
+    chunks = [
+        c
+        for p, (lo, hi) in sorted(bounds.items(), key=lambda kv: int(kv[0]))
+        if lo < hi
+        for c in _split_range(manifest["segments"].get(p, []), p, lo, hi, max_rows)
+    ]
+    cap = min(PACK_ROWS, max_rows)
+    tasks: list[list[RangePartition]] = []
+    acc = 0
+    for c in chunks:
+        if not tasks or acc + (c.hi - c.lo) > cap:
+            tasks.append([])
+            acc = 0
+        tasks[-1].append(c)
+        acc += c.hi - c.lo
+    return [t[0] if len(t) == 1 else PackedPartition(t) for t in tasks]
 
 
 class _SegmentScanMixin:
@@ -231,6 +299,9 @@ class _SegmentScanMixin:
 
     def _manifest(self) -> dict:
         return _read_manifest(self.path)
+
+    def _max_rows_per_task(self) -> int:
+        return int(self.options.get("maxrowspertask", MAX_ROWS_PER_TASK))
 
     def _hide_markers(self, batches):
         """Strip broker-internal marker rows (marker_type non-null, §2.C3 —
@@ -271,13 +342,14 @@ class _SegmentScanMixin:
                 tbl = tbl.filter(pc.equal(tbl.column("partition"), only))
             yield from self._hide_markers(tbl.to_batches())
             return
-        p = partition.partition
-        for seg in sorted(manifest["segments"][p], key=lambda s: s["start"]):
-            if seg["start"] + seg["count"] <= partition.lo or seg["start"] >= partition.hi:
-                continue  # file-level pruning
-            yield from self._hide_markers(
-                _segment_batches(self.path, p, seg, partition.lo, partition.hi)
-            )
+        ranges = partition.ranges if isinstance(partition, PackedPartition) else [partition]
+        for r in ranges:
+            for seg in sorted(manifest["segments"][r.partition], key=lambda s: s["start"]):
+                if seg["start"] + seg["count"] <= r.lo or seg["start"] >= r.hi:
+                    continue  # file-level pruning
+                yield from self._hide_markers(
+                    _segment_batches(self.path, r.partition, seg, r.lo, r.hi)
+                )
 
 
 class PulsarLikeBatchReader(_SegmentScanMixin, DataSourceReader):
@@ -318,13 +390,6 @@ class PulsarLikeBatchReader(_SegmentScanMixin, DataSourceReader):
         ends = _end_offsets(manifest)
         start = json.loads(self.options.get("startingoffsets_json", "{}") or "{}")
         read_compacted = (self.options.get("readcompacted") or "").lower() == "true"
-        # Task granularity: a 100 TB topic partition must not become ONE scan
-        # task — split each partition's offset range into chunks of at most
-        # maxRowsPerTask rows, aligned to segment boundaries so every task
-        # still opens only its own files (the reference's dispatcher reads per
-        # ledger-entry range the same way). 1000 executors then saturate even
-        # on an 8-partition topic.
-        max_rows = int(self.options.get("maxrowspertask", 5_000_000))
         parts: list[InputPartition] = []
         if read_compacted and manifest.get("compacted_path"):
             parts.append(SnapshotPartition(manifest["compacted_path"]))
@@ -332,27 +397,12 @@ class PulsarLikeBatchReader(_SegmentScanMixin, DataSourceReader):
                 p: int(e) for p, e in manifest.get("compaction_horizon", {}).items()
             }
             start = {p: max(int(start.get(p, 0)), horizon.get(p, 0)) for p in ends}
-        for p, end in sorted(ends.items()):
-            if self._only_partition is not None and int(p) != self._only_partition:
-                continue
-            lo = max(int(start.get(p, 0)), self._lo)
-            hi = end if self._hi is None else min(end, self._hi)
-            if lo >= hi:
-                continue
-            # segment-aligned chunking: accumulate whole segments until the
-            # row budget is hit, then cut a task
-            chunk_lo = lo
-            acc = 0
-            for seg in sorted(manifest["segments"].get(p, []), key=lambda s: s["start"]):
-                s_lo = max(seg["start"], lo)
-                s_hi = min(seg["start"] + seg["count"], hi)
-                if s_lo >= s_hi:
-                    continue
-                if acc and acc + (s_hi - s_lo) > max_rows:
-                    parts.append(RangePartition(p, chunk_lo, s_lo))
-                    chunk_lo, acc = s_lo, 0
-                acc += s_hi - s_lo
-            parts.append(RangePartition(p, chunk_lo, hi))
+        bounds = {
+            p: (max(int(start.get(p, 0)), self._lo), end if self._hi is None else min(end, self._hi))
+            for p, end in ends.items()
+            if self._only_partition is None or int(p) == self._only_partition
+        }
+        parts += plan_tasks(manifest, bounds, self._max_rows_per_task())
         if not parts:
             # Spark requires ≥1 partition; an empty range yields no rows
             parts.append(RangePartition(next(iter(ends), "0"), 0, 0))
@@ -484,11 +534,8 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
         return ends
 
     def partitions(self, start: dict, end: dict):
-        return [
-            RangePartition(p, int(start.get(p, 0)), int(end[p]))
-            for p in sorted(end)
-            if int(end[p]) > int(start.get(p, 0))
-        ]
+        bounds = {p: (int(start.get(p, 0)), int(e)) for p, e in end.items()}
+        return plan_tasks(self._manifest(), bounds, self._max_rows_per_task())
 
     def commit(self, end: dict) -> None:
         # cumulative ack: Spark's checkpoint is the consumer-side state; a
@@ -632,7 +679,7 @@ class PulsarLikeStreamWriter(DataSourceStreamWriter):
             if msg is None:
                 continue
             # staged entries are [fname, count] or [fname, count, min_pt, max_pt]
-            # (write() at line ~477) — unpack positionally, never destructure
+            # (see write()) — unpack positionally, never destructure
             for _p, entry in json.loads(msg.partition_counts).items():
                 fname = entry[0]
                 try:

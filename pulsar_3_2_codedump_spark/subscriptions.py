@@ -174,14 +174,14 @@ def unacked(spark: SparkSession, env: DataFrame, state: dict) -> DataFrame:
     side is bounded by max_ranges (10k), never by data volume."""
     md_rows = [(p, s["mark_delete"]) for p, s in state.items()]
     rng_rows = [(p, lo, hi) for p, s in state.items() for lo, hi in s["ranges"]]
-    md = spark.createDataFrame(md_rows or [(-1, -1)], "partition int, mark_delete long")
+    md = T.lookup_frame(spark, md_rows or [(-1, -1)], "partition int, mark_delete long")
     out = (
         env.join(F.broadcast(md), "partition", "left")
         .filter(F.col("offset") > F.coalesce(F.col("mark_delete"), F.lit(-1)))
         .drop("mark_delete")
     )
     if rng_rows:
-        rng = spark.createDataFrame(rng_rows, "rp int, lo long, hi long")
+        rng = T.lookup_frame(spark, rng_rows, "rp int, lo long, hi long")
         out = out.join(
             F.broadcast(rng),
             (F.col("partition") == F.col("rp"))
@@ -196,7 +196,7 @@ def covered(spark: SparkSession, env: DataFrame, state: dict) -> DataFrame:
     (complement of ``unacked``; same broadcast-metadata plan shape)."""
     md_rows = [(p, s["mark_delete"]) for p, s in state.items()]
     rng_rows = [(p, lo, hi) for p, s in state.items() for lo, hi in s["ranges"]]
-    md = spark.createDataFrame(md_rows or [(-1, -1)], "partition int, mark_delete long")
+    md = T.lookup_frame(spark, md_rows or [(-1, -1)], "partition int, mark_delete long")
     below = (
         env.join(F.broadcast(md), "partition")
         .filter(F.col("offset") <= F.col("mark_delete"))
@@ -204,7 +204,7 @@ def covered(spark: SparkSession, env: DataFrame, state: dict) -> DataFrame:
     )
     if not rng_rows:
         return below
-    rng = spark.createDataFrame(rng_rows, "rp int, lo long, hi long")
+    rng = T.lookup_frame(spark, rng_rows, "rp int, lo long, hi long")
     in_ranges = env.join(
         F.broadcast(rng),
         (F.col("partition") == F.col("rp"))

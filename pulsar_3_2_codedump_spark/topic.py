@@ -33,12 +33,30 @@ import json
 import os
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 from pyspark.sql.window import Window as W
 
 from pulsar_3_2_codedump_spark.envelope import ENVELOPE_SCHEMA, conform_envelope
 
 MANIFEST = "manifest.json"
+
+
+def lookup_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
+    """A small driver-side frame (dedup marks, offset bounds, cursor
+    metadata, an empty envelope) built from a pyarrow table, which Spark
+    plans as a ``LocalRelation`` scanned in the JVM. ``createDataFrame`` of
+    a Python list instead plans a ``PythonRDD``: every evaluation runs one
+    Python-worker task per slice, each with a fixed start-up cost far above
+    the cost of its few rows."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table)
 
 
 def _manifest_path(topic_path: str) -> str:
@@ -189,8 +207,11 @@ def gc_inactive_topics(
     The activity stamp is the manifest's mtime — every append/stream-commit
     atomically rewrites it, exactly when the reference touches the managed
     ledger. Control-plane only (O(#topics) metadata); returns the deleted
-    topic names. ``now`` is injectable for deterministic tests."""
-    import json as _json
+    topic names. ``now`` is injectable for deterministic tests.
+
+    Durable subscriptions are read from both cursor stores
+    (``acked_positions``), so a topic whose only consumer is a stream with a
+    named ``subscription`` is not collected as unsubscribed."""
     import shutil
     import time as _time
 
@@ -216,32 +237,55 @@ def gc_inactive_topics(
                 continue
             if t - os.path.getmtime(mf) <= max_inactive_seconds:
                 continue
-            sub_dir = os.path.join(tp, "subscriptions")
-            subs = (
-                [f for f in os.listdir(sub_dir) if f.endswith(".json")]
-                if os.path.isdir(sub_dir)
-                else []
-            )
+            cursors = acked_positions(tp)
             if mode == "delete_when_no_subscriptions":
-                collectible = not subs
+                collectible = not cursors
             else:
                 ends = end_offsets(read_manifest(tp))
-
-                def caught_up(fn: str) -> bool:
-                    # cursor file: {partition: {"mark_delete": last consumed
-                    # offset (inclusive), "ranges": [...]}} (subscriptions.py)
-                    with open(os.path.join(sub_dir, fn)) as f:
-                        cur = _json.load(f)
-                    return all(
-                        int(cur.get(str(p), {}).get("mark_delete", -1)) >= e - 1
-                        for p, e in ends.items()
-                    )
-
-                collectible = all(caught_up(fn) for fn in subs)
+                collectible = all(
+                    pos.get(p, 0) >= e for pos in cursors.values() for p, e in ends.items()
+                )
             if collectible:
                 shutil.rmtree(tp)
                 deleted.append(name)
     return deleted
+
+
+def acked_positions(topic_path: str) -> dict[str, dict[int, int]]:
+    """Every durable subscription's acked position: name -> {partition:
+    first offset not yet acked}. Two stores hold durable cursors:
+
+    - ``subscriptions/<name>.json``: individual-ack state
+      (subscriptions.save_ack_state), {partition: {"mark_delete": last acked
+      offset (inclusive), "ranges": [...]}}; the position is the mark + 1,
+      and ranges acked beyond the mark do not move it;
+    - ``_subscriptions/<name>.json``: the ``pulsarlike`` stream source's
+      named cursor (option ``subscription``), whose ``ack`` holds exclusive
+      end offsets; a cursor that has only a ``read`` position has acked
+      nothing.
+
+    A name present in both stores keeps the lower position per partition.
+    Partitions a cursor does not mention are at offset 0."""
+    out: dict[str, dict[int, int]] = {}
+    for store in ("subscriptions", "_subscriptions"):
+        sub_dir = os.path.join(topic_path, store)
+        if not os.path.isdir(sub_dir):
+            continue
+        for fn in sorted(os.listdir(sub_dir)):
+            if not fn.endswith(".json"):
+                continue
+            with open(os.path.join(sub_dir, fn)) as f:
+                state = json.load(f)
+            if store == "subscriptions":
+                pos = {int(p): int(c.get("mark_delete", -1)) + 1 for p, c in state.items()}
+            else:
+                pos = {int(p): int(v) for p, v in (state.get("ack") or {}).items()}
+            name = fn[: -len(".json")]
+            if name in out:
+                prev = out[name]
+                pos = {p: min(prev.get(p, 0), pos.get(p, 0)) for p in prev.keys() | pos.keys()}
+            out[name] = pos
+    return out
 
 
 def end_offsets(manifest: dict) -> dict[int, int]:
@@ -374,7 +418,7 @@ def _append_unlocked(
     if dedup and manifest["producer_seq"]:
         marks = [(p, int(s)) for p, s in manifest["producer_seq"].items()]
         marks_df = F.broadcast(
-            spark.createDataFrame(marks, "producer_name string, __hwm long")
+            lookup_frame(spark, marks, "producer_name string, __hwm long")
         )
         df = (
             df.join(marks_df, "producer_name", "left")
@@ -391,7 +435,7 @@ def _append_unlocked(
     # makes seek-by-timestamp a prefix search, PersistentMessageFinder.java:57)
     w = W.partitionBy("partition").orderBy("publish_time", "producer_name", "sequence_id")
     ends_df = F.broadcast(
-        spark.createDataFrame(list(ends.items()), "partition int, __end long")
+        lookup_frame(spark, list(ends.items()), "partition int, __end long")
     )
     staged = (
         df.join(ends_df, "partition", "left")
@@ -516,7 +560,7 @@ def read_topic(
                 _seg_path(topic_path, p, s)
             )
     if not paths and not off_paths:
-        return spark.createDataFrame([], ENVELOPE_SCHEMA)
+        return lookup_frame(spark, [], ENVELOPE_SCHEMA)
     # offloaded segments read from the tiered base with its own basePath —
     # both tiers keep the partition=<p> hive layout so the partition column
     # materializes identically, and the two scans union (the reference's
@@ -545,14 +589,14 @@ def read_topic(
         df = df.filter(F.col("marker_type").isNull())
     if start_offsets:
         lo_df = F.broadcast(
-            spark.createDataFrame(list(start_offsets.items()), "partition int, __lo long")
+            lookup_frame(spark, list(start_offsets.items()), "partition int, __lo long")
         )
         df = df.join(lo_df, "partition", "left").filter(
             F.col("__lo").isNull() | (F.col("offset") >= F.col("__lo"))
         ).drop("__lo")
     if end:
         hi_df = F.broadcast(
-            spark.createDataFrame(list(end.items()), "partition int, __hi long")
+            lookup_frame(spark, list(end.items()), "partition int, __hi long")
         )
         df = df.join(hi_df, "partition", "left").filter(
             F.col("__hi").isNull() | (F.col("offset") < F.col("__hi"))
@@ -720,7 +764,7 @@ def read_topics(spark: SparkSession, root: str, pattern: str = ".*") -> DataFram
     column (MultiTopicsConsumerImpl semantics)."""
     paths = discover_topics(root, pattern)
     if not paths:
-        return spark.createDataFrame([], ENVELOPE_SCHEMA).withColumn("topic", F.lit(None).cast("string"))
+        return lookup_frame(spark, [], ENVELOPE_SCHEMA).withColumn("topic", F.lit(None).cast("string"))
     dfs = [read_topic(spark, p).withColumn("topic", F.lit(os.path.basename(p))) for p in paths]
     out = dfs[0]
     for d in dfs[1:]:
@@ -940,7 +984,9 @@ def topic_stats(topic_path: str) -> dict:
     TopicStatsImpl): per-partition message counts, segment counts, storage
     bytes, offset high-water marks, and per-subscription backlog — computed
     from the manifest + cursor files ONLY (pure metadata: no data file is
-    opened, exactly like the broker serving stats from ledger metadata)."""
+    opened, exactly like the broker serving stats from ledger metadata).
+    Subscriptions come from both cursor stores (``acked_positions``); the
+    backlog counts from each one's acked position."""
     manifest = read_manifest(topic_path)
     ends = end_offsets(manifest)
     parts = {}
@@ -962,21 +1008,13 @@ def topic_stats(topic_path: str) -> dict:
             "storage_bytes": size,
             "end_offset": int(ends[int(p)]),
         }
-    subs = {}
-    sub_dir = os.path.join(topic_path, "_subscriptions")
-    if os.path.isdir(sub_dir):
-        for f in sorted(os.listdir(sub_dir)):
-            if not f.endswith(".json"):
-                continue
-            with open(os.path.join(sub_dir, f)) as fh:
-                state = json.load(fh)
-            ack = state.get("ack") or state.get("read") or {}
-            subs[f[:-5]] = {
-                "position": {str(k): int(v) for k, v in ack.items()},
-                "backlog": sum(
-                    max(0, int(ends[int(p)]) - int(ack.get(str(p), 0))) for p in ends
-                ),
-            }
+    subs = {
+        name: {
+            "position": {str(p): v for p, v in pos.items()},
+            "backlog": sum(max(0, e - pos.get(p, 0)) for p, e in ends.items()),
+        }
+        for name, pos in acked_positions(topic_path).items()
+    }
     return {
         "name": manifest.get("name"),
         "n_partitions": manifest["n_partitions"],

@@ -330,3 +330,50 @@ def test_gc_inactive_topics(spark, tmp_root):
     ) == ["idle-with-sub"]
     assert not os.path.exists(tp_subbed)
     assert os.path.exists(tp_active)
+
+
+def test_gc_sees_stream_source_subscriptions(spark, tmp_root):
+    # the pulsarlike source keeps a named cursor under _subscriptions/: a
+    # topic whose only consumer is such a stream is subscribed, and is
+    # caught up only once the stream's ack reaches the end
+    import os
+    import time
+
+    from pulsar_3_2_codedump_spark.sources import pulsarlike as PL
+
+    tp = T.create_topic(tmp_root, "stream-only", n_partitions=2)
+    T.append(spark, _env(spark).filter(F.col("sequence_id") < 100), tp)
+    ends = {str(p): e for p, e in T.end_offsets(T.read_manifest(tp)).items()}
+    reader = PL.PulsarLikeStreamReader({"path": tp, "subscription": "tail/1"})
+    assert reader.latestOffset() == ends  # read position only: nothing acked
+
+    def aged_gc(mode):
+        old = time.time() - 3600
+        os.utime(os.path.join(tp, "manifest.json"), (old, old))
+        return T.gc_inactive_topics(tmp_root, 600, mode=mode)
+
+    assert aged_gc("delete_when_no_subscriptions") == []
+    assert aged_gc("delete_when_subscriptions_caught_up") == []
+    reader.commit({"0": ends["0"], "1": ends["1"] - 1})
+    assert aged_gc("delete_when_subscriptions_caught_up") == []
+    reader.commit(ends)
+    assert aged_gc("delete_when_subscriptions_caught_up") == ["stream-only"]
+    assert not os.path.exists(tp)
+
+
+def test_topic_stats_sees_both_cursor_stores(spark, tmp_root):
+    import os
+
+    from pulsar_3_2_codedump_spark import subscriptions as S
+    from pulsar_3_2_codedump_spark.sources import pulsarlike as PL
+
+    tp = T.create_topic(tmp_root, "two-stores", n_partitions=2)
+    T.append(spark, _env(spark).filter(F.col("sequence_id") < 60), tp)
+    ends = T.end_offsets(T.read_manifest(tp))
+    cpath = S.subscription_cursor_path(tp, "acks")
+    os.makedirs(os.path.dirname(cpath), exist_ok=True)
+    S.save_ack_state(S.ack_cumulative(S.new_ack_state(), 0, 9), cpath)
+    PL.PulsarLikeStreamReader({"path": tp, "subscription": "stream"}).commit({"1": 4})
+    subs = T.topic_stats(tp)["subscriptions"]
+    assert subs["acks"] == {"position": {"0": 10}, "backlog": sum(ends.values()) - 10}
+    assert subs["stream"] == {"position": {"1": 4}, "backlog": sum(ends.values()) - 4}
