@@ -18,13 +18,16 @@ Reference mapping:
   - maxRecordsPerTrigger = consumer flow control / receiver queue permits
     (ServerCnx.handleFlow:1910, receiverQueueSize=1000) — bounds how far
     latestOffset may advance per micro-batch.
-  - Sink offset stamping: segments written by the streaming sink store rows
-    in order and the manifest records the base offset; the reader computes
-    ``offset = base + row_position`` — exactly how BrokerEntryMetadata.index
+  - Sink offset stamping: write tasks stage rows without offsets; the
+    driver's commit stamps the ``offset`` column from the partition's end
+    under the writer lock and commits through ``topic._commit_segments``,
+    the one commit function every writer uses — how BrokerEntryMetadata.index
     is stamped broker-side at append (AppendIndexMetadataInterceptor.java),
-    not producer-side.
-  - Exactly-once: commit() is atomic (manifest replace) and idempotent
-    (replayed batchIds are skipped), the Spark-side equivalent of the
+    not producer-side. Every segment, whoever wrote it, is a directory of
+    parquet files that store ``offset``, so readers have one shape to read.
+  - Exactly-once: commit() is atomic (manifest replace) and idempotent (a
+    replayed batchId's token ``stream:<sinkId>:<batchId>`` is already
+    committed, so the commit is a no-op), the Spark-side equivalent of the
     transaction buffer's all-or-nothing visibility
     (TopicTransactionBuffer.java:258,301).
 
@@ -47,7 +50,9 @@ import os
 import uuid
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark.sql.datasource import (
@@ -68,7 +73,9 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+from pulsar_3_2_codedump_spark import topic as T
 from pulsar_3_2_codedump_spark.envelope import ENVELOPE_SCHEMA
+from pulsar_3_2_codedump_spark.hashing import route_partition
 
 FORMAT_NAME = "pulsarlike"
 
@@ -77,89 +84,43 @@ PACK_ROWS = 100_000
 # default maxRowsPerTask: the most rows one task reads when segments allow
 MAX_ROWS_PER_TASK = 5_000_000
 
-# envelope minus offset/partition (stamped at read from manifest base)
-_DATA_FIELDS = [f for f in ENVELOPE_SCHEMA.fields if f.name not in ("offset", "partition")]
-_DATA_SCHEMA = StructType(_DATA_FIELDS)
+# what a sink write task stages: the envelope minus offset (stamped at
+# commit) and partition (the segment's directory)
+_STAGE_SCHEMA = to_arrow_schema(
+    StructType([f for f in ENVELOPE_SCHEMA.fields if f.name not in ("offset", "partition")])
+)
 
 
 def _arrow_schema() -> pa.Schema:
     return to_arrow_schema(ENVELOPE_SCHEMA)
 
 
-def _read_manifest(path: str) -> dict:
-    with open(os.path.join(path, "manifest.json")) as f:
-        return json.load(f)
-
-
-def _write_manifest_atomic(path: str, manifest: dict) -> None:
-    tmp = os.path.join(path, f"manifest.json.tmp.{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(path, "manifest.json"))
-
-
-def _end_offsets(manifest: dict) -> dict[str, int]:
-    # max(live-segment end, persisted next_offset) — offsets never regress
-    # after a retention trim drops every segment (mirrors topic.end_offsets)
-    nxt = manifest.get("next_offset", {})
-    out = {}
-    for p, segs in manifest["segments"].items():
-        live = max((s["start"] + s["count"] for s in segs), default=0)
-        out[p] = max(live, int(nxt.get(p, 0)))
-    return out
-
-
-def _seg_location(topic_path: str, p: str, seg: dict) -> str:
-    # offloaded segments (topic.offload_segments) carry their tiered-store
-    # location in the manifest entry; local ones live under the topic dir
-    return seg.get("offload_path") or os.path.join(
-        topic_path, f"partition={p}", seg["path"]
-    )
+def _ends(manifest: dict) -> dict[str, int]:
+    """``topic.end_offsets`` keyed by partition string, the key type of
+    stream offsets."""
+    return {str(p): e for p, e in T.end_offsets(manifest).items()}
 
 
 def _segment_batches(
     topic_path: str, p: str, seg: dict, lo: int, hi: int
 ) -> list[pa.RecordBatch]:
-    """Read one segment, slice to [lo, hi), stamp partition/offset columns."""
-    seg_path = _seg_location(topic_path, p, seg)
-    table = pq.read_table(seg_path)
-    base = seg["start"]
-    if "offset" in table.column_names:
-        # batch-appended segment: offsets are materialized in the data
-        mask = pa.compute.and_(
-            pa.compute.greater_equal(table.column("offset"), lo),
-            pa.compute.less(table.column("offset"), hi),
-        )
-        table = table.filter(mask)
-        if table.num_rows == 0:
-            return []
-        offsets = table.column("offset").cast(pa.int64()).combine_chunks()
-        n_out = table.num_rows
-    else:
-        # stream-sink segment: rows are in append order; offset = base + position
-        n = table.num_rows
-        start_row = max(0, lo - base)
-        end_row = min(n, hi - base)
-        if start_row >= end_row:
-            return []
-        table = table.slice(start_row, end_row - start_row)
-        offsets = pa.array(range(base + start_row, base + end_row), type=pa.int64())
-        n_out = end_row - start_row
-    parts = pa.array([int(p)] * n_out, type=pa.int32())
-    cols, names = [], []
+    """Read one segment's rows in [lo, hi) — its stored offsets prune parquet
+    row groups — and stamp the partition column."""
+    table = pq.read_table(
+        T._seg_path(topic_path, p, seg), filters=[("offset", ">=", lo), ("offset", "<", hi)]
+    )
+    if table.num_rows == 0:
+        return []
+    cols = []
     target = _arrow_schema()
     for field in target:
-        if field.name == "offset":
-            cols.append(offsets)
-        elif field.name == "partition":
-            cols.append(parts)
+        if field.name == "partition":
+            cols.append(pa.array([int(p)] * table.num_rows, type=pa.int32()))
         elif field.name in table.column_names:
             cols.append(table.column(field.name).cast(field.type).combine_chunks())
         else:
-            cols.append(pa.nulls(n_out, type=field.type))
-        names.append(field.name)
-    out = pa.table(cols, names=names).cast(target)
-    return out.to_batches()
+            cols.append(pa.nulls(table.num_rows, type=field.type))
+    return pa.table(cols, schema=target).to_batches()
 
 
 def _seek_offset_for_timestamp(topic_path: str, p: str, segs: list[dict], ts_us: int) -> int:
@@ -169,39 +130,26 @@ def _seek_offset_for_timestamp(topic_path: str, p: str, segs: list[dict], ts_us:
     Two-level search, mirroring the reference's ledger-metadata-then-entries
     structure: (1) prune on the manifest time index — every segment carries
     ``min_pt``/``max_pt`` publish-time bounds (unix micros) written in the
-    same atomic commit as the segment (topic.append stats / stream-sink
-    write()) — so segments wholly before the target cost ZERO IO, and a
+    same atomic commit as the segment (``topic._commit_segments``, for every
+    writer) — so segments wholly before the target cost ZERO IO, and a
     segment wholly after resolves from metadata alone; (2) only the boundary
-    segment (min_pt < ts <= max_pt) is opened, two columns only, and searched
-    vectorized with pyarrow.compute — no per-row Python, no driver-side scan
-    of the partition. At 100 TB a timestamp seek touches one segment file per
+    segment (min_pt < ts <= max_pt) is opened, two stored columns only
+    (``publish_time``, ``offset``), and searched vectorized with
+    pyarrow.compute — no per-row Python, no driver-side scan of the
+    partition. At 100 TB a timestamp seek touches one segment per
     partition."""
-    import pyarrow.compute as pc
-
     target = pa.scalar(ts_us, type=pa.timestamp("us"))
     for seg in sorted(segs, key=lambda s: s["start"]):
         if seg.get("max_pt") is not None and int(seg["max_pt"]) < ts_us:
             continue  # wholly before the target — pruned, no IO
         if seg.get("min_pt") is not None and int(seg["min_pt"]) >= ts_us:
             return seg["start"]  # wholly at/after — first offset, no IO
-        # boundary (or unindexed legacy) segment: vectorized exact search
-        seg_path = _seg_location(topic_path, p, seg)
-        try:  # segment may be a file (stream sink) or a directory (batch append)
-            tbl = pq.read_table(seg_path, columns=["publish_time", "offset"])
-            has_offset = True
-        except Exception:
-            tbl = pq.read_table(seg_path, columns=["publish_time"])
-            has_offset = False
+        # boundary (or unindexed) segment: vectorized exact search
+        tbl = pq.read_table(T._seg_path(topic_path, p, seg), columns=["publish_time", "offset"])
         if tbl.num_rows == 0:
             continue
-        pts = tbl.column("publish_time").cast(pa.timestamp("us"))
-        if has_offset:
-            offs = tbl.column("offset").cast(pa.int64())
-        else:
-            # stream-sink segment: offset = start + row position
-            offs = pa.chunked_array([pa.array(range(seg["start"], seg["start"] + tbl.num_rows), type=pa.int64())])
-        offs = offs.combine_chunks() if isinstance(offs, pa.ChunkedArray) else offs
-        pts = pts.combine_chunks() if isinstance(pts, pa.ChunkedArray) else pts
+        pts = tbl.column("publish_time").cast(pa.timestamp("us")).combine_chunks()
+        offs = tbl.column("offset").cast(pa.int64()).combine_chunks()
         qual = offs.filter(pc.and_kleene(pc.is_valid(pts), pc.greater_equal(pts, target)))
         if len(qual):
             return pc.min(qual).as_py()
@@ -288,17 +236,11 @@ class _SegmentScanMixin:
         # shadow topics (PIP-180, topic.create_shadow_topic) read the SOURCE
         # topic's ledgers; the shadow keeps its own subscriptions (here:
         # its own checkpoints) — only the data path re-points
-        seen = set()
-        while True:
-            src = _read_manifest(self.path).get("shadow_source")
-            if not src or src in seen:
-                break
-            seen.add(src)
-            self.path = src
+        self.path = T.resolve_data_topic(self.path)
         self.options = options
 
     def _manifest(self) -> dict:
-        return _read_manifest(self.path)
+        return T.read_manifest(self.path)
 
     def _max_rows_per_task(self) -> int:
         return int(self.options.get("maxrowspertask", MAX_ROWS_PER_TASK))
@@ -310,8 +252,6 @@ class _SegmentScanMixin:
         if (self.options.get("readmarkers") or "").lower() == "true":
             yield from batches
             return
-        import pyarrow.compute as pc
-
         for b in batches:
             out = b.filter(pc.is_null(b.column(b.schema.get_field_index("marker_type"))))
             if out.num_rows:
@@ -320,8 +260,6 @@ class _SegmentScanMixin:
     def read(self, partition):
         manifest = self._manifest()
         if isinstance(partition, SnapshotPartition):
-            import pyarrow.compute as pc
-
             target = _arrow_schema()
             snap = pq.read_table(os.path.join(self.path, partition.rel_path))
             for name in target.names:
@@ -387,7 +325,7 @@ class PulsarLikeBatchReader(_SegmentScanMixin, DataSourceReader):
 
     def partitions(self):
         manifest = self._manifest()
-        ends = _end_offsets(manifest)
+        ends = _ends(manifest)
         start = json.loads(self.options.get("startingoffsets_json", "{}") or "{}")
         read_compacted = (self.options.get("readcompacted") or "").lower() == "true"
         parts: list[InputPartition] = []
@@ -411,10 +349,9 @@ class PulsarLikeBatchReader(_SegmentScanMixin, DataSourceReader):
 
 class PulsarLikeBatchWriter(DataSourceWriter):
     """Batch producer path (§2.A1): ``df.write.format("pulsarlike")`` —
-    executors stage parquet per topic-partition, driver commit assigns base
-    offsets and atomically swaps the manifest (same protocol as the
-    streaming sink, minus batch-id idempotency which batch writes don't
-    replay)."""
+    executors stage parquet per topic-partition, and the driver commits them
+    through the same commit as the streaming sink, with no replay token:
+    batch writes never replay."""
 
     def __init__(self, options, schema, overwrite: bool):
         if overwrite:
@@ -425,12 +362,7 @@ class PulsarLikeBatchWriter(DataSourceWriter):
         return self._delegate.write(iterator)
 
     def commit(self, messages):
-        # batch writes never replay with the same id, so the idempotency
-        # ledger must not be able to collide across concurrent writers — a
-        # manifest-length-derived id computed outside the lock did exactly
-        # that (two writers both compute -1; the loser is discarded as a
-        # "replay"). A fresh uuid key is unique by construction.
-        self._delegate.commit(messages, f"batch-{uuid.uuid4().hex}")
+        self._delegate._commit(messages, None)
 
     def abort(self, messages):
         self._delegate.abort(messages, -1)
@@ -450,7 +382,7 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
         if mode == "earliest":
             return {p: 0 for p in manifest["segments"]}
         if mode == "latest":
-            return _end_offsets(manifest)
+            return _ends(manifest)
         if mode.startswith("timestamp:"):
             import datetime as _dt
 
@@ -512,14 +444,11 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
             p: max(int(pos.get(p, 0)), int(cur.get(p, 0)))
             for p in set(map(str, pos)) | set(map(str, cur))
         }
-        tmp = f + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(state, fh)
-        os.replace(tmp, f)
+        T._write_json_atomic(f, state)
 
     def latestOffset(self) -> dict:
         manifest = self._manifest()
-        ends = _end_offsets(manifest)
+        ends = _ends(manifest)
         max_rec = self.options.get("maxrecordspertrigger")
         if max_rec:
             cap = int(max_rec)
@@ -547,143 +476,113 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
 
 
 @dataclass
-class SegmentCommit(WriterCommitMessage):
-    partition_counts: str  # json {partition: [staged_file, count]}
+class StagedRows(WriterCommitMessage):
+    """One write task's output: each topic partition's staged parquet file
+    (rows in arrival order, no offsets)."""
+
+    files: dict[int, str]
 
 
 class PulsarLikeStreamWriter(DataSourceStreamWriter):
     """Streaming sink: executors stage parquet files; the driver commit
-    assigns base offsets and atomically replaces the manifest (idempotent
-    per batchId → exactly-once).
+    stamps offsets and commits them with ``topic._commit_segments`` under
+    the topic writer lock. A micro-batch commits under the token
+    ``stream:<sinkId>:<batchId>``, so a replayed batchId is a no-op
+    (exactly-once).
 
     SCALE NOTE: the Python DataSource writer API hands ``write()`` Spark Rows
-    one at a time — inherently row-at-a-time Python, fine for live tails
-    (bounded by maxRecordsPerTrigger) but NOT a bulk-ingest path. Route bulk
-    / 100 TB ingest through ``foreachBatch`` + ``topic.append`` (JVM columnar
-    write end-to-end, same atomic manifest commit, ``batch_token`` for
-    exactly-once) — measured ~0.5M rows/s on local[32] vs this sink's
-    per-row pace (see SCALE.md 'Bulk ingest')."""
+    one at a time, and the commit reads every staged row back on the driver
+    to stamp its offset. Fine for live tails (bounded by
+    maxRecordsPerTrigger) but NOT a bulk-ingest path. Route bulk / 100 TB
+    ingest through ``foreachBatch`` + ``topic.append`` (JVM columnar write
+    end-to-end, same commit function, ``batch_token`` for exactly-once) —
+    measured ~0.5M rows/s on local[32] (see SCALE.md 'Bulk ingest')."""
 
     def __init__(self, options, schema):
         self.path = options.get("path") or options.get("topic")
         if not self.path:
             raise ValueError("pulsarlike sink requires option 'path'")
-        if _read_manifest(self.path).get("shadow_source"):
+        if T.read_manifest(self.path).get("shadow_source"):
             # shadow topics are read-only replicas (PersistentTopic.java:332)
             raise ValueError(f"cannot publish to shadow topic {self.path}")
         self.options = options
+        self._stage_dir = os.path.join(self.path, "_stream_staging")
 
-    def write(self, iterator) -> SegmentCommit:
+    def write(self, iterator) -> StagedRows:
         from pyspark import TaskContext
 
-        manifest = _read_manifest(self.path)
-        n_part = manifest["n_partitions"]
+        n_part = T.read_manifest(self.path)["n_partitions"]
         tc = TaskContext.get()
         task = f"{tc.partitionId()}-{uuid.uuid4().hex[:8]}" if tc else uuid.uuid4().hex[:8]
         rows_by_part: dict[int, list] = {}
-        from pulsar_3_2_codedump_spark.hashing import route_partition
-
         for row in iterator:
             d = row.asDict(recursive=False)
             p = d.get("partition")
-            if p is None:
-                # deterministic routing, bit-identical to the batch path's
-                # pmod(xxhash64(key), N) (topic.append) — builtin hash() is
-                # PYTHONHASHSEED-randomized per worker and would scatter a
-                # key across partitions between executors/restarts
+            if p is None or not 0 <= p < n_part:
+                # deterministic routing, bit-identical to topic.append's
+                # pmod(xxhash64(key), N), which also re-routes partitions
+                # outside this topic's range — builtin hash() is
+                # PYTHONHASHSEED-randomized per worker
                 p = route_partition(d.get("key"), n_part)
             rows_by_part.setdefault(int(p), []).append(d)
 
-        staged: dict[int, list] = {}
-        stage_dir = os.path.join(self.path, "_stream_staging")
-        os.makedirs(stage_dir, exist_ok=True)
-        data_schema = to_arrow_schema(_DATA_SCHEMA)
+        os.makedirs(self._stage_dir, exist_ok=True)
+        files = {}
         for p, rows in rows_by_part.items():
-            arrays = []
-            for field in _DATA_FIELDS:
-                vals = [r.get(field.name) for r in rows]
-                arrays.append(pa.array(vals, type=data_schema.field(field.name).type))
-            tbl = pa.table(arrays, names=[f.name for f in _DATA_FIELDS])
-            fname = f"stage-{task}-p{p}.parquet"
-            pq.write_table(tbl, os.path.join(stage_dir, fname))
-            # publish-time bounds (unix micros) for the manifest time index
-            # used by seek-by-timestamp (PersistentMessageFinder.java:57)
-            mm = pa.compute.min_max(tbl.column("publish_time").cast(pa.timestamp("us")))
-            lo, hi = mm["min"].value, mm["max"].value
-            staged[p] = [fname, len(rows), lo, hi]
-        return SegmentCommit(partition_counts=json.dumps(staged))
+            files[p] = f"stage-{task}-p{p}.parquet"
+            pq.write_table(
+                pa.Table.from_pylist(rows, schema=_STAGE_SCHEMA),
+                os.path.join(self._stage_dir, files[p]),
+            )
+        return StagedRows(files=files)
 
     def commit(self, messages, batchId) -> None:
-        import shutil
-
-        from pulsar_3_2_codedump_spark.topic import _topic_write_lock
-
         # Replay idempotency is keyed per SINK, not per topic: two streaming
         # queries writing the same topic both start at batchId 0 and must not
         # be treated as each other's replays. Pass option("sinkId", ...) to
-        # scope the ledger; single-query topics work unchanged without it.
-        sink_id = self.options.get("sinkid")
-        key = f"{sink_id}:{batchId}" if sink_id else batchId
-        with _topic_write_lock(self.path):
-            self._commit_locked(messages, key, shutil)
+        # scope the token; single-query topics work unchanged without it.
+        self._commit(messages, f"stream:{self.options.get('sinkid') or ''}:{batchId}")
 
-    def _commit_locked(self, messages, batchId: int, shutil) -> None:
-        # writer lock held: a concurrent batch append (or another streaming
-        # query on the same topic) cannot lose this commit's segments to the
-        # manifest read-modify-write race
-        manifest = _read_manifest(self.path)
-        done = manifest.setdefault("committed_stream_batches", [])
-        if batchId in done:
-            # replayed micro-batch after restart — idempotent skip
-            self._cleanup(messages)
-            return
-        if "terminated_at" in manifest:
-            from pulsar_3_2_codedump_spark.topic import TopicTerminatedError
+    def _commit(self, messages, token: str | None) -> None:
+        staged = [m for m in messages or [] if m is not None]
 
+        def stage(manifest: dict, ends: dict[int, int], stage_dir: str):
+            # one segment per partition: the batch's staged files in task
+            # order, offsets stamped densely from the partition's end. The
+            # sink does not dedup, so it leaves the producer marks alone.
+            parts = {}
+            for p in sorted({p for m in staged for p in m.files}):
+                tbl = pa.concat_tables(
+                    pq.read_table(os.path.join(self._stage_dir, m.files[p]))
+                    for m in staged
+                    if p in m.files
+                )
+                offsets = np.arange(ends[p], ends[p] + tbl.num_rows, dtype=np.int64)
+                os.makedirs(os.path.join(stage_dir, f"partition={p}"))
+                pq.write_table(
+                    tbl.append_column("offset", pa.array(offsets)),
+                    os.path.join(stage_dir, f"partition={p}", "part-00000.parquet"),
+                )
+                pt = pc.min_max(tbl.column("publish_time").cast(pa.timestamp("us")))
+                parts[p] = (tbl.num_rows, pt["min"].value, pt["max"].value)
+            return parts, {}
+
+        try:
+            with T._topic_write_lock(self.path):
+                T._commit_segments(self.path, stage, token)
+        finally:
             self._cleanup(messages)
-            raise TopicTerminatedError(
-                f"topic {manifest['name']} is terminated — streaming sink "
-                "cannot commit new micro-batches"
-            )
-        ends = _end_offsets(manifest)
-        stage_dir = os.path.join(self.path, "_stream_staging")
-        for msg in messages:
-            if msg is None:
-                continue
-            for p_str, entry in sorted(json.loads(msg.partition_counts).items()):
-                fname, count = entry[0], entry[1]
-                pt_bounds = entry[2:4] if len(entry) >= 4 else (None, None)
-                p = int(p_str)
-                base = ends.get(str(p), ends.get(p, 0))
-                seg_name = f"seg-{base:020d}-{count}"
-                pdir = os.path.join(self.path, f"partition={p}")
-                os.makedirs(pdir, exist_ok=True)
-                shutil.move(os.path.join(stage_dir, fname), os.path.join(pdir, seg_name))
-                seg = {"start": int(base), "count": int(count), "path": seg_name}
-                if pt_bounds[0] is not None:
-                    seg["min_pt"], seg["max_pt"] = int(pt_bounds[0]), int(pt_bounds[1])
-                manifest["segments"].setdefault(str(p), []).append(seg)
-                ends[str(p)] = base + count
-        done.append(batchId)
-        nxt = manifest.setdefault("next_offset", {})
-        for p, e in ends.items():
-            nxt[str(p)] = max(int(nxt.get(str(p), 0)), int(e))
-        _write_manifest_atomic(self.path, manifest)
 
     def abort(self, messages, batchId: int) -> None:
         self._cleanup(messages)
 
     def _cleanup(self, messages) -> None:
-        stage_dir = os.path.join(self.path, "_stream_staging")
         for msg in messages or []:
             if msg is None:
                 continue
-            # staged entries are [fname, count] or [fname, count, min_pt, max_pt]
-            # (see write()) — unpack positionally, never destructure
-            for _p, entry in json.loads(msg.partition_counts).items():
-                fname = entry[0]
+            for fname in msg.files.values():
                 try:
-                    os.remove(os.path.join(stage_dir, fname))
+                    os.remove(os.path.join(self._stage_dir, fname))
                 except OSError:
                     pass
 

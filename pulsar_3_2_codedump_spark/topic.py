@@ -4,18 +4,23 @@ plus a JSON manifest (SURVEY §1, §3.1).
 Reference mapping:
   - Topic / partition: persistent://tenant/ns/topic with N independent
     sub-logs (PersistentTopic.java:523 — publish appends to a managed ledger).
-    Here: ``<root>/<topic>/partition=<p>/seg-<start>-<count>.parquet``.
+    Here: ``<root>/<topic>/partition=<p>/seg-<start>-<count>-<id>/``.
   - Ledger (BookKeeper segment, rolled and trimmed,
-    ManagedLedgerImpl.java:1794,2598): one parquet segment file. Retention /
-    trim = dropping segments from the manifest then deleting files.
+    ManagedLedgerImpl.java:1794,2598): one segment, a directory of parquet
+    files. Retention / trim = dropping segments from the manifest then
+    deleting their directories.
   - BrokerEntryMetadata.index (PulsarApi.proto:191): the monotonic
-    per-partition ``offset`` column, assigned at append time from the
-    manifest's per-partition high-water mark.
+    per-partition ``offset`` column, stored in every segment. One commit
+    function, ``_commit_segments``, assigns it from the manifest's
+    per-partition high-water mark for every writer (``append``, the
+    ``pulsarlike`` stream sink and batch writer), as the broker's single
+    append path does (AppendIndexMetadataInterceptor).
   - Transaction buffer visibility (TopicTransactionBuffer.java:258):
-    segments are staged as files FIRST, then the manifest is atomically
-    replaced (write-temp + os.replace) — a reader never sees a half-appended
-    batch, which is exactly-once for the batch sink and the streaming sink's
-    idempotent micro-batch commit.
+    segments are staged FIRST, then the manifest is atomically replaced
+    (write-temp + os.replace) — a reader never sees a half-appended batch.
+    A ``batch_token`` recorded in the same replace makes a replayed commit
+    a no-op, which is exactly-once for ``foreachBatch`` appends and the
+    stream sink's micro-batches.
   - Message dedup (MessageDeduplication.java:325): append() drops rows whose
     (producer_name, sequence_id) is ≤ the stored per-producer high-water
     mark, then advances the marks in the same manifest commit.
@@ -31,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -68,11 +74,15 @@ def read_manifest(topic_path: str) -> dict:
         return json.load(f)
 
 
-def _write_manifest_atomic(topic_path: str, manifest: dict) -> None:
-    tmp = _manifest_path(topic_path) + f".tmp.{uuid.uuid4().hex}"
+def _write_json_atomic(path: str, obj: dict) -> None:
+    tmp = f"{path}.tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, _manifest_path(topic_path))  # atomic commit point
+        json.dump(obj, f, indent=1, sort_keys=True)
+    os.replace(tmp, path)  # readers see the old or the new file, never half
+
+
+def _write_manifest_atomic(topic_path: str, manifest: dict) -> None:
+    _write_json_atomic(_manifest_path(topic_path), manifest)  # commit point
 
 
 class ShadowTopicError(RuntimeError):
@@ -212,7 +222,6 @@ def gc_inactive_topics(
     Durable subscriptions are read from both cursor stores
     (``acked_positions``), so a topic whose only consumer is a stream with a
     named ``subscription`` is not collected as unsubscribed."""
-    import shutil
     import time as _time
 
     if mode not in ("delete_when_no_subscriptions", "delete_when_subscriptions_caught_up"):
@@ -366,8 +375,9 @@ def _append_unlocked(
     dedup: bool = True,
     batch_token: str | None = None,
 ) -> dict[int, int]:
-    """Append envelope rows to the topic: route → assign offsets → write
-    segments → atomically commit the manifest. Returns new end offsets.
+    """Append envelope rows to the topic: route → dedup → number rows from
+    the partition ends → stage, then ``_commit_segments``. Returns new end
+    offsets.
 
     ``df`` must carry the envelope columns except offset (which is assigned
     here); ``partition`` may be pre-set or is derived from the key hash.
@@ -377,155 +387,145 @@ def _append_unlocked(
     already-committed token is a no-op. This closes the foreachBatch
     exactly-once hole (foreachBatch is at-least-once: a crash after append
     but before the streaming checkpoint commit replays the micro-batch —
-    reference semantics TopicTransactionBuffer.java:258 all-or-nothing;
-    mirror of the stream sink's committed_stream_batches idempotency,
-    sources/pulsarlike.py commit()). Tokens must be stable across replays of
-    the same logical batch (e.g. hash(checkpoint) + batch_id) and unique
-    across logical writes to this topic.
+    reference semantics TopicTransactionBuffer.java:258 all-or-nothing; the
+    stream sink keys its micro-batches the same way). Tokens must be stable
+    across replays of the same logical batch (e.g. hash(checkpoint) +
+    batch_id) and unique across logical writes to this topic.
     """
+
+    def stage(manifest: dict, ends: dict[int, int], stage_dir: str):
+        n_part = manifest["n_partitions"]
+        # external sources can hand near-miss types (TIMESTAMP_NTZ
+        # publish_time from a mapped date column, int sequence ids);
+        # canonicalize before any arithmetic — unix_micros below requires
+        # true TIMESTAMP
+        rows = conform_envelope(df)
+        route = F.pmod(F.xxhash64(F.col("key")), F.lit(n_part)).cast("int")
+        if "partition" not in rows.columns:
+            rows = rows.withColumn("partition", route)
+        else:
+            # rows copied from another topic may carry ITS partition
+            # numbering; anything outside this topic's range re-routes by key
+            # hash (the producer's router always targets the destination's
+            # partitions, RoundRobinPartitionMessageRouterImpl.java:74-84)
+            rows = rows.withColumn(
+                "partition",
+                F.when(F.col("partition").between(0, n_part - 1), F.col("partition")).otherwise(route),
+            )
+        if dedup and manifest["producer_seq"]:
+            marks = [(p, int(s)) for p, s in manifest["producer_seq"].items()]
+            marks_df = F.broadcast(
+                lookup_frame(spark, marks, "producer_name string, __hwm long")
+            )
+            rows = (
+                rows.join(marks_df, "producer_name", "left")
+                .filter(F.col("__hwm").isNull() | (F.col("sequence_id") > F.col("__hwm")))
+                .drop("__hwm")
+            )
+        # also dedup inside the batch itself (a retry may land in the same batch)
+        if dedup:
+            rows = rows.dropDuplicates(["producer_name", "sequence_id"])
+
+        # monotonic offsets: current end + dense rank of arrival within
+        # partition; arrival order = publish_time (a real log is
+        # publish-ordered — this is what makes seek-by-timestamp a prefix
+        # search, PersistentMessageFinder.java:57)
+        w = W.partitionBy("partition").orderBy("publish_time", "producer_name", "sequence_id")
+        ends_df = F.broadcast(
+            lookup_frame(spark, list(ends.items()), "partition int, __end long")
+        )
+        staged = (
+            rows.join(ends_df, "partition", "left")
+            .withColumn("offset", F.row_number().over(w).cast("long") - 1 + F.coalesce("__end", F.lit(0)))
+            .drop("__end")
+            .select(*[f.name for f in ENVELOPE_SCHEMA.fields])
+        )
+        # persist so the write, the per-partition stats and the producer
+        # high-water marks share ONE computation of the pipeline
+        staged = staged.persist()
+        try:
+            staged.write.mode("overwrite").partitionBy("partition").parquet(stage_dir)
+            stats = (
+                staged.groupBy("partition")
+                .agg(
+                    F.count(F.lit(1)).alias("count"),
+                    F.unix_micros(F.min("publish_time")).alias("min_pt"),
+                    F.unix_micros(F.max("publish_time")).alias("max_pt"),
+                )
+                .collect()
+            )
+            new_marks = {
+                r["producer_name"]: r["hwm"]
+                for r in staged.groupBy("producer_name")
+                .agg(F.max("sequence_id").alias("hwm"))
+                .collect()
+                if r["producer_name"] is not None
+            }
+        finally:
+            staged.unpersist()
+        return {r["partition"]: (r["count"], r["min_pt"], r["max_pt"]) for r in stats}, new_marks
+
+    return _commit_segments(topic_path, stage, batch_token)
+
+
+def _commit_segments(topic_path: str, stage, batch_token: str | None = None) -> dict[int, int]:
+    """The one commit protocol for every writer to a topic (``append``, the
+    ``pulsarlike`` stream sink and batch writer), as every Pulsar producer's
+    entries pass through the broker's one append path. The caller holds the
+    writer lock. Returns the new end offsets.
+
+    ``stage(manifest, ends, stage_dir)`` gets the rows of one batch into
+    ``<stage_dir>/partition=<p>/`` as parquet files that store the
+    ``offset`` column, numbered densely from ``ends[p]``. It returns
+    ``({p: (count, min_pt, max_pt)}, {producer_name: max sequence_id})``,
+    with publish-time bounds in unix micros (None when unknown).
+
+    This function alone does the rest: a batch whose ``batch_token`` is
+    already committed is a no-op, a terminated topic rejects the batch, each
+    staged partition moves into place as one segment, and one atomic
+    manifest replace records the segments with their offset and time bounds
+    (the index seek-by-timestamp prunes on, PersistentMessageFinder.java:57),
+    ``next_offset``, the producer marks and the token. Segment names end in
+    the stage id, so a retry after a crash between the move and the replace
+    never lands on the orphan of the failed attempt."""
     manifest = read_manifest(topic_path)
     if batch_token is not None and batch_token in manifest.get("committed_batch_tokens", []):
-        return end_offsets(manifest)  # replay of a pre-termination commit: no-op
+        return end_offsets(manifest)  # a replay, even past termination: no-op
     if "terminated_at" in manifest:
         raise TopicTerminatedError(
             f"topic {manifest['name']} is terminated at {manifest['terminated_at']}"
         )
-    n_part = manifest["n_partitions"]
     ends = end_offsets(manifest)
-
-    # external sources can hand near-miss types (TIMESTAMP_NTZ publish_time
-    # from a mapped date column, int sequence ids); canonicalize before any
-    # arithmetic — unix_micros below requires true TIMESTAMP
-    df = conform_envelope(df)
-
-    cols = [f.name for f in ENVELOPE_SCHEMA.fields]
-    if "partition" not in df.columns:
-        df = df.withColumn(
-            "partition", F.pmod(F.xxhash64(F.col("key")), F.lit(n_part)).cast("int")
-        )
-    else:
-        # rows copied from another topic may carry ITS partition numbering;
-        # anything outside this topic's range re-routes by key hash (the
-        # producer's router always targets the destination's partitions,
-        # RoundRobinPartitionMessageRouterImpl.java:74-84)
-        df = df.withColumn(
-            "partition",
-            F.when(
-                F.col("partition").between(0, n_part - 1), F.col("partition")
-            ).otherwise(F.pmod(F.xxhash64(F.col("key")), F.lit(n_part)).cast("int")),
-        )
-
-    if dedup and manifest["producer_seq"]:
-        marks = [(p, int(s)) for p, s in manifest["producer_seq"].items()]
-        marks_df = F.broadcast(
-            lookup_frame(spark, marks, "producer_name string, __hwm long")
-        )
-        df = (
-            df.join(marks_df, "producer_name", "left")
-            .filter(F.col("__hwm").isNull() | (F.col("sequence_id") > F.col("__hwm")))
-            .drop("__hwm")
-        )
-
-    # also dedup inside the batch itself (a retry may land in the same batch)
-    if dedup:
-        df = df.dropDuplicates(["producer_name", "sequence_id"])
-
-    # monotonic offsets: current end + dense rank of arrival within partition;
-    # arrival order = publish_time (a real log is publish-ordered — this is what
-    # makes seek-by-timestamp a prefix search, PersistentMessageFinder.java:57)
-    w = W.partitionBy("partition").orderBy("publish_time", "producer_name", "sequence_id")
-    ends_df = F.broadcast(
-        lookup_frame(spark, list(ends.items()), "partition int, __end long")
-    )
-    staged = (
-        df.join(ends_df, "partition", "left")
-        .withColumn("offset", F.row_number().over(w).cast("long") - 1 + F.coalesce("__end", F.lit(0)))
-        .drop("__end")
-        .select(*cols)
-    )
-
-    # stage files: one new segment per partition, named by start offset.
-    # persist the staged frame so the write, the per-partition stats, and the
-    # producer high-water marks share ONE computation of the routing/offset
-    # pipeline instead of three.
-    batch_id = uuid.uuid4().hex[:12]
-    stage_dir = os.path.join(topic_path, f"_staging_{batch_id}")
-    staged = staged.persist()
+    stage_id = uuid.uuid4().hex[:12]
+    stage_dir = os.path.join(topic_path, f"_staging_{stage_id}")
     try:
-        staged.write.mode("overwrite").partitionBy("partition").parquet(stage_dir)
-        stats = (
-            staged.groupBy("partition")
-            .agg(
-                F.min("offset").alias("start"),
-                F.count(F.lit(1)).alias("count"),
-                # per-segment publish-time bounds (unix micros) — the
-                # manifest-level time index seek-by-timestamp binary-searches
-                # (PersistentMessageFinder.java:57 / OpFindNewest) so a
-                # timestamp seek never scans data files
-                F.unix_micros(F.min("publish_time")).alias("min_pt"),
-                F.unix_micros(F.max("publish_time")).alias("max_pt"),
+        parts, marks = stage(manifest, ends, stage_dir)
+        for p, (count, min_pt, max_pt) in sorted(parts.items()):
+            seg_name = f"seg-{ends[p]:020d}-{count}-{stage_id}"
+            shutil.move(
+                os.path.join(stage_dir, f"partition={p}"),
+                os.path.join(topic_path, f"partition={p}", seg_name),
             )
-            .collect()
-        )
-        new_marks = {
-            r["producer_name"]: r["hwm"]
-            for r in staged.groupBy("producer_name")
-            .agg(F.max("sequence_id").alias("hwm"))
-            .collect()
-            if r["producer_name"] is not None
-        }
+            entry = {"start": int(ends[p]), "count": int(count), "path": seg_name}
+            if min_pt is not None:
+                entry["min_pt"], entry["max_pt"] = int(min_pt), int(max_pt)
+            manifest["segments"][str(p)].append(entry)
+        for prod, hwm in marks.items():
+            prev = int(manifest["producer_seq"].get(prod, -1))
+            manifest["producer_seq"][prod] = max(prev, int(hwm))
+        if batch_token is not None:
+            toks = manifest.setdefault("committed_batch_tokens", [])
+            toks.append(batch_token)
+            # bounded replay horizon: Structured Streaming replays at most
+            # the last uncommitted batch per query; 512 tokens is orders of
+            # magnitude beyond any concurrent-writer replay window
+            del toks[:-512]
+        new_ends = end_offsets(manifest)
+        manifest["next_offset"] = {str(p): int(e) for p, e in new_ends.items()}
+        _write_manifest_atomic(topic_path, manifest)  # the commit point
     finally:
-        staged.unpersist()
-
-    # move staged partition dirs into place as committed segments
-    import shutil
-
-    for row in stats:
-        p, start, count = row["partition"], row["start"], row["count"]
-        seg_name = f"seg-{start:020d}-{count}"
-        src = os.path.join(stage_dir, f"partition={p}")
-        dst = os.path.join(topic_path, f"partition={p}", seg_name)
-        shutil.move(src, dst)
-        entry = {"start": int(start), "count": int(count), "path": seg_name}
-        if row["min_pt"] is not None:
-            entry["min_pt"] = int(row["min_pt"])
-            entry["max_pt"] = int(row["max_pt"])
-        manifest["segments"][str(p)].append(entry)
-    shutil.rmtree(stage_dir, ignore_errors=True)
-
-    for prod, hwm in new_marks.items():
-        prev = int(manifest["producer_seq"].get(prod, -1))
-        manifest["producer_seq"][prod] = max(prev, int(hwm))
-
-    if batch_token is not None:
-        toks = manifest.setdefault("committed_batch_tokens", [])
-        toks.append(batch_token)
-        # bounded replay horizon: Structured Streaming replays at most the
-        # last uncommitted batch per query; 512 tokens is orders of magnitude
-        # beyond any concurrent-writer replay window
-        del toks[:-512]
-
-    new_ends = end_offsets(manifest)
-    manifest["next_offset"] = {str(p): int(e) for p, e in new_ends.items()}
-    _write_manifest_atomic(topic_path, manifest)  # the commit point
+        shutil.rmtree(stage_dir, ignore_errors=True)
     return new_ends
-
-
-def _materialize_offsets(df: DataFrame) -> DataFrame:
-    """Stream-sink segments store rows in append order WITHOUT an offset
-    column — the base offset is assigned at commit and encoded in the segment
-    file name ``seg-<start>-<count>`` (offset stamping is broker-side, not
-    producer-side: AppendIndexMetadataInterceptor). Stamp
-    ``offset = start + row position`` at read; batch-appended segments carry
-    materialized offsets which the coalesce keeps. Fully distributed — uses
-    the parquet ``_metadata.row_index`` hidden column, no driver pass."""
-    seg_start = F.when(
-        F.col("_metadata.file_name").startswith("seg-"),
-        F.element_at(F.split(F.col("_metadata.file_name"), "-"), 2).try_cast("long"),
-    )
-    return df.withColumn(
-        "offset", F.coalesce(F.col("offset"), seg_start + F.col("_metadata.row_index"))
-    )
 
 
 def read_topic(
@@ -565,25 +565,11 @@ def read_topic(
     # both tiers keep the partition=<p> hive layout so the partition column
     # materializes identically, and the two scans union (the reference's
     # transparent offloaded-ledger read path)
-    # offsets materialize per tier scan (the _metadata hidden column does
-    # not survive a Union), then the tiers union
-    tiers = []
-    if paths:
-        tiers.append(
-            _materialize_offsets(
-                spark.read.schema(ENVELOPE_SCHEMA)
-                .option("basePath", topic_path)
-                .parquet(*paths)
-            )
-        )
-    if off_paths:
-        tiers.append(
-            _materialize_offsets(
-                spark.read.schema(ENVELOPE_SCHEMA)
-                .option("basePath", manifest["offload_base"])
-                .parquet(*off_paths)
-            )
-        )
+    tiers = [
+        spark.read.schema(ENVELOPE_SCHEMA).option("basePath", base).parquet(*ps)
+        for base, ps in ((topic_path, paths), (manifest.get("offload_base"), off_paths))
+        if ps
+    ]
     df = tiers[0] if len(tiers) == 1 else tiers[0].unionByName(tiers[1])
     if not read_markers:
         df = df.filter(F.col("marker_type").isNull())
@@ -621,8 +607,6 @@ def offload_segments(
     transparent); retention trims offloaded segments from the tiered base.
     On a real object store the copytree becomes a multipart upload and the
     same manifest commit point applies."""
-    import shutil
-
     with _topic_write_lock(topic_path):
         manifest = read_manifest(topic_path)
         if manifest.get("shadow_source"):
@@ -642,10 +626,7 @@ def offload_segments(
                 dst = os.path.join(base, f"partition={p}", s["path"])
                 os.makedirs(os.path.dirname(dst), exist_ok=True)
                 if not os.path.exists(dst):  # copy, don't move — see ordering
-                    if os.path.isdir(src):
-                        shutil.copytree(src, dst)
-                    else:
-                        shutil.copy2(src, dst)
+                    shutil.copytree(src, dst)
                 s["offload_path"] = dst
                 local_copies.append(src)
                 moved += 1
@@ -661,13 +642,11 @@ def trim_retention(spark: SparkSession, topic_path: str, min_offset: dict[int, i
     """Retention trim (§2.F4, internalTrimLedgers): drop whole segments fully
     below the per-partition min retained offset. Returns #segments dropped.
     Takes the topic writer lock — trims race producer appends otherwise."""
-    import shutil
-
     with _topic_write_lock(topic_path):
-        return _trim_unlocked(topic_path, min_offset, shutil)
+        return _trim_unlocked(topic_path, min_offset)
 
 
-def _trim_unlocked(topic_path, min_offset, shutil) -> int:
+def _trim_unlocked(topic_path, min_offset) -> int:
     manifest = read_manifest(topic_path)
     # persist the high-water mark BEFORE dropping segments so offsets never
     # regress even when a partition's every segment is trimmed (§ADVICE r1)
@@ -700,8 +679,6 @@ def compact_topic(spark: SparkSession, topic_path: str, tombstone=None) -> dict[
     readCompacted=true get union(snapshot, tail > horizon) — see
     sources/pulsarlike.py. Returns the compaction horizon per partition.
     """
-    import shutil
-
     from pyspark.sql import functions as F  # local to avoid cycle at import
     from pyspark.sql.window import Window as W
 
@@ -790,13 +767,11 @@ def merge_small_segments(
     the reference's ledger roll) so appends serialize behind it.
     Returns the number of segments eliminated.
     """
-    import shutil
-
     with _topic_write_lock(topic_path):
-        return _merge_unlocked(spark, topic_path, target_rows, shutil)
+        return _merge_unlocked(spark, topic_path, target_rows)
 
 
-def _merge_unlocked(spark, topic_path, target_rows, shutil) -> int:
+def _merge_unlocked(spark, topic_path, target_rows) -> int:
     manifest = read_manifest(topic_path)
     eliminated = 0
     to_delete: list[str] = []
@@ -829,16 +804,18 @@ def _merge_unlocked(spark, topic_path, target_rows, shutil) -> int:
             start = run[0]["start"]
             count = sum(s["count"] for s in run)
             paths = [os.path.join(topic_path, f"partition={p}", s["path"]) for s in run]
-            # stamp offsets for stream-sink segments (no inline offset column);
             # drop partition before writing — segment data files never store
             # it, the partition=<p> directory supplies it at read
-            merged = _materialize_offsets(
+            merged = (
                 spark.read.schema(ENVELOPE_SCHEMA)
                 .option("basePath", topic_path)
                 .parquet(*paths)
-            ).drop("partition")
-            seg_name = f"seg-{start:020d}-{count}-merged"
-            tmp = os.path.join(topic_path, f"partition={p}", f"_merge_{uuid.uuid4().hex[:8]}")
+                .drop("partition")
+            )
+            merge_id = uuid.uuid4().hex[:12]
+            # a unique name, like every segment's (see _commit_segments)
+            seg_name = f"seg-{start:020d}-{count}-merged-{merge_id}"
+            tmp = os.path.join(topic_path, f"partition={p}", f"_merge_{merge_id}")
             # keep row order = offset order inside the merged segment
             merged.repartition(1).sortWithinPartitions("offset").write.mode(
                 "overwrite"
@@ -916,8 +893,6 @@ def txn_commit(spark: SparkSession, topic_path: str, txn_id: str) -> dict[int, i
     (idempotent under replay via batch_token=txn id), then record the
     TXN_COMMIT marker. Readers flip from seeing none of the txn's rows to
     all of them at the manifest swap — nothing in between."""
-    import shutil
-
     from pulsar_3_2_codedump_spark.envelope import MARKER_TXN_COMMIT
 
     stage = os.path.join(topic_path, f"_txn_{txn_id}")
@@ -959,8 +934,6 @@ def txn_abort(spark: SparkSession, topic_path: str, txn_id: str) -> None:
     never seen, raises (TransactionCoordinator rejects END_TXN with a
     mismatched TxnAction — TransactionMetadataStoreService checks the txn
     status before writing the end marker)."""
-    import shutil
-
     from pulsar_3_2_codedump_spark.envelope import MARKER_TXN_ABORT
 
     stage = os.path.join(topic_path, f"_txn_{txn_id}")
@@ -994,9 +967,7 @@ def topic_stats(topic_path: str) -> dict:
         size = 0
         for s in segs:
             sp = _seg_path(topic_path, p, s)
-            if os.path.isfile(sp):
-                size += os.path.getsize(sp)
-            elif os.path.isdir(sp):
+            if os.path.isdir(sp):
                 size += sum(
                     os.path.getsize(os.path.join(sp, f))
                     for f in os.listdir(sp)

@@ -91,7 +91,7 @@ def test_seek_by_timestamp_opens_only_boundary_segment(spark, tmp_root, monkeypa
             "partition", F.lit(0)
         )
         T.append(spark, df, tp, dedup=False)
-    manifest = PL._read_manifest(tp)
+    manifest = T.read_manifest(tp)
     segs = manifest["segments"]["0"]
     assert len(segs) == 3 and all("min_pt" in s for s in segs)
 

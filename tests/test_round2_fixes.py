@@ -1,7 +1,7 @@
 """Round-2 regression tests for the r1 ADVICE findings:
 
-1. stream-sink segments (no inline offset column) read through read_topic /
-   merge_small_segments / compact_topic without NULL offsets or row loss,
+1. stream-sink segments read through read_topic / merge_small_segments /
+   compact_topic without NULL offsets or row loss,
 2. readCompacted + pushed offset/partition filters applied to the snapshot,
 3. offsets never regress after a full retention trim,
 4. DLQ/retry appends survive producer-seq dedup across redelivery rounds,
@@ -43,9 +43,9 @@ def _stream_copy(spark, src_tp, dst_tp, ck, cap=None):
 
 
 def test_stream_sink_segments_survive_read_merge_compact(spark, tmp_root):
-    """r1 ADVICE high (topic.py): stream-sink segments carry no offset column;
-    read_topic must stamp offset = seg start + row position (not NULL), and
-    merge_small_segments must not silently drop their rows."""
+    """r1 ADVICE high (topic.py): stream-sink segments must read with dense,
+    non-NULL offsets, and merge_small_segments must not silently drop their
+    rows."""
     src = _make_topic(spark, tmp_root, "src")
     dst = T.create_topic(tmp_root, "copy", n_partitions=4)
     # two bounded drains → ≥2 stream-sink segments per partition

@@ -106,8 +106,9 @@ def main() -> None:
         return
 
     # bulk ingest through the JVM path (topic.append: route → offset-assign →
-    # parquet write → manifest commit). THE way 100 TB enters a topic — the
-    # Python row-at-a-time streaming sink is for live tails only (see
+    # parquet write → the shared manifest commit). THE way 100 TB enters a
+    # topic — the streaming sink reaches the same commit, but its rows pass
+    # through Python one at a time, so it is for live tails only (see
     # PulsarLikeStreamWriter docstring / SCALE.md).
     import shutil
     import tempfile
