@@ -217,7 +217,7 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the single main action the four sig consumers populate and share
     # the cache anyway (a racing partition recompute is cheaper than the
     # guaranteed extra pass — measured 1.89 s lazy vs 2.36 s eager at
-    # sf0.1, tools/exp_r16_3.py).
+    # sf0.1, OPTIMIZATION_r16.md).
     sig = sig.persist()
     _LAST_SIG = sig
     # bands via ONE explode pass over the cached signature (a 4-way union
@@ -1254,7 +1254,7 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Kept as the one-shot multi-countDistinct agg DELIBERATELY (r17): the
     # §2.4 pre-agg-by-(source, chunk) restructure (plus n_docs off the
     # documents frame) was built, proven bit-identical, and A/B-rejected —
-    # tools/exp_r17_2.py measured minima 1.539 s vs 1.353 s for this form
+    # OPTIMIZATION_r17.md records minima 1.539 s vs 1.353 s for this form
     # (the restructure lost 3 of 4 in-rep comparisons): the Arrow chunk
     # kernel, not the Expand, dominates, and the old plan's Expand rows
     # collapse in the map-side partial agg while the restructure pays two
@@ -1314,7 +1314,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # serves all three consumers from ONE shuffle at runtime, and the
     # DISK_ONLY persist replaced that free reuse with a serialize-to-disk
     # round trip — measured 1.58 s un-persisted vs 2.92 s persisted at
-    # sf0.1 (tools/exp_r16_4.py)
+    # sf0.1 (OPTIMIZATION_r16.md)
     tok = docs.select(
         "source",
         F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"),
@@ -1482,7 +1482,7 @@ def _lcp_of_tails(ta: Column, tb: Column) -> Column:
     sum-of-prefix-equality-indicators (which re-compared the whole
     prefix at every step, O(tail^2/2) ≈ 450 char compares per pair).
     Same integer by monotonicity of prefix equality — proven equal on
-    the full sf0.1 frame (tools/exp_r16_3.py: 0 differing rows) and
+    the full sf0.1 frame (OPTIMIZATION_r16.md: 0 differing rows) and
     pinned against the independent Python suffix scan in
     tests/test_functions_ml.py. The quadratic fold, not the sort, was
     the measured hot-bucket pathology (907 s for one 8M-suffix bucket,

@@ -660,7 +660,7 @@ def hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pulsar_3_2_codedump_spark.functions.similarity import dot, l2_norm
 
     docs = fanout(load(spark, sf_dir, "documents"))
-    # r16 restructure (tools/exp_r16_2.py: 3.30 s vs 7.46 s at sf0.1): the
+    # r16 restructure (OPTIMIZATION_r16.md: 3.30 s vs 7.46 s at sf0.1): the
     # word-SET of a document is a per-document property, so compute it
     # per row with array_distinct instead of a global (doc_id, word)
     # DISTINCT — the distinct Exchange disappears outright, and the

@@ -111,7 +111,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work (|q|·|corpus| pairs pay 3 folds instead of 1). The division
     # dot / (q_norm * c_norm) is the identical IEEE expression — same
     # doubles, same hash. Measured 0.34 s vs 0.73 s at sf0.1
-    # (tools/exp_r16_1.py).
+    # (OPTIMIZATION_r16.md).
     q = emb.filter(_query_pred()).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"),
         l2_norm(F.col("embedding")).alias("q_norm"),
@@ -2651,7 +2651,7 @@ def opq_rotated_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # HNSW-style beam search over the IVF graph (VERDICT r12 item 4c)
 # --------------------------------------------------------------------------
 # Search constants, tuned on the sf0.1 fixture with the plain-Python mirror
-# (tools/hnsw_proto.py, SCALE.md r14/r15): M=4/EF=8/3 hops/single-medoid
+# (SCALE.md r14/r15): M=4/EF=8/3 hops/single-medoid
 # entry walked 0.0167 recall@3 against a 0.658 nprobe-3 cell ceiling —
 # greedy ascent on a sparse NN-only digraph from ONE dense-center entry
 # stalls in local optima (the reason real HNSW adds hierarchy). M=8 +
@@ -2669,7 +2669,7 @@ HNSW_K = 3      # recall@K against brute-force truth
 HNSW_ENTRIES = 8  # evenly-spread entry points per probed cell
 
 # Long-link layer constants — VERDICT r14 items 3 + 6a, resolved by
-# measurement (tools/hnsw_proto2.py, SCALE.md r15). The hierarchy the r14
+# measurement (SCALE.md r15). The hierarchy the r14
 # verdict sketched — a second NN-descent graph over a rank-stratified
 # half-sample, entered at probed-cell medoids and descended — was built,
 # oracle-verified, and MEASURED WORSE than the flat search (0.3417 vs

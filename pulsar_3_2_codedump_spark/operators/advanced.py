@@ -36,7 +36,7 @@ from pulsar_3_2_codedump_spark.queries import query
     """,
 )
 def stats_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r17 split (tools/exp_r17_1.py; VERDICT r16 item 1): the exact
+    # r17 split (OPTIMIZATION_r17.md; VERDICT r16 item 1): the exact
     # percentile/median aggregates build a value->count OpenHashMap of BOXED
     # doubles per group inside ObjectHashAggregate — the expensive per-row
     # term — and on a single-split scan that map-building is single-threaded.
@@ -48,11 +48,11 @@ def stats_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Percentile/median are SELECTION aggregates whose merge is an exact
     # integer map-union — commutative and associative — so their result is
     # bit-identical under any partitioning (proven: byte-equal doubles at
-    # sf0.01/sf0.1, exp_r17_1); the moments aggregate keeps its exact r16
+    # sf0.01/sf0.1, OPTIMIZATION_r17.md); the moments aggregate keeps its exact r16
     # partial structure. Measured 1.102 s vs 1.641 s (per-variant minima,
     # in-rep faster 3 of 4 reps). A counts-based distributed selection
     # (groupBy(flag,value).count + cum-window + closed-form interpolation,
-    # also proven bit-exact in exp_r17_1) measured SLOWER here (1.97-2.63 s:
+    # also proven bit-exact, OPTIMIZATION_r17.md) measured SLOWER here (1.97-2.63 s:
     # extra exchanges + 6-partition window dominate at this size) and is the
     # documented 100 TB swap if the value-map form ever becomes the
     # bottleneck at real scale.

@@ -221,7 +221,7 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the three rank pipelines below all read the flat materialized frame
     # instead of nesting each other's aggregates (~4^depth plan growth)
     per = ckpt_unless_plan_only(per, cut_plan_only=True)
-    # r16 restructure (tools/exp_r16_2.py, in-rep faster 3 of 4 reps, e.g.
+    # r16 restructure (OPTIMIZATION_r16.md, in-rep faster 3 of 4 reps, e.g.
     # 1.45 s vs 2.74 s at sf0.1; shuffle Exchanges 24 -> 16 under the
     # PLANS.md counting convention): the three NTILE
     # dimensions share ONE bounds+count aggregate (each range_bucket's
@@ -261,7 +261,7 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Three per-dim bucket-count aggregates KEPT deliberately (r17, VERDICT
     # r16 item 7 follow-through): a fused single-pass form — explode
     # (dim, bucket) pairs, one groupBy — was built, proven bit-identical
-    # (tools/exp_r17_4.py, 0 differing rows), and A/B-REJECTED in the
+    # (OPTIMIZATION_r17.md, 0 differing rows), and A/B-REJECTED in the
     # bench-faithful construction+collect timing: with the fused counts
     # localCheckpointed, minima 2.669 s vs 2.476 s (2-2 in-rep split, the
     # extra eager job's barrier eats the fused pass's savings); left lazy,

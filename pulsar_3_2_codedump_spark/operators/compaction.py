@@ -57,7 +57,7 @@ def latest_per_key(env: DataFrame, key_cols=("key",)) -> DataFrame:
     per-partition indexes), so the payload fields never decide the
     comparison and the winner is identical to per-column max_by — but the
     agg buffer is a single struct instead of one (value, ordering) pair per
-    column (r16; tools/exp_r16_1.py). Frames carrying map columns (the full
+    column (r16; OPTIMIZATION_r16.md). Frames carrying map columns (the full
     envelope's ``properties``/``encryption_keys``) keep the per-column
     ``max_by(col, struct(partition, offset))`` form — callers that only
     need scalar payloads should project them out first to take the fast

@@ -143,7 +143,7 @@ def session_window_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-row session-struct projection and the partial aggregation off
     # the one-task parquet scan onto all cores (sessions barely merge
     # pre-shuffle, so map-side partials saved nothing). Measured 0.244 s vs
-    # 0.374 s at sf0.1 (tools/exp_r16_1.py); plan stays one Exchange.
+    # 0.374 s at sf0.1 (OPTIMIZATION_r16.md); plan stays one Exchange.
     ev = load(spark, sf_dir, "events").select("ts", "user_id", "value")
     n = spark.sparkContext.defaultParallelism
     return (

@@ -40,6 +40,8 @@ def get_spark(app_name: str = "pulsar_3_2_codedump_spark", cpus: int | None = No
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # workers skip re-reading Spark's own archives on every task
+        .config("spark.python.daemon.module", "pulsar_3_2_codedump_spark.worker_daemon")
         # Fixture parquet carries isAdjustedToUTC=false timestamps; read them
         # as session-TZ TIMESTAMP (session TZ is UTC) not TIMESTAMP_NTZ so
         # unix_micros/watermarks work. catalog.load also casts defensively.

@@ -55,8 +55,9 @@ def lookup_frame(spark: SparkSession, rows: list, schema: StructType | str) -> D
     metadata, an empty envelope) built from a pyarrow table, which Spark
     plans as a ``LocalRelation`` scanned in the JVM. ``createDataFrame`` of
     a Python list instead plans a ``PythonRDD``: every evaluation runs one
-    Python-worker task per slice, each with a fixed start-up cost far above
-    the cost of its few rows."""
+    Python-worker task per slice, each with a fixed cost (about 0.05 CPU-s
+    on a 4-CPU host, see ``worker_daemon``) far above the cost of its few
+    rows."""
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
     table = pa.Table.from_pylist(
@@ -652,7 +653,7 @@ def _trim_unlocked(topic_path, min_offset) -> int:
     # regress even when a partition's every segment is trimmed (§ADVICE r1)
     ends = end_offsets(manifest)
     manifest["next_offset"] = {str(p): int(e) for p, e in ends.items()}
-    dropped = 0
+    to_delete: list[str] = []
     for p, segs in manifest["segments"].items():
         keep = []
         for s in segs:
@@ -660,13 +661,14 @@ def _trim_unlocked(topic_path, min_offset) -> int:
                 # offloaded segments trim from the tiered base (retention
                 # applies across tiers, ManagedLedgerImpl.internalTrimLedgers
                 # deletes offloaded ledgers through the offloader)
-                shutil.rmtree(_seg_path(topic_path, p, s), ignore_errors=True)
-                dropped += 1
+                to_delete.append(_seg_path(topic_path, p, s))
             else:
                 keep.append(s)
         manifest["segments"][p] = keep
-    _write_manifest_atomic(topic_path, manifest)
-    return dropped
+    _write_manifest_atomic(topic_path, manifest)  # commit point, then delete
+    for path in to_delete:
+        shutil.rmtree(path, ignore_errors=True)
+    return len(to_delete)
 
 
 def compact_topic(spark: SparkSession, topic_path: str, tombstone=None) -> dict[int, int]:
@@ -692,20 +694,25 @@ def compact_topic(spark: SparkSession, topic_path: str, tombstone=None) -> dict[
     if tombstone is not None:
         latest = latest.filter(~tombstone)
 
-    snap_tmp = os.path.join(topic_path, "_compact_staging")
-    shutil.rmtree(snap_tmp, ignore_errors=True)
-    latest.write.mode("overwrite").parquet(snap_tmp)
-    snap_dir = os.path.join(topic_path, "compacted")
-    shutil.rmtree(snap_dir, ignore_errors=True)
-    os.replace(snap_tmp, snap_dir)
-
-    # re-read under the writer lock: an append that landed while the
-    # snapshot job ran must not be clobbered by our stale manifest copy
-    with _topic_write_lock(topic_path):
-        manifest = read_manifest(topic_path)
-        manifest["compaction_horizon"] = {str(p): int(e) for p, e in horizon.items()}
-        manifest["compacted_path"] = "compacted"
-        _write_manifest_atomic(topic_path, manifest)
+    # a snapshot directory of its own, recorded with its horizon in one
+    # manifest commit: a failed compaction leaves the previous view intact
+    snap_rel = f"compacted-{uuid.uuid4().hex[:12]}"
+    snap_dir = os.path.join(topic_path, snap_rel)
+    try:
+        latest.write.parquet(snap_dir)
+        # re-read under the writer lock: an append that landed while the
+        # snapshot job ran must not be clobbered by our stale manifest copy
+        with _topic_write_lock(topic_path):
+            manifest = read_manifest(topic_path)
+            prev = manifest.get("compacted_path")
+            manifest["compaction_horizon"] = {str(p): int(e) for p, e in horizon.items()}
+            manifest["compacted_path"] = snap_rel
+            _write_manifest_atomic(topic_path, manifest)  # commit point
+    except BaseException:
+        shutil.rmtree(snap_dir, ignore_errors=True)
+        raise
+    if prev:
+        shutil.rmtree(os.path.join(topic_path, prev), ignore_errors=True)
     return horizon
 
 

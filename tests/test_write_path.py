@@ -200,3 +200,47 @@ def test_every_writer_leaves_one_segment_shape(spark, tmp_root):
     assert len(via_topic) == 140
     assert positions(spark.read.format("pulsarlike").option("path", tp).load()) == via_topic
     assert positions(spark.table(name)) == via_topic
+
+
+def test_trim_retention_crash_before_manifest_replace(spark, tmp_root, monkeypatch):
+    """Trim commits the shorter segment list before it deletes a segment:
+    a failed commit leaves every listed segment readable."""
+    tp = T.create_topic(tmp_root, "trim", n_partitions=1)
+    for b in range(3):
+        T.append(spark, _frame(spark, 10 * b, 10 * b + 10), tp)
+    _fail_manifest_replace_once(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        T.trim_retention(spark, tp, {0: 20})
+    _check_log(spark, tp, 30)  # every listed segment is still there
+    assert T.trim_retention(spark, tp, {0: 20}) == 2
+    assert T.read_topic(spark, tp).count() == 10
+    assert _unlisted_segments(tp) == []
+
+
+def test_compact_topic_crash_before_manifest_replace(spark, tmp_root, monkeypatch):
+    """A compaction whose commit fails leaves the previous snapshot and
+    horizon in place: the compacted view is the one before the call."""
+    tp = T.create_topic(tmp_root, "compact", n_partitions=2)
+    T.append(spark, _frame(spark, 0, 30), tp)
+    T.compact_topic(spark, tp)
+    T.append(spark, _frame(spark, 30, 50), tp)
+
+    def view():
+        rows = T.read_topic_compacted(spark, tp).select("partition", "offset", "key").collect()
+        assert len({(r.partition, r.offset) for r in rows}) == len(rows)
+        return sorted(rows)
+
+    before = view()
+    _fail_manifest_replace_once(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        T.compact_topic(spark, tp)
+    assert view() == before
+    snaps = [f for f in os.listdir(tp) if f.startswith("compacted")]
+    assert snaps == [T.read_manifest(tp)["compacted_path"]]  # no orphan snapshot
+
+    T.compact_topic(spark, tp)
+    after = view()
+    assert len(after) == 7  # one row per key, every key ≤ the new horizon
+    assert [f for f in os.listdir(tp) if f.startswith("compacted")] == [
+        T.read_manifest(tp)["compacted_path"]
+    ]

@@ -395,7 +395,7 @@ def main() -> None:
         "(bounded: n x (M + LL_K) id pairs / #queries x EF), so the visible",
         "plan is the final recall assembly over materialized frames — the ring",
         "build topology is in the operator docstring and SCALE.md r15, with a",
-        "measured 1M-vector series (tools/nsw_ring_probe.py). The two",
+        "measured 1M-vector series (SCALE.md r15). The two",
         "streaming additions replay real topics inside their callables like",
         "the other streaming monitors: streaming_ann_serving's emitted plan is",
         "the final top-5-per-query read over both checkpointed generations",

@@ -93,7 +93,7 @@ BENIGN_MULTISCAN: dict[str, str] = {
     "the size agg and both join sides from ONE shuffle at runtime (the "
     "static plan prints 4 scans; the executed plan runs one) — the prior "
     "DISK_ONLY persist REGRESSED the query 2.92 s vs 1.58 s at sf0.1 by "
-    "replacing that free reuse with a disk round trip (tools/exp_r16_4.py, "
+    "replacing that free reuse with a disk round trip (OPTIMIZATION_r16.md, "
     "the same trade hybrid_rrf_fusion measured in r13)",
     "count_min_heavy_hitters": "measurement: sketch estimate leg vs exact "
     "truth leg — the comparison is the query",
