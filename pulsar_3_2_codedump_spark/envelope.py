@@ -172,7 +172,7 @@ def conform_envelope(df: DataFrame) -> DataFrame:
     External sources routinely hand us near-miss types — a DATE or
     TIMESTAMP_NTZ mapped into ``publish_time`` by ``io.ingest_external``, an
     INT sequence id from a CSV — and downstream code (the manifest time
-    index's ``unix_micros``, the Arrow stream writer) assumes the declared
+    index's publish-time bounds, the Arrow stream writer) assumes the declared
     types. The broker performs the same normalization when it stamps
     MessageMetadata on the wire (PulsarApi.proto:106-166): whatever the
     client supplied, the at-rest form is canonical. Applied once at the

@@ -47,34 +47,19 @@ def query(name: str, oracle: str | None = None, section: str = "", doc: str = ""
 
 
 # The correctness harness verifies queries in registry order with a bounded
-# budget (50 per round). Round-9 rotation (VERDICT r8 directive #1: reach
-# 257/257-hashed parity): the window holds (a) the 47 registered queries
-# that have never had a driver hash — the whole r8 late-session backlog,
-# locally oracle-verified at both SFs, (b) the single new r9 operator
-# (streaming CUSUM alarm, VERDICT r8 directive #7 — growth otherwise
-# frozen), and (c) 2 freshness re-hashes of the oldest green rows.
+# budget (50 per round), so this list orders them.
 #
-# FRESHNESS RE-HASH POLICY (applies from r10 on, once every registered
-# query has at least one green driver row): compose each round's window as
+# FRESHNESS RE-HASH POLICY (once every registered query has at least one
+# green driver row): compose each round's window as
 #   1. every query whose CODE CHANGED since its last green driver hash
 #   2. every NEW registration (keep additions ≤ the spare slot count)
 #   3. fill remaining slots with the queries whose last green driver hash
 #      is OLDEST (round number ascending; ties in prior PRIORITY_ORDER
 #      order) — i.e. rotate oldest-green-first so hashes never go more
 #      than ~4 rounds stale against fixture regenerations.
-# The window is ALWAYS the first 50 entries of this list; the boundary
-# comment below marks it. Never leave a changed query below the boundary.
-# r15 window (tools/rotate_window.py --changed
-# hnsw_beam_search_recall,nn_descent_graph_convergence): the 2
-# code-changed queries (HNSW_EF 16->64 — the measured efSearch lift —
-# changes the flat query's plan AND its oracle; the NN-descent CTE
-# renames touch the convergence oracle's text), the 3 NEW r15
-# registrations (nsw_long_link_search_recall, streaming_ann_serving,
-# streaming_minhash_signature_ivm), then 45 freshness re-hashes
-# oldest-green-first — the ENTIRE r7/r8 stale cohort VERDICT r14 item 2
-# named (topic_storage_stats at r7 + the 35 r8 rows) fits with 9 slots
-# to spare, which take the next-oldest greens; after this round the
-# oldest green row advances to r9.
+# ``tools/rotate_window.py`` composes it. The window is ALWAYS the first 50
+# entries of this list; the boundary comment below marks it. Never leave a
+# changed query below the boundary.
 PRIORITY_ORDER = [
     "hnsw_beam_search_recall",
     "nn_descent_graph_convergence",

@@ -432,7 +432,9 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
 
     def _persist_cursor(self, kind: str, pos: dict) -> None:
         """Max-merge ``pos`` into the named cursor — positions never regress
-        (a replayed/restarted batch must not rewind the durable cursor)."""
+        (a replayed/restarted batch must not rewind the durable cursor).
+        An unchanged position is not rewritten: Spark polls
+        ``latestOffset`` after every empty trigger."""
         f = self._cursor_file()
         if not f:
             return
@@ -441,11 +443,12 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
         if os.path.exists(f):
             with open(f) as fh:
                 state = json.load(fh)
-        cur = state.get(kind) or {}
-        state[kind] = {
-            p: max(int(pos.get(p, 0)), int(cur.get(p, 0)))
-            for p in set(map(str, pos)) | set(map(str, cur))
-        }
+        cur = {str(p): int(o) for p, o in (state.get(kind) or {}).items()}
+        pos = {str(p): int(o) for p, o in pos.items()}
+        merged = {p: max(pos.get(p, 0), cur.get(p, 0)) for p in pos.keys() | cur.keys()}
+        if kind in state and merged == cur:
+            return
+        state[kind] = merged
         T._write_json_atomic(f, state)
 
     def latestOffset(self) -> dict:

@@ -40,6 +40,8 @@ import shutil
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType
@@ -51,9 +53,9 @@ MANIFEST = "manifest.json"
 
 
 def lookup_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
-    """A small driver-side frame (dedup marks, offset bounds, cursor
-    metadata, an empty envelope) built from a pyarrow table, which Spark
-    plans as a ``LocalRelation`` scanned in the JVM. ``createDataFrame`` of
+    """A small driver-side frame (offset bounds, cursor metadata, an empty
+    envelope) built from a pyarrow table, which Spark plans as a
+    ``LocalRelation`` scanned in the JVM. ``createDataFrame`` of
     a Python list instead plans a ``PythonRDD``: every evaluation runs one
     Python-worker task per slice, each with a fixed cost (about 0.05 CPU-s
     on a 4-CPU host, see ``worker_daemon``) far above the cost of its few
@@ -380,6 +382,12 @@ def _append_unlocked(
     the partition ends → stage, then ``_commit_segments``. Returns new end
     offsets.
 
+    One plan, one action: the producer marks and the partition ends, read
+    under the writer lock, enter the plan as map literals (no join, no
+    broadcast); the plan dedups topic-wide, numbers rows per partition and
+    writes the staged files; the commit's counts, publish-time bounds and
+    producer marks are read back from those files (``_staged_stats``).
+
     ``df`` must carry the envelope columns except offset (which is assigned
     here); ``partition`` may be pre-set or is derived from the key hash.
 
@@ -398,8 +406,7 @@ def _append_unlocked(
         n_part = manifest["n_partitions"]
         # external sources can hand near-miss types (TIMESTAMP_NTZ
         # publish_time from a mapped date column, int sequence ids);
-        # canonicalize before any arithmetic — unix_micros below requires
-        # true TIMESTAMP
+        # canonicalize before any arithmetic
         rows = conform_envelope(df)
         route = F.pmod(F.xxhash64(F.col("key")), F.lit(n_part)).cast("int")
         if "partition" not in rows.columns:
@@ -414,15 +421,9 @@ def _append_unlocked(
                 F.when(F.col("partition").between(0, n_part - 1), F.col("partition")).otherwise(route),
             )
         if dedup and manifest["producer_seq"]:
-            marks = [(p, int(s)) for p, s in manifest["producer_seq"].items()]
-            marks_df = F.broadcast(
-                lookup_frame(spark, marks, "producer_name string, __hwm long")
-            )
-            rows = (
-                rows.join(marks_df, "producer_name", "left")
-                .filter(F.col("__hwm").isNull() | (F.col("sequence_id") > F.col("__hwm")))
-                .drop("__hwm")
-            )
+            # a row with no mark (or no producer) passes
+            hwm = _map_lookup(manifest["producer_seq"], "string", "producer_name")
+            rows = rows.filter(hwm.isNull() | (F.col("sequence_id") > hwm))
         # also dedup inside the batch itself (a retry may land in the same batch)
         if dedup:
             rows = rows.dropDuplicates(["producer_name", "sequence_id"])
@@ -432,41 +433,64 @@ def _append_unlocked(
         # publish-ordered — this is what makes seek-by-timestamp a prefix
         # search, PersistentMessageFinder.java:57)
         w = W.partitionBy("partition").orderBy("publish_time", "producer_name", "sequence_id")
-        ends_df = F.broadcast(
-            lookup_frame(spark, list(ends.items()), "partition int, __end long")
-        )
-        staged = (
-            rows.join(ends_df, "partition", "left")
-            .withColumn("offset", F.row_number().over(w).cast("long") - 1 + F.coalesce("__end", F.lit(0)))
-            .drop("__end")
-            .select(*[f.name for f in ENVELOPE_SCHEMA.fields])
-        )
-        # persist so the write, the per-partition stats and the producer
-        # high-water marks share ONE computation of the pipeline
-        staged = staged.persist()
-        try:
-            staged.write.mode("overwrite").partitionBy("partition").parquet(stage_dir)
-            stats = (
-                staged.groupBy("partition")
-                .agg(
-                    F.count(F.lit(1)).alias("count"),
-                    F.unix_micros(F.min("publish_time")).alias("min_pt"),
-                    F.unix_micros(F.max("publish_time")).alias("max_pt"),
-                )
-                .collect()
-            )
-            new_marks = {
-                r["producer_name"]: r["hwm"]
-                for r in staged.groupBy("producer_name")
-                .agg(F.max("sequence_id").alias("hwm"))
-                .collect()
-                if r["producer_name"] is not None
-            }
-        finally:
-            staged.unpersist()
-        return {r["partition"]: (r["count"], r["min_pt"], r["max_pt"]) for r in stats}, new_marks
+        end = F.coalesce(_map_lookup(ends, "int", "partition"), F.lit(0).cast("long"))
+        staged = rows.withColumn(
+            "offset", F.row_number().over(w).cast("long") - 1 + end
+        ).select(*[f.name for f in ENVELOPE_SCHEMA.fields])
+        # the write is the plan's one action; the commit's stats come from
+        # the files it left
+        staged.write.mode("overwrite").partitionBy("partition").parquet(stage_dir)
+        return _staged_stats(stage_dir)
 
     return _commit_segments(topic_path, stage, batch_token)
+
+
+def _map_lookup(mapping: dict, key_type: str, key_col: str):
+    """``mapping[key_col]`` as a column, NULL for a key not in the
+    (non-empty) ``mapping`` or a NULL key. The map is a literal, so the
+    lookup costs no join and no broadcast, whatever its size."""
+    keys, vals = zip(*mapping.items())
+    m = F.map_from_arrays(
+        F.lit(list(keys)).cast(f"array<{key_type}>"),
+        F.lit([int(v) for v in vals]).cast("array<bigint>"),
+    )
+    return F.element_at(m, F.col(key_col))
+
+
+def _staged_stats(stage_dir: str):
+    """What ``_commit_segments`` needs of a staged batch, read back from
+    its files (three columns, no Spark job): ``{p: (count, min_pt,
+    max_pt)}`` with publish-time bounds in unix micros (None when every
+    ``publish_time`` is null), and ``{producer_name: max sequence_id}``
+    without the null producer."""
+    parts, tables = {}, []
+    for name in sorted(os.listdir(stage_dir)):
+        if not name.startswith("partition="):
+            continue
+        t = pq.read_table(
+            os.path.join(stage_dir, name),
+            columns=["publish_time", "producer_name", "sequence_id"],
+        )
+        pt = t.column("publish_time").cast(pa.timestamp("us")).cast(pa.int64())
+        bounds = pc.min_max(pt)
+        parts[int(name.split("=", 1)[1])] = (
+            t.num_rows, bounds["min"].as_py(), bounds["max"].as_py()
+        )
+        tables.append(t.select(["producer_name", "sequence_id"]))
+    marks = {}
+    if tables:
+        hwm = pa.concat_tables(tables).group_by("producer_name").aggregate(
+            [("sequence_id", "max")]
+        )
+        marks = {
+            prod: seq
+            for prod, seq in zip(
+                hwm.column("producer_name").to_pylist(),
+                hwm.column("sequence_id_max").to_pylist(),
+            )
+            if prod is not None and seq is not None
+        }
+    return parts, marks
 
 
 def _commit_segments(topic_path: str, stage, batch_token: str | None = None) -> dict[int, int]:

@@ -199,3 +199,42 @@ def test_per_key_order_preserved_through_stream_copy(spark, tmp_root):
     assert set(src_seqs) == set(dst_seqs)
     for k in src_seqs:
         assert src_seqs[k] == dst_seqs[k], f"per-key order broken for key {k}"
+
+
+def test_named_cursor_not_rewritten_when_unchanged(spark, tmp_root):
+    """Spark polls ``latestOffset`` after every empty trigger: a named
+    subscription's cursor file is written only when its position moves."""
+    import datetime as dt
+    import os
+    import time
+
+    from pulsar_3_2_codedump_spark.sources.pulsarlike import PulsarLikeStreamReader
+
+    schema = (
+        "key string, value binary, publish_time timestamp, "
+        "producer_name string, sequence_id long"
+    )
+
+    def batch(lo, hi):
+        t0 = dt.datetime(2024, 5, 1)
+        return spark.createDataFrame(
+            [(str(i % 5), b"v", t0 + dt.timedelta(seconds=i), "p", i) for i in range(lo, hi)],
+            schema,
+        )
+
+    tp = T.create_topic(tmp_root, "idle", n_partitions=2)
+    T.append(spark, batch(0, 20), tp)
+    reader = PulsarLikeStreamReader({"path": tp, "subscription": "sub/a"})
+    cursor = reader._cursor_file()
+    first = reader.latestOffset()
+    st = os.stat(cursor)
+    time.sleep(0.05)
+    assert reader.latestOffset() == first
+    again = os.stat(cursor)
+    assert (again.st_mtime_ns, again.st_ino) == (st.st_mtime_ns, st.st_ino)
+
+    T.append(spark, batch(20, 50), tp)
+    ends = reader.latestOffset()
+    assert sum(ends.values()) == 50
+    with open(cursor) as f:
+        assert json.load(f)["read"] == {p: int(e) for p, e in ends.items()}

@@ -3,7 +3,9 @@ sink and the batch writer all commit through ``topic._commit_segments``,
 and every segment they leave is a directory of parquet files that store
 ``offset``. Faults are injected at the commit point: a commit that dies
 after moving its segments but before the manifest replace must leave no
-visible rows, and its retry must land each row exactly once."""
+visible rows, and its retry must land each row exactly once. ``append``
+itself is one plan with one action, its dedup holds against the producer
+marks, and two processes appending at once leave a dense log."""
 
 import datetime as dt
 import os
@@ -244,3 +246,180 @@ def test_compact_topic_crash_before_manifest_replace(spark, tmp_root, monkeypatc
     assert [f for f in os.listdir(tp) if f.startswith("compacted")] == [
         T.read_manifest(tp)["compacted_path"]
     ]
+
+
+def _null_pt_frame(spark, lo, hi, producer="p"):
+    return spark.createDataFrame(
+        [(k, v, pr, None, None, prod, seq, dl, mt, rf)
+         for k, v, pr, _, _, prod, seq, dl, mt, rf in _tuples(lo, hi, producer)],
+        _SCHEMA,
+    )
+
+
+def test_append_runs_one_plan_without_persist(spark, tmp_root, monkeypatch):
+    """With producer marks on the topic, an append is one plan with one
+    action: the dedup shuffle, the numbering shuffle and the write, no
+    cached relation and no stats jobs."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    tp = T.create_topic(tmp_root, "plan", n_partitions=3)
+    T.append(spark, _frame(spark, 0, 40, "a"), tp)
+    T.append(spark, _frame(spark, 0, 40, "b"), tp)
+    assert set(T.read_manifest(tp)["producer_seq"]) == {"a", "b"}
+
+    plans = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().optimizedPlan().toString())
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    batch = _frame(spark, 30, 80, "a").unionByName(_frame(spark, 35, 60, "b"))
+    sc = spark.sparkContext
+    group = f"append-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "topic.append")
+    try:
+        T.append(spark, batch, tp)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert len(plans) == 1 and "InMemoryRelation" not in plans[0]
+    rows = T.read_topic(spark, tp).select("producer_name", "sequence_id").collect()
+    assert sorted((r.producer_name, r.sequence_id) for r in rows) == sorted(
+        [("a", i) for i in range(80)] + [("b", i) for i in range(60)]
+    )
+
+
+def test_append_with_null_publish_times(spark, tmp_root):
+    """Segments of rows that all lack a publish time carry no time bounds,
+    and a timestamp seek over the topic still lands on real offsets."""
+    tp = T.create_topic(tmp_root, "nullpt", n_partitions=2)
+    T.append(spark, _frame(spark, 0, 40), tp)
+    T.append(spark, _null_pt_frame(spark, 40, 70), tp)
+    m = T.read_manifest(tp)
+    first, second = (
+        [s for segs in m["segments"].values() for s in segs if (s["start"] == 0) == is_first]
+        for is_first in (True, False)
+    )
+    assert first and all("min_pt" in s and "max_pt" in s for s in first)
+    assert second and all("min_pt" not in s and "max_pt" not in s for s in second)
+    _check_log(spark, tp, 70)
+
+    ends = T.end_offsets(m)
+    pts = T.read_topic(spark, tp).select("partition", "offset", "publish_time").collect()
+    for ts in (_BASE + dt.timedelta(seconds=20), _BASE + dt.timedelta(days=1)):
+        start = PL.PulsarLikeStreamReader(
+            {"path": tp, "startingoffsets": f"timestamp:{ts.isoformat()}+00:00"}
+        ).initialOffset()
+        for p, e in ends.items():
+            want = min(
+                (r.offset for r in pts
+                 if r.partition == p and r.publish_time is not None and r.publish_time >= ts),
+                default=e,
+            )
+            assert start[str(p)] == want
+
+
+def test_append_resend_lands_only_new_sequence_ids(spark, tmp_root):
+    """A resend that overlaps the producer mark lands only the sequence ids
+    above it; rows with no producer name pass dedup and set no mark."""
+    tp = T.create_topic(tmp_root, "resend", n_partitions=2)
+    T.append(spark, _frame(spark, 0, 50), tp)
+    T.append(spark, _frame(spark, 30, 90).unionByName(_frame(spark, 0, 5, None)), tp)
+    rows = T.read_topic(spark, tp).select("producer_name", "sequence_id").collect()
+    assert sorted((r.producer_name or "", r.sequence_id) for r in rows) == sorted(
+        [("p", i) for i in range(90)] + [("", i) for i in range(5)]
+    )
+    assert T.read_manifest(tp)["producer_seq"] == {"p": 89}
+    _check_log(spark, tp, 95)
+
+
+_CHILD = r"""
+import ast, datetime as dt, sys
+from pulsar_3_2_codedump_spark.session import get_spark
+from pulsar_3_2_codedump_spark import topic as T
+
+tp, ready = sys.argv[1], sys.argv[2]
+spark = get_spark("concurrent-append")
+schema, batches = sys.argv[3], ast.literal_eval(sys.argv[4])
+base = dt.datetime(2024, 5, 1)
+frames = [
+    spark.createDataFrame(
+        [(str(i % 7), b"v", None, base, base + dt.timedelta(seconds=i), prod, i, None, None, None)
+         for prod, lo, hi in batch for i in range(lo, hi)],
+        schema,
+    )
+    for batch in batches
+]
+open(ready, "w").close()
+for f in frames:
+    T.append(spark, f, tp, dedup=True)
+spark.stop()
+"""
+
+
+def _batches(producers, n=4, size=40, resend=10):
+    """Each batch resends the last ``resend`` ids of the one before."""
+    return [
+        [(prod, max(0, k * size - resend), (k + 1) * size) for prod in producers]
+        for k in range(n)
+    ]
+
+
+def test_two_processes_append_concurrently(spark, tmp_root):
+    """Two drivers, each with its own Spark session, append overlapping
+    resends to one topic at the same time; the writer lock serialises the
+    commits."""
+    import subprocess
+    import sys
+    import time
+
+    tp = T.create_topic(tmp_root, "shared", n_partitions=3)
+    ready = os.path.join(tmp_root, "child.ready")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child_batches = _batches(["c0", "c1"])
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        SPARK_GRAFT_CPUS="2",
+        PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])),
+    )
+    child = subprocess.Popen(
+        [sys.executable, "-c", _CHILD, tp, ready, _SCHEMA, repr(child_batches)],
+        cwd=root, env=env, stdout=subprocess.DEVNULL, stderr=subprocess.PIPE, text=True,
+    )
+    try:
+        own_batches = _batches(["m0", "m1"])
+        frames = [
+            spark.createDataFrame(
+                [t for prod, lo, hi in batch for t in _tuples(lo, hi, prod)], _SCHEMA
+            )
+            for batch in own_batches
+        ]
+        deadline = time.monotonic() + 300
+        while not os.path.exists(ready):
+            assert child.poll() is None, child.stderr.read()[-3000:]
+            assert time.monotonic() < deadline, "child session did not start"
+            time.sleep(0.2)
+        for f in frames:
+            T.append(spark, f, tp, dedup=True)
+        _, err = child.communicate(timeout=300)
+        assert child.returncode == 0, err[-3000:]
+    finally:
+        if child.poll() is None:
+            child.kill()
+            child.wait()
+
+    sent = {
+        (prod, i)
+        for batch in child_batches + own_batches
+        for prod, lo, hi in batch
+        for i in range(lo, hi)
+    }
+    _check_log(spark, tp, len(sent))
+    rows = T.read_topic(spark, tp).select("producer_name", "sequence_id").collect()
+    assert {(r.producer_name, r.sequence_id) for r in rows} == sent
+    assert T.read_manifest(tp)["producer_seq"] == {
+        prod: max(i for q, i in sent if q == prod) for prod in ("c0", "c1", "m0", "m1")
+    }
