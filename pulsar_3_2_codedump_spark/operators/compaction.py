@@ -47,20 +47,21 @@ def latest_per_key(env: DataFrame, key_cols=("key",)) -> DataFrame:
     """TableView / compaction phase-1: keep the highest-(partition, offset)
     row per key.
 
-    Plan choice: a partial+final aggregation (map-side combine shrinks each
-    partition to its distinct keys before the shuffle) — ~2× faster than the
-    row_number-window form at 10M rows (tools/scale_smoke.py) and the right
-    100 TB plan: the shuffle carries only one row per (map partition × key),
-    not the whole log. When every payload column is ORDERABLE the aggregate
-    is ONE lexicographic ``max(struct(partition, offset, payload...))``:
+    Plan choice: when every payload column is ORDERABLE, a partial+final
+    aggregation of ONE lexicographic ``max(struct(partition, offset,
+    payload...))`` (r16; OPTIMIZATION_r16.md). The map-side combine shrinks
+    each partition to its distinct keys before the shuffle, so the shuffle
+    carries one row per (map partition × key), not the whole log.
     (partition, offset) is unique within a key group (offsets are dense
     per-partition indexes), so the payload fields never decide the
-    comparison and the winner is identical to per-column max_by — but the
-    agg buffer is a single struct instead of one (value, ordering) pair per
-    column (r16; OPTIMIZATION_r16.md). Frames carrying map columns (the full
-    envelope's ``properties``/``encryption_keys``) keep the per-column
-    ``max_by(col, struct(partition, offset))`` form — callers that only
-    need scalar payloads should project them out first to take the fast
+    comparison. Frames carrying map columns (the full envelope's
+    ``properties``/``encryption_keys``) cannot enter a struct max; they take
+    the ``row_number`` window over (partition, offset) desc, one shuffle on
+    the key plus a sort. Per-column ``max_by`` over maps plans two
+    ``SortAggregate``s and is slower: on the full envelope at sf0.01
+    (150 keys, same rows), 4 CPUs, a ``noop`` write took 0.34 s against the
+    window's 0.23 s, median of 8 alternating reps. Callers that need only
+    scalar payloads should project them first to take the aggregation
     path."""
     key_cols = list(key_cols)
     others = [c for c in env.columns if c not in key_cols]
@@ -77,14 +78,6 @@ def latest_per_key(env: DataFrame, key_cols=("key",)) -> DataFrame:
         return agg.select(
             *key_cols, *[F.col(f"__s.{c}").alias(c) for c in others]
         ).select(*env.columns)
-    rank = F.struct("partition", "offset")
-    return env.groupBy(*key_cols).agg(*[F.max_by(c, rank).alias(c) for c in others]).select(
-        *env.columns
-    )
-
-
-def latest_per_key_window(env: DataFrame, key_cols=("key",)) -> DataFrame:
-    """Window-based alternative (kept for frames that need the full ranking)."""
     w = W.partitionBy(*key_cols).orderBy(F.desc("partition"), F.desc("offset"))
     return env.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 

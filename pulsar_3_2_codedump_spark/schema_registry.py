@@ -24,9 +24,10 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from pulsar_3_2_codedump_spark.topic import _write_json_atomic
 
 SCHEMAS_FILE = "schemas.json"
 
@@ -44,11 +45,7 @@ def _load_log(topic_path: str) -> list[dict]:
 
 
 def _store_log(topic_path: str, log: list[dict]) -> None:
-    p = os.path.join(topic_path, SCHEMAS_FILE)
-    tmp = p + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(log, f, indent=1)
-    os.replace(tmp, p)
+    _write_json_atomic(os.path.join(topic_path, SCHEMAS_FILE), log)
 
 
 def _can_read(reader: T.StructType, writer: T.StructType) -> bool:

@@ -75,7 +75,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from pulsar_3_2_codedump_spark import topic as T
+from pulsar_3_2_codedump_spark import subscriptions as S, topic as T
 from pulsar_3_2_codedump_spark.envelope import ENVELOPE_SCHEMA
 from pulsar_3_2_codedump_spark.hashing import route_partition
 
@@ -376,7 +376,18 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
     initialOffset honors startingOffsets = earliest | latest |
     timestamp:<iso> | {"0": 123, ...}; latestOffset caps per-partition
     advance at maxRecordsPerTrigger (flow control, §2.J2).
+
+    Option ``subscription`` names a durable cursor under the topic
+    (``subscriptions.subscription_cursor_path``), the broker-side
+    subscription state of the reference (PersistentSubscription +
+    ManagedCursorImpl:131): ``latestOffset`` advances its read position and
+    ``commit`` acks cumulatively.
     """
+
+    def __init__(self, options):
+        super().__init__(options)
+        sub = options.get("subscription")
+        self._cursor = S.subscription_cursor_path(self.path, sub) if sub else None
 
     def initialOffset(self) -> dict:
         manifest = self._manifest()
@@ -398,59 +409,6 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
             }
         return {str(k): int(v) for k, v in json.loads(mode).items()}
 
-    def _cursor_file(self) -> str | None:
-        """Named durable cursor under the topic dir (option 'subscription') —
-        the broker-side subscription state of the reference
-        (PersistentSubscription + ManagedCursorImpl:131). The JSON holds both
-        cursor positions a managed cursor tracks: ``read`` (readPosition —
-        next entry to fetch, advanced when a micro-batch is planned) and
-        ``ack`` (markDeletePosition — cumulative ack, advanced by commit()).
-        Needed for flow control across query restarts: the Python DataSource
-        latestOffset() never sees the checkpoint-restored start, so a capped
-        reader must recover its own position from somewhere durable. The
-        read position is persisted at planning time because under
-        Trigger.AvailableNow a run executes one batch and stops before the
-        lazy source-commit (which Spark issues at the NEXT batch's
-        construction) ever fires."""
-        sub = self.options.get("subscription")
-        if not sub:
-            return None
-        import re as _re
-
-        safe = _re.sub(r"[^A-Za-z0-9._-]", "_", sub)
-        return os.path.join(self.path, "_subscriptions", safe + ".json")
-
-    def _durable_cursor(self, kind: str = "read") -> dict | None:
-        f = self._cursor_file()
-        if f and os.path.exists(f):
-            with open(f) as fh:
-                state = json.load(fh)
-            pos = state.get(kind)
-            if pos is not None:
-                return {str(k): int(v) for k, v in pos.items()}
-        return None
-
-    def _persist_cursor(self, kind: str, pos: dict) -> None:
-        """Max-merge ``pos`` into the named cursor — positions never regress
-        (a replayed/restarted batch must not rewind the durable cursor).
-        An unchanged position is not rewritten: Spark polls
-        ``latestOffset`` after every empty trigger."""
-        f = self._cursor_file()
-        if not f:
-            return
-        os.makedirs(os.path.dirname(f), exist_ok=True)
-        state: dict = {}
-        if os.path.exists(f):
-            with open(f) as fh:
-                state = json.load(fh)
-        cur = {str(p): int(o) for p, o in (state.get(kind) or {}).items()}
-        pos = {str(p): int(o) for p, o in pos.items()}
-        merged = {p: max(pos.get(p, 0), cur.get(p, 0)) for p in pos.keys() | cur.keys()}
-        if kind in state and merged == cur:
-            return
-        state[kind] = merged
-        T._write_json_atomic(f, state)
-
     def latestOffset(self) -> dict:
         manifest = self._manifest()
         ends = _ends(manifest)
@@ -459,12 +417,13 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
             cap = int(max_rec)
             cur = (
                 getattr(self, "_last_end", None)
-                or self._durable_cursor("read")
+                or (self._cursor and S.read_position(self._cursor))
                 or self.initialOffset()
             )
             ends = {p: min(e, cur.get(p, 0) + cap) for p, e in ends.items()}
         self._last_end = ends
-        self._persist_cursor("read", ends)
+        if self._cursor:
+            S.advance_read(self._cursor, ends)
         return ends
 
     def partitions(self, start: dict, end: dict):
@@ -473,11 +432,17 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
 
     def commit(self, end: dict) -> None:
         # cumulative ack: Spark's checkpoint is the consumer-side state; a
-        # named subscription ALSO moves the broker-side markDeletePosition.
+        # named subscription ALSO moves the broker-side markDeletePosition,
+        # closing any individually acked hole it reaches.
         # NOTE Spark issues this lazily when constructing the NEXT batch, so
         # under availableNow single-batch runs it may never fire — the read
-        # position persisted in latestOffset() carries restart flow control.
-        self._persist_cursor("ack", {str(k): int(v) for k, v in end.items()})
+        # position stored by latestOffset() carries restart flow control.
+        if not self._cursor:
+            return
+        state = S.load_ack_state(self._cursor)
+        for p, e in end.items():
+            S.ack_cumulative(state, int(p), int(e) - 1)
+        S.save_ack_state(state, self._cursor)
 
 
 @dataclass

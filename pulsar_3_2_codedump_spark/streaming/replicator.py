@@ -177,8 +177,9 @@ def windowed_with_late_side_output(
 
     def _store_wm(ts) -> None:
         _os.makedirs(checkpoint, exist_ok=True)
-        with open(wm_file, "w") as f:
-            _json.dump({"max_ts": ts.isoformat()}, f)
+        # atomic: a torn file would read as no watermark, and late rows
+        # would count as on time
+        T._write_json_atomic(wm_file, {"max_ts": ts.isoformat()})
 
     def split_batch(batch: DataFrame, batch_id: int) -> None:
         sess = batch.sparkSession

@@ -23,6 +23,10 @@ Spark re-expression: a "consumer" is a streaming query with a checkpoint.
 
 from __future__ import annotations
 
+import json
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pulsar_3_2_codedump_spark import topic as T
@@ -145,26 +149,6 @@ def ack_cumulative(state: dict, partition: int, offset: int) -> dict:
     return state
 
 
-def save_ack_state(state: dict, path: str) -> None:
-    import json
-    import os
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({str(k): v for k, v in state.items()}, f)
-    os.replace(tmp, path)  # atomic, like the cursor's metadata-store write
-
-
-def load_ack_state(path: str) -> dict:
-    import json
-    import os
-
-    if not os.path.exists(path):
-        return new_ack_state()
-    with open(path) as f:
-        return {int(k): v for k, v in json.load(f).items()}
-
-
 def unacked(spark: SparkSession, env: DataFrame, state: dict) -> DataFrame:
     """The redelivery set: log rows not covered by the cursor.
 
@@ -259,8 +243,6 @@ def drain_available_now(
     of rounds run. ``start_query`` must start and return a
     StreamingQuery wired to trigger(availableNow=True) and
     ``checkpoint_dir``."""
-    from pulsar_3_2_codedump_spark import topic as T
-
     for rounds in range(1, max_rounds + 1):
         q = start_query()
         q.awaitTermination()
@@ -274,9 +256,6 @@ def drain_available_now(
 def subscription_position(checkpoint_dir: str) -> dict[str, int] | None:
     """Inspect a subscription's committed cursor (markDeletePosition analogue)
     from the Structured Streaming offset log."""
-    import json
-    import os
-
     offsets_dir = os.path.join(checkpoint_dir, "offsets")
     if not os.path.isdir(offsets_dir):
         return None
@@ -308,29 +287,18 @@ def write_repl_snapshot(
     positions (here: both end-offset maps) at issue time. The marker holds a
     log position like any entry but is invisible to consumers (§2.C3).
     Returns the correlated positions it recorded."""
-    import datetime as _dt
-    import json as _json
-
-    from pulsar_3_2_codedump_spark import topic as T
     from pulsar_3_2_codedump_spark.envelope import MARKER_REPL_SNAPSHOT
 
     src_ends = {str(p): int(e) for p, e in T.end_offsets(T.read_manifest(src_topic_path)).items()}
     dst_ends = {str(p): int(e) for p, e in T.end_offsets(T.read_manifest(dst_topic_path)).items()}
     payload = {"snapshot_id": snapshot_id, "src": src_ends, "dst": dst_ends}
-    marker = spark.createDataFrame(
-        [(
-            f"__snapshot:{snapshot_id}",
-            _json.dumps(payload).encode("utf-8"),
-            {"snapshot_id": snapshot_id},
-            _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-            "__repl_snapshot_controller",
-            0,
-            MARKER_REPL_SNAPSHOT,
-            0,
-        )],
-        "key string, value binary, properties map<string,string>, "
-        "publish_time timestamp, producer_name string, sequence_id long, "
-        "marker_type int, partition int",
+    marker = T.marker_frame(
+        spark,
+        f"__snapshot:{snapshot_id}",
+        json.dumps(payload).encode("utf-8"),
+        {"snapshot_id": snapshot_id},
+        "__repl_snapshot_controller",
+        MARKER_REPL_SNAPSHOT,
     )
     T.append(spark, marker, src_topic_path, dedup=False)
     return payload
@@ -351,9 +319,6 @@ def translate_cursor_by_snapshot(
     `translate_cursor` above is the exact identity-join alternative; this
     one costs a metadata-scale marker scan instead of a log join.
     """
-    import json as _json
-
-    from pulsar_3_2_codedump_spark import topic as T
     from pulsar_3_2_codedump_spark.envelope import MARKER_REPL_SNAPSHOT
 
     markers = (
@@ -365,7 +330,7 @@ def translate_cursor_by_snapshot(
     md = {str(p): int(v) for p, v in mark_delete.items()}
     best, best_key = None, None
     for row in markers:
-        snap = _json.loads(bytes(row["value"]).decode("utf-8"))
+        snap = json.loads(bytes(row["value"]).decode("utf-8"))
         if all(int(e) <= md.get(p, 0) for p, e in snap["src"].items()):
             # recency = recorded source progress (appends are monotone, so the
             # pointwise-greatest qualifying snapshot has the greatest total)
@@ -375,11 +340,93 @@ def translate_cursor_by_snapshot(
     return None if best is None else {p: int(e) for p, e in best["dst"].items()}
 
 
-def subscription_cursor_path(topic_path: str, name: str) -> str:
-    """Canonical durable-cursor location: <topic>/subscriptions/<name>.json."""
-    import os
+# ---------------------------------------------------------------------------
+# The durable cursor store (§2.J3). A subscription is one named cursor, as
+# in the reference (ManagedCursorImpl: markDeletePosition :131,
+# individualDeletedMessages :199, readPosition), kept in one file,
+# <topic>/subscriptions/<name>.json: per partition
+# {"mark_delete": last acked offset (inclusive), "ranges": [[lo, hi], …]}
+# plus, once a ``pulsarlike`` stream reader has planned a batch, "read" (the
+# next offset to fetch, exclusive). Every reader and writer of cursor files
+# is in this section.
+# ---------------------------------------------------------------------------
 
-    return os.path.join(topic_path, "subscriptions", f"{name}.json")
+
+def subscription_cursor_path(topic_path: str, name: str) -> str:
+    """Canonical durable-cursor location: <topic>/subscriptions/<name>.json.
+    The name comes from outside the program, so every character outside
+    ``[A-Za-z0-9._-]`` becomes ``_``: no name reaches another directory."""
+    safe = re.sub(r"[^A-Za-z0-9._-]", "_", name)
+    return os.path.join(topic_path, "subscriptions", f"{safe}.json")
+
+
+def save_ack_state(state: dict, path: str) -> None:
+    """Replace the cursor file atomically, like the cursor's metadata-store
+    write: a reader sees the old or the new state, never half of one."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    T._write_json_atomic(path, {str(k): v for k, v in state.items()})
+
+
+def load_ack_state(path: str) -> dict:
+    try:
+        with open(path) as f:
+            return {int(k): v for k, v in json.load(f).items()}
+    except FileNotFoundError:
+        return new_ack_state()
+
+
+def read_position(path: str) -> dict[str, int] | None:
+    """The stream reader's read position (readPosition: the next offset to
+    fetch), keyed by partition string like stream offsets; None when no
+    batch has been planned under this cursor."""
+    pos = {str(p): int(c["read"]) for p, c in load_ack_state(path).items() if "read" in c}
+    return pos or None
+
+
+def advance_read(path: str, pos: dict) -> None:
+    """Max-merge ``pos`` into the cursor's read position; positions never
+    regress (a replayed or restarted batch must not rewind the cursor).
+
+    The ``pulsarlike`` stream source calls this when it plans a micro-batch
+    (``latestOffset``) under a named ``subscription``. It needs the position
+    for flow control across query restarts: the Python DataSource
+    ``latestOffset()`` never sees the checkpoint-restored start, so a capped
+    reader must recover its own position from somewhere durable. The read
+    position is stored at planning time because under Trigger.AvailableNow
+    a run executes one batch and stops before the lazy source commit (which
+    Spark issues at the NEXT batch's construction) ever fires.
+
+    An unchanged position is not rewritten: Spark polls ``latestOffset``
+    after every empty trigger, and an idle cursor must age for
+    ``expire_inactive_subscriptions``."""
+    state = load_ack_state(path)
+    moved = False
+    for p, o in pos.items():
+        cur = state.setdefault(int(p), {"mark_delete": -1, "ranges": []})
+        if int(o) > cur.get("read", -1):
+            cur["read"] = int(o)
+            moved = True
+    if moved:
+        save_ack_state(state, path)
+
+
+def acked_positions(topic_path: str) -> dict[str, dict[int, int]]:
+    """Every durable subscription's acked position: name -> {partition:
+    first offset not yet acked}, i.e. the mark-delete position + 1. Ranges
+    acked beyond the mark and the read position do not move it, so a stream
+    reader that has only planned batches has acked nothing. Partitions a
+    cursor does not mention are at offset 0."""
+    sub_dir = os.path.join(topic_path, "subscriptions")
+    if not os.path.isdir(sub_dir):
+        return {}
+    return {
+        fn[: -len(".json")]: {
+            p: int(c["mark_delete"]) + 1
+            for p, c in load_ack_state(os.path.join(sub_dir, fn)).items()
+        }
+        for fn in sorted(os.listdir(sub_dir))
+        if fn.endswith(".json")
+    }
 
 
 def expire_inactive_subscriptions(
@@ -391,11 +438,13 @@ def expire_inactive_subscriptions(
     ServiceConfiguration.subscriptionExpirationTimeMinutes: a durable
     subscription whose cursor hasn't moved within the window is deleted, so
     its backlog stops pinning retention. The activity stamp is the cursor
-    file's mtime — ``save_ack_state`` atomically rewrites it on every ack,
-    exactly when the reference updates the cursor's ledger position.
-    Control-plane only (O(#subscriptions) metadata); returns the expired
-    subscription names. ``now`` is injectable for deterministic tests."""
-    import os
+    file's mtime: ``save_ack_state`` atomically rewrites it on every ack, a
+    stream's cumulative ack included, and ``advance_read`` whenever a stream
+    reader's read position moves, exactly when the reference updates the
+    cursor's ledger position. A live stream reader whose cursor expired
+    re-creates it at its next ``latestOffset``. Control-plane only
+    (O(#subscriptions) metadata); returns the expired subscription names.
+    ``now`` is injectable for deterministic tests."""
     import time as _time
 
     sub_dir = os.path.join(topic_path, "subscriptions")

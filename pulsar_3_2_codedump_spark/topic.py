@@ -68,6 +68,32 @@ def lookup_frame(spark: SparkSession, rows: list, schema: StructType | str) -> D
     return spark.createDataFrame(table)
 
 
+def marker_frame(
+    spark: SparkSession,
+    key: str,
+    value: bytes | None,
+    properties: dict,
+    producer_name: str,
+    marker_type: int,
+) -> DataFrame:
+    """One broker-internal marker row (txn commit/abort, replicated-
+    subscription snapshot; §2.C3), published now to partition 0, as a
+    ``lookup_frame``: the envelope minus ``offset``, ready for ``append``."""
+    import datetime as _dt
+
+    row = (
+        key, value, properties, _dt.datetime.now(_dt.timezone.utc),
+        producer_name, 0, marker_type, 0,
+    )
+    return lookup_frame(
+        spark,
+        [row],
+        "key string, value binary, properties map<string,string>, "
+        "publish_time timestamp, producer_name string, sequence_id long, "
+        "marker_type int, partition int",
+    )
+
+
 def _manifest_path(topic_path: str) -> str:
     return os.path.join(topic_path, MANIFEST)
 
@@ -77,7 +103,7 @@ def read_manifest(topic_path: str) -> dict:
         return json.load(f)
 
 
-def _write_json_atomic(path: str, obj: dict) -> None:
+def _write_json_atomic(path: str, obj) -> None:
     tmp = f"{path}.tmp.{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
         json.dump(obj, f, indent=1, sort_keys=True)
@@ -222,10 +248,13 @@ def gc_inactive_topics(
     ledger. Control-plane only (O(#topics) metadata); returns the deleted
     topic names. ``now`` is injectable for deterministic tests.
 
-    Durable subscriptions are read from both cursor stores
-    (``acked_positions``), so a topic whose only consumer is a stream with a
-    named ``subscription`` is not collected as unsubscribed."""
+    Durable subscriptions are the topic's cursors
+    (``subscriptions.acked_positions``), a stream's named ``subscription``
+    among them, so a topic whose only consumer is such a stream is not
+    collected as unsubscribed."""
     import time as _time
+
+    from pulsar_3_2_codedump_spark.subscriptions import acked_positions
 
     if mode not in ("delete_when_no_subscriptions", "delete_when_subscriptions_caught_up"):
         raise ValueError(f"unknown GC mode: {mode}")
@@ -261,43 +290,6 @@ def gc_inactive_topics(
                 shutil.rmtree(tp)
                 deleted.append(name)
     return deleted
-
-
-def acked_positions(topic_path: str) -> dict[str, dict[int, int]]:
-    """Every durable subscription's acked position: name -> {partition:
-    first offset not yet acked}. Two stores hold durable cursors:
-
-    - ``subscriptions/<name>.json``: individual-ack state
-      (subscriptions.save_ack_state), {partition: {"mark_delete": last acked
-      offset (inclusive), "ranges": [...]}}; the position is the mark + 1,
-      and ranges acked beyond the mark do not move it;
-    - ``_subscriptions/<name>.json``: the ``pulsarlike`` stream source's
-      named cursor (option ``subscription``), whose ``ack`` holds exclusive
-      end offsets; a cursor that has only a ``read`` position has acked
-      nothing.
-
-    A name present in both stores keeps the lower position per partition.
-    Partitions a cursor does not mention are at offset 0."""
-    out: dict[str, dict[int, int]] = {}
-    for store in ("subscriptions", "_subscriptions"):
-        sub_dir = os.path.join(topic_path, store)
-        if not os.path.isdir(sub_dir):
-            continue
-        for fn in sorted(os.listdir(sub_dir)):
-            if not fn.endswith(".json"):
-                continue
-            with open(os.path.join(sub_dir, fn)) as f:
-                state = json.load(f)
-            if store == "subscriptions":
-                pos = {int(p): int(c.get("mark_delete", -1)) + 1 for p, c in state.items()}
-            else:
-                pos = {int(p): int(v) for p, v in (state.get("ack") or {}).items()}
-            name = fn[: -len(".json")]
-            if name in out:
-                prev = out[name]
-                pos = {p: min(prev.get(p, 0), pos.get(p, 0)) for p in prev.keys() | pos.keys()}
-            out[name] = pos
-    return out
 
 
 def end_offsets(manifest: dict) -> dict[int, int]:
@@ -361,8 +353,6 @@ def append(
     every payload must decode under the topic's latest registered schema or
     the whole append is rejected with SchemaIncompatibleError — run OUTSIDE
     the writer lock (it's a read-only scan of the incoming batch)."""
-    if read_manifest(topic_path).get("shadow_source"):
-        raise ShadowTopicError(f"cannot publish to shadow topic {topic_path}")
     if validate_schema:
         from pulsar_3_2_codedump_spark.schema_registry import validate_payloads
 
@@ -506,16 +496,19 @@ def _commit_segments(topic_path: str, stage, batch_token: str | None = None) -> 
     with publish-time bounds in unix micros (None when unknown).
 
     This function alone does the rest: a batch whose ``batch_token`` is
-    already committed is a no-op, a terminated topic rejects the batch, each
-    staged partition moves into place as one segment, and one atomic
-    manifest replace records the segments with their offset and time bounds
-    (the index seek-by-timestamp prunes on, PersistentMessageFinder.java:57),
-    ``next_offset``, the producer marks and the token. Segment names end in
+    already committed is a no-op, a shadow or terminated topic rejects the
+    batch, each staged partition moves into place as one segment, and one
+    atomic manifest replace records the segments with their offset and time
+    bounds (the index seek-by-timestamp prunes on,
+    PersistentMessageFinder.java:57), ``next_offset``, the producer marks
+    and the token. Segment names end in
     the stage id, so a retry after a crash between the move and the replace
     never lands on the orphan of the failed attempt."""
     manifest = read_manifest(topic_path)
     if batch_token is not None and batch_token in manifest.get("committed_batch_tokens", []):
         return end_offsets(manifest)  # a replay, even past termination: no-op
+    if manifest.get("shadow_source"):
+        raise ShadowTopicError(f"cannot publish to shadow topic {topic_path}")
     if "terminated_at" in manifest:
         raise TopicTerminatedError(
             f"topic {manifest['name']} is terminated at {manifest['terminated_at']}"
@@ -598,20 +591,14 @@ def read_topic(
     df = tiers[0] if len(tiers) == 1 else tiers[0].unionByName(tiers[1])
     if not read_markers:
         df = df.filter(F.col("marker_type").isNull())
+    # per-partition bounds as map literals (``_map_lookup``): no join, no
+    # broadcast; a partition with no bound is not filtered
     if start_offsets:
-        lo_df = F.broadcast(
-            lookup_frame(spark, list(start_offsets.items()), "partition int, __lo long")
-        )
-        df = df.join(lo_df, "partition", "left").filter(
-            F.col("__lo").isNull() | (F.col("offset") >= F.col("__lo"))
-        ).drop("__lo")
+        lo = _map_lookup(start_offsets, "int", "partition")
+        df = df.filter(lo.isNull() | (F.col("offset") >= lo))
     if end:
-        hi_df = F.broadcast(
-            lookup_frame(spark, list(end.items()), "partition int, __hi long")
-        )
-        df = df.join(hi_df, "partition", "left").filter(
-            F.col("__hi").isNull() | (F.col("offset") < F.col("__hi"))
-        ).drop("__hi")
+        hi = _map_lookup(end, "int", "partition")
+        df = df.filter(hi.isNull() | (F.col("offset") < hi))
     return df
 
 
@@ -701,22 +688,17 @@ def compact_topic(spark: SparkSession, topic_path: str, tombstone=None) -> dict[
     key's latest entry (tombstones dropped), and record the horizon.
 
     The reference's two phases (scan → build latestForKey map → rewrite) are
-    one declarative plan: window last-per-key + filter + write. Readers with
-    readCompacted=true get union(snapshot, tail > horizon) — see
-    sources/pulsarlike.py. Returns the compaction horizon per partition.
+    one declarative plan: ``operators.compaction.compact`` (latest per key,
+    tombstones dropped) + write. Readers with readCompacted=true get
+    union(snapshot, tail > horizon) — see sources/pulsarlike.py. Returns the
+    compaction horizon per partition.
     """
-    from pyspark.sql import functions as F  # local to avoid cycle at import
-    from pyspark.sql.window import Window as W
+    # imported here: the module registers its queries when first imported
+    from pulsar_3_2_codedump_spark.operators import compaction
 
     manifest = read_manifest(topic_path)
     horizon = end_offsets(manifest)
-    df = read_topic(spark, topic_path, end=horizon)
-    w = W.partitionBy("key").orderBy(F.desc("partition"), F.desc("offset"))
-    latest = (
-        df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
-    )
-    if tombstone is not None:
-        latest = latest.filter(~tombstone)
+    latest = compaction.compact(read_topic(spark, topic_path, end=horizon), tombstone)
 
     # a snapshot directory of its own, recorded with its horizon in one
     # manifest commit: a failed compaction leaves the previous view intact
@@ -899,22 +881,8 @@ def txn_append(spark: SparkSession, df: DataFrame, topic_path: str, txn_id: str)
 
 
 def _txn_marker(spark: SparkSession, txn_id: str, marker_type: int) -> DataFrame:
-    import datetime as _dt
-
-    return spark.createDataFrame(
-        [(
-            f"__txn:{txn_id}",
-            None,
-            {"txn_id": txn_id},
-            _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None),
-            "__txn_coordinator",
-            0,
-            marker_type,
-            0,
-        )],
-        "key string, value binary, properties map<string,string>, "
-        "publish_time timestamp, producer_name string, sequence_id long, "
-        "marker_type int, partition int",
+    return marker_frame(
+        spark, f"__txn:{txn_id}", None, {"txn_id": txn_id}, "__txn_coordinator", marker_type
     )
 
 
@@ -989,8 +957,11 @@ def topic_stats(topic_path: str) -> dict:
     bytes, offset high-water marks, and per-subscription backlog — computed
     from the manifest + cursor files ONLY (pure metadata: no data file is
     opened, exactly like the broker serving stats from ledger metadata).
-    Subscriptions come from both cursor stores (``acked_positions``); the
-    backlog counts from each one's acked position."""
+    Subscriptions are the topic's cursors
+    (``subscriptions.acked_positions``); the backlog counts from each one's
+    acked position."""
+    from pulsar_3_2_codedump_spark.subscriptions import acked_positions
+
     manifest = read_manifest(topic_path)
     ends = end_offsets(manifest)
     parts = {}

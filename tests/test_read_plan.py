@@ -51,10 +51,32 @@ def test_lookup_frames_run_no_python_worker(spark, tmp_root):
     T.append(spark, _env(spark, 100), tp)
     ends = T.end_offsets(T.read_manifest(tp))
     df = T.read_topic(spark, tp, start_offsets={0: 3, 1: 4}, end={0: ends[0] - 2, 1: ends[1] - 1})
-    # both bounds are broadcast joins against lookup frames
-    assert df._jdf.queryExecution().executedPlan().toString().count("Broadcast") >= 2
     assert not _python_rdds(df)
     assert df.count() == sum(ends.values()) - (3 + 4) - (2 + 1)
+
+
+def test_bounded_read_plans_no_join(spark, tmp_root):
+    # the per-partition bounds are map literals: no broadcast, no join, and
+    # a partition with no bound is not filtered
+    tp = T.create_topic(tmp_root, "bounded", n_partitions=2)
+    T.append(spark, _env(spark, 100), tp)
+    ends = T.end_offsets(T.read_manifest(tp))
+    start, end = {0: 3, 1: 4}, {0: ends[0] - 2}
+    df = T.read_topic(spark, tp, start_offsets=start, end=end)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan and "Join" not in plan, plan
+    got = sorted((r["partition"], r["offset"]) for r in df.select("partition", "offset").collect())
+    assert got == [(p, o) for p in (0, 1) for o in range(start[p], end.get(p, ends[p]))]
+
+
+def test_marker_frames_run_no_python_worker(spark):
+    marker = T._txn_marker(spark, "t1", MARKER_TXN_COMMIT)
+    assert not _python_rdds(marker)
+    row = marker.collect()[0]
+    assert (row["key"], row["value"], row["properties"], row["marker_type"]) == (
+        "__txn:t1", None, {"txn_id": "t1"}, MARKER_TXN_COMMIT
+    )
+    assert row["publish_time"] is not None
 
 
 def _multi_partition_topic(spark, tmp_root, n_appends=3):

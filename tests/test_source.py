@@ -209,6 +209,7 @@ def test_named_cursor_not_rewritten_when_unchanged(spark, tmp_root):
     import time
 
     from pulsar_3_2_codedump_spark.sources.pulsarlike import PulsarLikeStreamReader
+    from pulsar_3_2_codedump_spark.subscriptions import subscription_cursor_path
 
     schema = (
         "key string, value binary, publish_time timestamp, "
@@ -225,7 +226,7 @@ def test_named_cursor_not_rewritten_when_unchanged(spark, tmp_root):
     tp = T.create_topic(tmp_root, "idle", n_partitions=2)
     T.append(spark, batch(0, 20), tp)
     reader = PulsarLikeStreamReader({"path": tp, "subscription": "sub/a"})
-    cursor = reader._cursor_file()
+    cursor = subscription_cursor_path(tp, "sub/a")
     first = reader.latestOffset()
     st = os.stat(cursor)
     time.sleep(0.05)
@@ -237,4 +238,6 @@ def test_named_cursor_not_rewritten_when_unchanged(spark, tmp_root):
     ends = reader.latestOffset()
     assert sum(ends.values()) == 50
     with open(cursor) as f:
-        assert json.load(f)["read"] == {p: int(e) for p, e in ends.items()}
+        assert {p: c["read"] for p, c in json.load(f).items()} == {
+            p: int(e) for p, e in ends.items()
+        }

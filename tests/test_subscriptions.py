@@ -185,3 +185,96 @@ def test_expire_inactive_subscriptions(tmp_root):
     assert S.load_ack_state(active) == {0: st[0]}
     # idempotent second sweep
     assert S.expire_inactive_subscriptions(tmp_root, max_idle_seconds=600) == []
+
+
+def test_cursor_path_stays_inside_subscriptions(tmp_root):
+    # subscription names come from outside the program
+    import os
+
+    tp = os.path.join(tmp_root, "t")
+    sub_dir = os.path.abspath(os.path.join(tp, "subscriptions"))
+    for name in ("../x", "a/b", "../../etc/passwd", ".."):
+        path = os.path.abspath(S.subscription_cursor_path(tp, name))
+        assert os.path.dirname(path) == sub_dir, (name, path)
+
+
+def test_concurrent_cursor_saves_never_tear(tmp_root):
+    # two writers save one cursor while a third thread reads it: no save
+    # fails and every read parses
+    import os
+    import sys
+    import threading
+
+    cursor = S.subscription_cursor_path(tmp_root, "busy")
+    os.makedirs(os.path.dirname(cursor))
+    errors: list[Exception] = []
+    stop = threading.Event()
+
+    def save(p):
+        try:
+            for n in range(1500):
+                S.save_ack_state(S.ack_cumulative(S.new_ack_state(), p, n), cursor)
+        except Exception as e:  # collected and asserted below
+            errors.append(e)
+
+    def read():
+        while not stop.is_set():
+            try:
+                S.load_ack_state(cursor)
+            except Exception as e:
+                errors.append(e)
+
+    threads = [threading.Thread(target=save, args=(p,)) for p in (0, 1)]
+    reader = threading.Thread(target=read)
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        reader.start()
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        stop.set()
+        reader.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev)
+    assert not any(t.is_alive() for t in threads + [reader])
+    assert errors == []
+    assert list(S.load_ack_state(cursor).values())[0]["mark_delete"] == 1499
+
+
+def test_idle_stream_cursor_expires_and_live_reader_recreates_it(tmp_root):
+    # a stream's named cursor is an ordinary subscription: an idle one
+    # expires, and the reader writes it again at its next latestOffset
+    import os
+    import time
+
+    from pulsar_3_2_codedump_spark.sources.pulsarlike import PulsarLikeStreamReader
+
+    tp = T.create_topic(tmp_root, "idle-stream", n_partitions=2)
+    reader = PulsarLikeStreamReader({"path": tp, "subscription": "tail/1"})
+    ends = reader.latestOffset()
+    cursor = S.subscription_cursor_path(tp, "tail/1")
+    old = time.time() - 3600
+    os.utime(cursor, (old, old))
+    assert reader.latestOffset() == ends  # a poll that moves nothing writes nothing
+
+    assert S.expire_inactive_subscriptions(tp, max_idle_seconds=600) == ["tail_1"]
+    assert not os.path.exists(cursor)
+    assert reader.latestOffset() == ends
+    assert S.read_position(cursor) == ends
+    assert S.expire_inactive_subscriptions(tp, max_idle_seconds=600) == []
+
+
+def test_stream_commit_closes_individually_acked_hole(tmp_root):
+    # one cursor per name: the stream's cumulative ack reaches the range
+    # acked individually above it, and the mark moves past that range
+    from pulsar_3_2_codedump_spark.sources.pulsarlike import PulsarLikeStreamReader
+
+    tp = T.create_topic(tmp_root, "holes", n_partitions=1)
+    cursor = S.subscription_cursor_path(tp, "mixed")
+    S.save_ack_state(S.ack_individual(S.new_ack_state(), [(0, 5, 9)]), cursor)
+    PulsarLikeStreamReader({"path": tp, "subscription": "mixed"}).commit({"0": 5})
+    state = S.load_ack_state(cursor)
+    assert state[0]["mark_delete"] == 9 and state[0]["ranges"] == []
+    assert S.acked_positions(tp) == {"mixed": {0: 10}}

@@ -141,3 +141,15 @@ def test_shadow_topic_follows_source_and_rejects_produce(spark, tmp_path):
 
     # the source is untouched by all of the above
     assert _collect_keys(TP.read_topic(spark, src)) == {str(i) for i in range(30)}
+
+
+def test_exclusive_producer_cannot_publish_to_shadow(spark, tmp_path):
+    # the shadow check sits in the one commit function, so an exclusive
+    # grant on a shadow does not open a second way in
+    root = str(tmp_path / "topics")
+    src = TP.create_topic(root, "src", n_partitions=2)
+    shadow = TP.create_shadow_topic(root, "src-shadow", src)
+    grant = TP.acquire_exclusive_producer(shadow, "p1")
+    with pytest.raises(TP.ShadowTopicError):
+        TP.append_exclusive(spark, _envelope_rows(spark, 0, 5), shadow, grant)
+    assert TP.end_offsets(TP.read_manifest(src)) == {0: 0, 1: 0}

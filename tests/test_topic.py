@@ -333,7 +333,7 @@ def test_gc_inactive_topics(spark, tmp_root):
 
 
 def test_gc_sees_stream_source_subscriptions(spark, tmp_root):
-    # the pulsarlike source keeps a named cursor under _subscriptions/: a
+    # the pulsarlike source keeps a named cursor under subscriptions/: a
     # topic whose only consumer is such a stream is subscribed, and is
     # caught up only once the stream's ack reaches the end
     import os
