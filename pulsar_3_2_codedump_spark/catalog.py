@@ -61,13 +61,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _conform_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
 
 
-def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = None) -> None:
-    """Register each fixture table as a temp view (matches the driver's
-    duckdb-side pre-registered views, so the same SQL names work)."""
-    for name in tables or TABLES:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def fanout(df: DataFrame, partitions: int | None = None) -> DataFrame:
     """Repartition before expression-heavy per-row work.
 

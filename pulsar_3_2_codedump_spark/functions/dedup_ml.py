@@ -1511,17 +1511,6 @@ def _lcp_of_tails(ta: Column, tb: Column) -> Column:
     return F.when(tb.isNull(), 0).otherwise(F.lit(ESD_MIN) + tail)
 
 
-def _lcp_in_bucket(a: Column, b: Column) -> Column:
-    """Full-suffix form of _lcp_of_tails (kept for the equality-proof
-    tooling): slices the tails off the complete suffix strings first."""
-    return F.when(b.isNull(), 0).otherwise(
-        _lcp_of_tails(
-            a.substr(F.lit(ESD_MIN + 1), F.lit(ESD_CAP - ESD_MIN)),
-            b.substr(F.lit(ESD_MIN + 1), F.lit(ESD_CAP - ESD_MIN)),
-        )
-    )
-
-
 def _esd_positions(t: DataFrame) -> DataFrame:
     """(doc_id, pos, ws): every word-start position of a (doc_id, ws)
     tokenized frame — integers only, no string building, so a census

@@ -20,6 +20,7 @@ from pyspark.sql.window import Window as W
 
 from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only, fanout, load
 from pulsar_3_2_codedump_spark.queries import query
+from pulsar_3_2_codedump_spark.topic import lookup_frame
 
 TOP_K = 5
 QUERY_STRIDE = 50  # vec_id % 50 == 0 → the query set
@@ -315,7 +316,8 @@ def ivf_index(spark: SparkSession, emb: DataFrame, k: int = IVF_K, seed: int = 7
     ).fit(fit_input)
     fit_input.unpersist()
     assigned = model.transform(vecs).select("vec_id", "cell")
-    centroids = spark.createDataFrame(
+    centroids = lookup_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell int, centroid array<double>",
     )

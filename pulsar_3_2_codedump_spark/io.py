@@ -370,7 +370,7 @@ def ingest_kafka(
 TIER_DOCS = 120  # doc_id < TIER_DOCS feed the tiered/shadow topic
 TIER_PARTS = 4
 
-from pulsar_3_2_codedump_spark.queries import query  # noqa: E402
+from pulsar_3_2_codedump_spark.queries import query, scratch_root  # noqa: E402
 
 
 @query(
@@ -399,9 +399,6 @@ from pulsar_3_2_codedump_spark.queries import query  # noqa: E402
     """,
 )
 def tiered_shadow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pulsar_3_2_codedump_spark.catalog import load
 
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < TIER_DOCS)
@@ -422,8 +419,7 @@ def tiered_shadow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("doc_id") % TIER_PARTS).cast("int").alias("partition"),
         )
 
-    root = tempfile.mkdtemp(prefix="tiershadow_")
-    try:
+    with scratch_root(spark) as root:
         tp = T.create_topic(root + "/topics", "docs", n_partitions=TIER_PARTS)
         T.append(spark, env_slice(0, TIER_DOCS // 2), tp)
         ends = T.end_offsets(T.read_manifest(tp))
@@ -442,7 +438,4 @@ def tiered_shadow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("long").alias("md5_sum"),
             )
         )
-        rows = out.collect()  # #partitions rows — materialize before cleanup
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, out.collect(), out.schema)  # #partitions rows

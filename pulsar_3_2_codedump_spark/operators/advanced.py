@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from pulsar_3_2_codedump_spark.catalog import load
-from pulsar_3_2_codedump_spark.queries import query
+from pulsar_3_2_codedump_spark.queries import query, scratch_root
+from pulsar_3_2_codedump_spark.topic import lookup_frame
 
 
 @query(
@@ -42,9 +43,11 @@ def stats_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # term — and on a single-split scan that map-building is single-threaded.
     # The percentile branch now runs off a hash-repartitioned 3-column
     # projection (repartition(defaultParallelism, flag, price): keyed, so no
-    # sort-before-repartition; co-locating equal values makes the partial
-    # maps DISJOINT, so the final merge does the minimum possible inserts),
-    # and the 3-row result broadcast-joins back onto the moments aggregate.
+    # sort-before-repartition; co-locating equal prices makes the partial
+    # price-percentile maps DISJOINT, so their final merge does the minimum
+    # possible inserts — med_qty's l_quantity maps still overlap, which costs
+    # merge inserts, not exactness), and the 3-row result broadcast-joins
+    # back onto the moments aggregate.
     # Percentile/median are SELECTION aggregates whose merge is an exact
     # integer map-union — commutative and associative — so their result is
     # bit-identical under any partitioning (proven: byte-equal doubles at
@@ -184,7 +187,8 @@ def exists_in_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def range_join_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load(spark, sf_dir, "part")
-    bands = spark.createDataFrame(
+    bands = lookup_frame(
+        spark,
         [("budget", 0.0, 500.0), ("mid", 500.0, 1200.0), ("premium", 1200.0, 100000.0)],
         "band string, lo double, hi double",
     )
@@ -321,9 +325,6 @@ def schema_decode_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def schema_evolution_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     from pulsar_3_2_codedump_spark.schema_registry import (
@@ -331,8 +332,7 @@ def schema_evolution_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_schema,
     )
 
-    root = tempfile.mkdtemp(prefix="schevo_")
-    try:
+    with scratch_root(spark) as root:
         v0 = T.StructType(
             [
                 T.StructField("o_orderkey", T.LongType(), True),
@@ -363,8 +363,6 @@ def schema_evolution_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("data.o_totalprice").alias("max_price"),
             F.min("data.o_orderpriority").alias("min_priority"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(

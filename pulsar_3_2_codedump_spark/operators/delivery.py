@@ -24,9 +24,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pulsar_3_2_codedump_spark import topic as T
 from pulsar_3_2_codedump_spark.catalog import load
 from pulsar_3_2_codedump_spark.envelope import EVENTS_ENVELOPE_ORACLE, cached_envelope
-from pulsar_3_2_codedump_spark.queries import query
+from pulsar_3_2_codedump_spark.queries import query, scratch_root
 
 _ENV = f"WITH envelope AS ({EVENTS_ENVELOPE_ORACLE})"
 
@@ -260,7 +261,7 @@ def backlog_quota_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     env = cached_envelope(spark, sf_dir)
-    subs = spark.createDataFrame(BACKLOG_SUBS, "sub string, cursor int, quota int")
+    subs = T.lookup_frame(spark, BACKLOG_SUBS, "sub string, cursor int, quota int")
     w = W.partitionBy("sub", "partition").orderBy(F.desc("offset"))
     backlog = (
         env.select("partition", "offset")
@@ -345,7 +346,7 @@ def priority_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     env = cached_envelope(spark, sf_dir)
-    consumers = spark.createDataFrame(PRIORITY_CONSUMERS, "name string, priority int")
+    consumers = T.lookup_frame(spark, PRIORITY_CONSUMERS, "name string, priority int")
     lw = W.orderBy("priority")
     levels = (
         consumers.groupBy("priority")
@@ -474,8 +475,8 @@ def peek_skip_messages(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     env = cached_envelope(spark, sf_dir)
-    subs = spark.createDataFrame(
-        ADMIN_SUBS, "sub string, cursor int, skip_n int, peek_n int"
+    subs = T.lookup_frame(
+        spark, ADMIN_SUBS, "sub string, cursor int, skip_n int, peek_n int"
     )
     w = W.partitionBy("sub", "partition").orderBy("offset")
     backlog = (
@@ -661,7 +662,7 @@ EXPIRY_WINDOW_DAYS = 7
 )
 def subscription_expiry_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     env = cached_envelope(spark, sf_dir)
-    subs = spark.createDataFrame(EXPIRY_SUBS, "sub string, cursor long")
+    subs = T.lookup_frame(spark, EXPIRY_SUBS, "sub string, cursor long")
     la = (
         env.select("partition", "offset", "publish_time")
         .join(F.broadcast(subs), F.col("offset") <= F.col("cursor"))
@@ -723,7 +724,7 @@ EXPIRE_TTL_DAYS = 7
 )
 def expire_messages_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     env = cached_envelope(spark, sf_dir)
-    subs = spark.createDataFrame(EXPIRE_SUBS, "sub string, cursor long")
+    subs = T.lookup_frame(spark, EXPIRE_SUBS, "sub string, cursor long")
     horizon = env.agg(
         (F.max("publish_time") - F.expr(f"INTERVAL {EXPIRE_TTL_DAYS} DAY")).alias("h")
     )
@@ -787,11 +788,6 @@ EO_PARTS = 4
     """,
 )
 def exactly_once_replay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from pulsar_3_2_codedump_spark import topic as T
-
     ev = load(spark, sf_dir, "events")
 
     def batch(lo: int, hi: int) -> DataFrame:
@@ -817,8 +813,7 @@ def exactly_once_replay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("event_id") % EO_PARTS).cast("int").alias("partition"),
         )
 
-    root = tempfile.mkdtemp(prefix="exactly_once_")
-    try:
+    with scratch_root(spark) as root:
         tp = T.create_topic(root + "/topics", "replay", n_partitions=EO_PARTS)
         T.append(spark, batch(0, EO_BATCH1_HI), tp)          # clean publish
         T.append(spark, batch(0, EO_BATCH1_HI), tp)          # verbatim replay
@@ -834,10 +829,7 @@ def exactly_once_replay_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("long").alias("payload_md5_sum"),
             )
         )
-        rows = out.collect()  # EO_PARTS rows — materialize before cleanup
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, out.collect(), out.schema)  # EO_PARTS rows
 
 
 # Replicated-subscription cursor-sync audit bounds (events fixture has
@@ -884,15 +876,10 @@ REPL_SYNC_CUT = 600    # consumer's acked prefix on the source cluster
     """,
 )
 def replicated_cursor_sync_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pulsar_3_2_codedump_spark import subscriptions as S
-    from pulsar_3_2_codedump_spark import topic as T
     from pulsar_3_2_codedump_spark.envelope import wrap_events
 
-    root = tempfile.mkdtemp(prefix="replsync_")
-    try:
+    with scratch_root(spark) as root:
         src = T.create_topic(root, "src-cluster", n_partitions=2)
         dst = T.create_topic(root, "dst-cluster", n_partitions=3)
         env = (
@@ -942,10 +929,9 @@ def replicated_cursor_sync_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for p in range(3)
         ]
-        return spark.createDataFrame(
+        return T.lookup_frame(
+            spark,
             rows,
             "partition int, n_acked_exact long, snapshot_resume long, "
             "redelivered long",
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)

@@ -15,7 +15,10 @@ Conventions (to survive the driver's order-insensitive value-hash compare):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,6 +47,23 @@ def query(name: str, oracle: str | None = None, section: str = "", doc: str = ""
         return fn
 
     return deco
+
+
+@contextmanager
+def scratch_root(spark: SparkSession) -> Iterator[str]:
+    """A fresh temporary directory for the topics, checkpoints and views a
+    query builds while it runs, with the ``pulsarlike`` source registered on
+    ``spark``. The directory is removed on exit, also when the body raises,
+    so a query returns what it read from it as a ``topic.lookup_frame`` of
+    the collected rows, never as a lazy frame over its files."""
+    from pulsar_3_2_codedump_spark.sources import register
+
+    register(spark)
+    root = tempfile.mkdtemp(prefix="pulsarlike_scratch_")
+    try:
+        yield root
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 # The correctness harness verifies queries in registry order with a bounded

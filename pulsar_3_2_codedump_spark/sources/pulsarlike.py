@@ -47,6 +47,7 @@ boundary (no per-row serde); segment pruning happens before any file IO.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import uuid
@@ -232,7 +233,7 @@ class _SegmentScanMixin:
     """Shared read logic: segment pruning + Arrow batch production."""
 
     def __init__(self, options):
-        self.path = options.get("path") or options.get("topic")
+        self.path = options.get("path")
         if not self.path:
             raise ValueError("pulsarlike requires option 'path' (topic directory)")
         # shadow topics (PIP-180, topic.create_shadow_topic) read the SOURCE
@@ -328,17 +329,14 @@ class PulsarLikeBatchReader(_SegmentScanMixin, DataSourceReader):
     def partitions(self):
         manifest = self._manifest()
         ends = _ends(manifest)
-        start = json.loads(self.options.get("startingoffsets_json", "{}") or "{}")
+        start: dict[str, int] = {}
         read_compacted = (self.options.get("readcompacted") or "").lower() == "true"
         parts: list[InputPartition] = []
         if read_compacted and manifest.get("compacted_path"):
             parts.append(SnapshotPartition(manifest["compacted_path"]))
-            horizon = {
-                p: int(e) for p, e in manifest.get("compaction_horizon", {}).items()
-            }
-            start = {p: max(int(start.get(p, 0)), horizon.get(p, 0)) for p in ends}
+            start = {p: int(e) for p, e in manifest.get("compaction_horizon", {}).items()}
         bounds = {
-            p: (max(int(start.get(p, 0)), self._lo), end if self._hi is None else min(end, self._hi))
+            p: (max(start.get(p, 0), self._lo), end if self._hi is None else min(end, self._hi))
             for p, end in ends.items()
             if self._only_partition is None or int(p) == self._only_partition
         }
@@ -375,7 +373,12 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
 
     initialOffset honors startingOffsets = earliest | latest |
     timestamp:<iso> | {"0": 123, ...}; latestOffset caps per-partition
-    advance at maxRecordsPerTrigger (flow control, §2.J2).
+    advance at maxRecordsPerTrigger (flow control, §2.J2). The cap counts
+    from the end of the last planned batch. A fresh query starts from
+    ``initialOffset``. A restarted query learns its checkpointed end from
+    Spark itself: before the first ``latestOffset``, Spark re-plans the
+    checkpoint's last batch through ``partitions(start, end)``, and
+    ``partitions`` max-merges ``end`` into the reader's position.
 
     Option ``subscription`` names a durable cursor under the topic
     (``subscriptions.subscription_cursor_path``), the broker-side
@@ -427,6 +430,9 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
         return ends
 
     def partitions(self, start: dict, end: dict):
+        # on a restart this is the checkpointed batch: the cap resumes there
+        last = getattr(self, "_last_end", None) or {}
+        self._last_end = {p: max(int(e), last.get(p, 0)) for p, e in {**last, **end}.items()}
         bounds = {p: (int(start.get(p, 0)), int(e)) for p, e in end.items()}
         return plan_tasks(self._manifest(), bounds, self._max_rows_per_task())
 
@@ -435,8 +441,9 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
         # named subscription ALSO moves the broker-side markDeletePosition,
         # closing any individually acked hole it reaches.
         # NOTE Spark issues this lazily when constructing the NEXT batch, so
-        # under availableNow single-batch runs it may never fire — the read
-        # position stored by latestOffset() carries restart flow control.
+        # under availableNow single-batch runs it may never fire before the
+        # run stops; the read position stored by latestOffset() still shows
+        # how far the subscription has been planned.
         if not self._cursor:
             return
         state = S.load_ack_state(self._cursor)
@@ -458,7 +465,9 @@ class PulsarLikeStreamWriter(DataSourceStreamWriter):
     stamps offsets and commits them with ``topic._commit_segments`` under
     the topic writer lock. A micro-batch commits under the token
     ``stream:<sinkId>:<batchId>``, so a replayed batchId is a no-op
-    (exactly-once).
+    (exactly-once). Without option ``sinkId`` the sink is named by a hash
+    of its query's checkpoint location, so two queries writing one topic
+    never take each other's batches for replays.
 
     SCALE NOTE: the Python DataSource writer API hands ``write()`` Spark Rows
     one at a time, and the commit reads every staged row back on the driver
@@ -469,7 +478,7 @@ class PulsarLikeStreamWriter(DataSourceStreamWriter):
     measured ~0.5M rows/s on local[32] (see SCALE.md 'Bulk ingest')."""
 
     def __init__(self, options, schema):
-        self.path = options.get("path") or options.get("topic")
+        self.path = options.get("path")
         if not self.path:
             raise ValueError("pulsarlike sink requires option 'path'")
         if T.read_manifest(self.path).get("shadow_source"):
@@ -509,9 +518,13 @@ class PulsarLikeStreamWriter(DataSourceStreamWriter):
     def commit(self, messages, batchId) -> None:
         # Replay idempotency is keyed per SINK, not per topic: two streaming
         # queries writing the same topic both start at batchId 0 and must not
-        # be treated as each other's replays. Pass option("sinkId", ...) to
-        # scope the token; single-query topics work unchanged without it.
-        self._commit(messages, f"stream:{self.options.get('sinkid') or ''}:{batchId}")
+        # be treated as each other's replays. The sink is option("sinkId")
+        # or else its query's checkpoint, which a restart keeps.
+        ckpt = self.options.get("checkpointlocation")
+        sink = self.options.get("sinkid") or (
+            hashlib.md5(ckpt.encode()).hexdigest()[:10] if ckpt else ""
+        )
+        self._commit(messages, f"stream:{sink}:{batchId}")
 
     def _commit(self, messages, token: str | None) -> None:
         staged = [m for m in messages or [] if m is not None]

@@ -10,13 +10,17 @@ pipelines against batch oracles.
 
 Determinism: fixture replay + availableNow triggers + event-time watermarks
 ⇒ identical output rows on every run.
+
+Each query builds its topics, checkpoints and views under one
+``queries.scratch_root``, which registers the source and removes the
+directory when the query returns or raises. So a query collects its result
+before it leaves that block and returns it as a ``topic.lookup_frame``: a
+``LocalRelation`` the JVM scans, with no Python-worker task behind it.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -24,7 +28,7 @@ from pulsar_3_2_codedump_spark import topic as T
 from pulsar_3_2_codedump_spark.catalog import load
 from pulsar_3_2_codedump_spark.envelope import EVENTS_ENVELOPE_ORACLE, wrap_events
 from pulsar_3_2_codedump_spark.operators.behavior import CUSUM_H_MULT, CUSUM_SCALE
-from pulsar_3_2_codedump_spark.queries import query
+from pulsar_3_2_codedump_spark.queries import query, scratch_root
 
 _ENV = f"WITH envelope AS ({EVENTS_ENVELOPE_ORACLE})"
 
@@ -67,11 +71,12 @@ def _run_bounded(stream_df, checkpoint: str, runs_with_appends) -> list:
     """_run_bounded_foreach with a collect-into-driver sink.
 
     HARNESS-ONLY: ``collect()`` into the driver is how the bounded fixture
-    replay hands the driver's comparator a deterministic result set — do NOT
-    copy this into a production pipeline. The production form of the same
-    topology writes each micro-batch back to a topic/table inside
-    ``foreachBatch`` (see streaming/replicator.py) and never materializes on
-    the driver."""
+    replay hands the driver's comparator a deterministic result set: the
+    query returns these rows as a ``topic.lookup_frame`` once the scratch
+    root is gone. Do NOT copy this into a production pipeline. The
+    production form of the same topology writes each micro-batch back to a
+    topic/table inside ``foreachBatch`` (see streaming/replicator.py) and
+    never materializes on the driver."""
     out: list = []
     _run_bounded_foreach(
         stream_df, checkpoint, runs_with_appends, lambda b, _bid: out.extend(b.collect())
@@ -92,8 +97,6 @@ def _versioned_view(root: str, view_schema: str, batch_agg, merge_agg):
     run. At scale the versioned dir is a table with MERGE INTO + the same
     batch-id high-water guard (the standard foreachBatch idempotency
     pattern)."""
-    import os
-
     state = {"path": None, "last_bid": -1}
 
     def upsert(batch, bid):
@@ -107,13 +110,20 @@ def _versioned_view(root: str, view_schema: str, batch_agg, merge_agg):
         cur = (
             spark.read.parquet(state["path"])
             if state["path"]
-            else spark.createDataFrame([], view_schema)
+            else T.lookup_frame(spark, [], view_schema)
         )
         merged = merge_agg(cur.unionByName(batch_agg(batch)))
         merged.write.mode("overwrite").parquet(nxt)
         state["path"], state["last_bid"] = nxt, bid
 
     return upsert, state
+
+
+def _view_frame(spark: SparkSession, state: dict, view_schema: str) -> DataFrame:
+    """The latest version of a ``_versioned_view`` (none if no batch ran),
+    collected into a ``lookup_frame`` before the scratch root is removed."""
+    rows = spark.read.parquet(state["path"]).collect() if state["path"] else []
+    return T.lookup_frame(spark, rows, view_schema)
 
 
 @query(
@@ -138,18 +148,15 @@ def _versioned_view(root: str, view_schema: str, batch_agg, merge_agg):
     """,
 )
 def streaming_delayed_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
     from pulsar_3_2_codedump_spark.streaming.delayed import delayed_delivery
 
-    register(spark)
-    root = tempfile.mkdtemp(prefix="sdq_")
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 300)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         released = delayed_delivery(src)
         grow = lambda: _append_range(spark, sf_dir, tp, 300, 400)  # noqa: E731
         rows = _run_bounded(released, root + "/ck", [None, grow])
-        out = spark.createDataFrame(rows, released.schema) if rows else spark.createDataFrame([], released.schema)
+        out = T.lookup_frame(spark, rows, released.schema)
         # partition is the 2-way topic routing (pmod(xxhash64)) — not
         # SQL-reproducible in DuckDB, and not part of the release semantics;
         # (key, sequence_id) already identifies every released message
@@ -157,8 +164,6 @@ def streaming_delayed_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
             "key", "sequence_id",
             F.date_format("deliver_at", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("deliver_at"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -184,23 +189,14 @@ def streaming_delayed_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_count_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
     from pulsar_3_2_codedump_spark.streaming.function_runtime import count_window_function
 
-    register(spark)
-    root = tempfile.mkdtemp(prefix="scq_")
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 400)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         wins = count_window_function(src, n=50, key_col="producer_name", seq_col="sequence_id")
         rows = _run_bounded(wins, root + "/ck", [None])
-        return (
-            spark.createDataFrame(rows, wins.schema)
-            if rows
-            else spark.createDataFrame([], wins.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, wins.schema)
 
 
 @query(
@@ -252,11 +248,7 @@ def streaming_count_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="ssw_")
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 300)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         sess = (
@@ -276,13 +268,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         grow = lambda: _append_range(spark, sf_dir, tp, 300, 400)  # noqa: E731
         rows = _run_bounded(sess, root + "/ck", [None, grow])
-        return (
-            spark.createDataFrame(rows, sess.schema)
-            if rows
-            else spark.createDataFrame([], sess.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, sess.schema)
 
 
 @query(
@@ -307,11 +293,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="sdd_")
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 300)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         deduped = (
@@ -332,13 +314,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             _append_range(spark, sf_dir, tp, 300, 400)
 
         rows = _run_bounded(deduped, root + "/ck", [None, grow])
-        return (
-            spark.createDataFrame(rows, deduped.schema)
-            if rows
-            else spark.createDataFrame([], deduped.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, deduped.schema)
 
 
 @query(
@@ -365,11 +341,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="ssj_")
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 2000)
 
         def side(event_type: str, key_alias: str, seq_alias: str, t_alias: str):
@@ -400,13 +372,7 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.unix_micros("pt") - F.unix_micros("ct")).alias("lag_us"),
         )
         rows = _run_bounded(joined, root + "/ck", [None])
-        return (
-            spark.createDataFrame(rows, joined.schema)
-            if rows
-            else spark.createDataFrame([], joined.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, joined.schema)
 
 
 @query(
@@ -435,12 +401,8 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_tableview(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="stv_")
     view_schema = "key string, last_seq long, n_updates long"
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 300)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         upsert, state = _versioned_view(
@@ -461,13 +423,7 @@ def streaming_tableview(spark: SparkSession, sf_dir: str) -> DataFrame:
             [None, lambda: _append_range(spark, sf_dir, tp, 300, 400)],
             upsert,
         )
-        if state["path"] is None:
-            return spark.createDataFrame([], view_schema)
-        # materialize before the tmpdir is removed
-        rows = spark.read.parquet(state["path"]).collect()
-        return spark.createDataFrame(rows, view_schema) if rows else spark.createDataFrame([], view_schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return _view_frame(spark, state, view_schema)
 
 
 @query(
@@ -492,12 +448,8 @@ def streaming_tableview(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="stk_")
     view_schema = "event_type string, cnt long"
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 300)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         upsert, state = _versioned_view(
@@ -514,17 +466,11 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             [None, lambda: _append_range(spark, sf_dir, tp, 300, 400)],
             upsert,
         )
-        if state["path"] is None:
-            return spark.createDataFrame([], view_schema)
-        rows = (
-            spark.read.parquet(state["path"])
+        return (
+            _view_frame(spark, state, view_schema)
             .orderBy(F.desc("cnt"), F.asc("event_type"))
             .limit(3)
-            .collect()
         )
-        return spark.createDataFrame(rows, view_schema) if rows else spark.createDataFrame([], view_schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -546,11 +492,7 @@ def streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="sse_")
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 300)
         # static dimension: tier per key, spanning EVERY key the fixture can
         # produce (a hardcoded 1000 silently dropped keys ≥ 1000 via the
@@ -573,13 +515,7 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             root + "/ck",
             [None, lambda: _append_range(spark, sf_dir, tp, 300, 400)],
         )
-        return (
-            spark.createDataFrame(rows, enriched.schema)
-            if rows
-            else spark.createDataFrame([], enriched.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, enriched.schema)
 
 
 def _append_watermark_sentinel(spark: SparkSession, tp: str, advance_hours: int) -> None:
@@ -639,11 +575,7 @@ def _append_watermark_sentinel(spark: SparkSession, tp: str, advance_hours: int)
     """,
 )
 def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="sloj_")
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 1200)
         # anything at/after this instant is a sentinel, not business data
         thr = T.read_topic(spark, tp).agg(F.max("event_time")).collect()[0][0]
@@ -692,13 +624,7 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda: _append_watermark_sentinel(spark, tp, 20),
             ],
         )
-        return (
-            spark.createDataFrame(rows, joined.schema)
-            if rows
-            else spark.createDataFrame([], joined.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, joined.schema)
 
 
 @query(
@@ -728,14 +654,11 @@ def streaming_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_late_side_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
     from pulsar_3_2_codedump_spark.streaming.replicator import (
         windowed_with_late_side_output,
     )
 
-    register(spark)
-    root = tempfile.mkdtemp(prefix="slst_")
-    try:
+    with scratch_root(spark) as root:
         tp = T.create_topic(root, "src", n_partitions=2)
         late_tp = T.create_topic(root, "late", n_partitions=2)
         agg_tp = T.create_topic(root, "agg", n_partitions=2)
@@ -766,13 +689,7 @@ def streaming_late_side_topic(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize before the temp topic is removed (lazy plan would
         # otherwise read deleted files at the caller's collect)
         rows = late.collect()
-        return (
-            spark.createDataFrame(rows, late.schema)
-            if rows
-            else spark.createDataFrame([], late.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, late.schema)
 
 
 GAP_DROP_MOD, GAP_DROP_AT, GAP_CUT = 97, 13, 110
@@ -822,9 +739,6 @@ def streaming_sequence_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFram
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
     out_schema = StructType(
         [
             StructField("producer_name", StringType()),
@@ -847,8 +761,7 @@ def streaming_sequence_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFram
         state.update((last,))
         yield pd.DataFrame(gaps, columns=["producer_name", "gap_start", "gap_end"])
 
-    root = tempfile.mkdtemp(prefix="sgap_")
-    try:
+    with scratch_root(spark) as root:
         # per-producer DENSE renumbering with injected drops
         env = wrap_events(load(spark, sf_dir, "events")).filter(
             F.col("sequence_id") < 1500
@@ -880,13 +793,7 @@ def streaming_sequence_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFram
             spark, dense.filter(F.col("sequence_id") > GAP_CUT), tp
         )
         rows = _run_bounded(gaps, root + "/ck", [None, grow])
-        return (
-            spark.createDataFrame(rows, out_schema)
-            if rows
-            else spark.createDataFrame([], out_schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, out_schema)
 
 
 @query(
@@ -914,11 +821,7 @@ def streaming_sequence_gap_monitor(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="sfoj_")
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 1200)
         thr = T.read_topic(spark, tp).agg(F.max("event_time")).collect()[0][0]
 
@@ -961,13 +864,7 @@ def streaming_full_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lambda: _append_watermark_sentinel(spark, tp, 20),
             ],
         )
-        return (
-            spark.createDataFrame(rows, joined.schema)
-            if rows
-            else spark.createDataFrame([], joined.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, joined.schema)
 
 
 CHUNK_DOCS = 150  # doc_id < CHUNK_DOCS feed the chunked topic
@@ -1008,9 +905,7 @@ def streaming_chunk_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from pulsar_3_2_codedump_spark.envelope import chunk_payloads
-    from pulsar_3_2_codedump_spark.sources import register
 
-    register(spark)
     out_schema = StructType(
         [
             StructField("uuid", StringType()),
@@ -1053,8 +948,7 @@ def streaming_chunk_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
             state.update((ids, chunks))
             yield pd.DataFrame([], columns=["uuid", "n_chunks", "payload_len", "payload_md5"])
 
-    root = tempfile.mkdtemp(prefix="schunk_")
-    try:
+    with scratch_root(spark) as root:
         docs = (
             load(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < CHUNK_DOCS)
@@ -1112,13 +1006,7 @@ def streaming_chunk_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, env.filter(last_of_third), tp, dedup=False
         )
         rows = _run_bounded(done, root + "/ck", [None, grow])
-        return (
-            spark.createDataFrame(rows, out_schema)
-            if rows
-            else spark.createDataFrame([], out_schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, out_schema)
 
 
 @query(
@@ -1141,11 +1029,7 @@ def streaming_chunk_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_multi_topic_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="smtu_")
-    try:
+    with scratch_root(spark) as root:
         tp_a = T.create_topic(root, "a", n_partitions=2)
         tp_b = T.create_topic(root, "b", n_partitions=2)
         _append_range(spark, sf_dir, tp_a, 0, 500)
@@ -1166,13 +1050,7 @@ def streaming_multi_topic_union(spark: SparkSession, sf_dir: str) -> DataFrame:
             _append_range(spark, sf_dir, tp_b, 1200, 1400)
 
         rows = _run_bounded(unioned, root + "/ck", [None, grow])
-        return (
-            spark.createDataFrame(rows, unioned.schema)
-            if rows
-            else spark.createDataFrame([], unioned.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, unioned.schema)
 
 
 ENC_STREAM_DOCS = 150  # doc_id < ENC_STREAM_DOCS feed the encrypted topic
@@ -1205,9 +1083,7 @@ def streaming_encrypted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         decrypt_at_scan,
         encrypt_at_append,
     )
-    from pulsar_3_2_codedump_spark.sources import register
 
-    register(spark)
     keys = {"stream-key": bytes(range(100, 132))}
 
     def append_docs(tp, lo, hi):
@@ -1226,8 +1102,7 @@ def streaming_encrypted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         enc = encrypt_at_append(docs, ["stream-key"], CryptoKeyReader(keys))
         T.append(spark, enc, tp)
 
-    root = tempfile.mkdtemp(prefix="sencs_")
-    try:
+    with scratch_root(spark) as root:
         tp = T.create_topic(root, "enc", n_partitions=2)
         append_docs(tp, 0, 100)
         stream = spark.readStream.format("pulsarlike").option("path", tp).load()
@@ -1241,13 +1116,7 @@ def streaming_encrypted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows = _run_bounded(
             out, root + "/ck", [None, lambda: append_docs(tp, 100, ENC_STREAM_DOCS)]
         )
-        return (
-            spark.createDataFrame(rows, out.schema)
-            if rows
-            else spark.createDataFrame([], out.schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, rows, out.schema)
 
 
 @query(
@@ -1284,12 +1153,8 @@ def streaming_encrypted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="spm_")
     view_schema = "event_type string, n_ref long, n_cur long"
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 300)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         upsert, state = _versioned_view(
@@ -1316,10 +1181,7 @@ def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             [None, lambda: _append_range(spark, sf_dir, tp, 300, 400)],
             upsert,
         )
-        if state["path"] is None:
-            return spark.createDataFrame([], view_schema)
-        rows = spark.read.parquet(state["path"]).collect()
-        cat = spark.createDataFrame(rows, view_schema)
+        cat = _view_frame(spark, state, view_schema)
         tot = cat.agg(
             F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
         )
@@ -1334,8 +1196,6 @@ def streaming_psi_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round((p_cur - p_ref) * F.log(p_cur / p_ref), 6),
             ).alias("psi_term"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 @query(
@@ -1386,12 +1246,9 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         HLL_M,
         HLL_RHO_MAX,
     )
-    from pulsar_3_2_codedump_spark.sources import register
 
-    register(spark)
-    root = tempfile.mkdtemp(prefix="shll_")
     view_schema = "event_type string, bucket long, rho int"
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, 300)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         hv = F.expr("CAST(conv(substr(md5(key), 1, 13), 16, 10) AS BIGINT)")
@@ -1425,13 +1282,7 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             [None, lambda: _append_range(spark, sf_dir, tp, 300, 400)],
             upsert,
         )
-        if state["path"] is None:
-            return spark.createDataFrame(
-                [], "event_type string, n_registers long, hll_estimate double"
-            )
-        rows = spark.read.parquet(state["path"]).collect()
-        reg = spark.createDataFrame(rows, view_schema)
-        est = reg.groupBy("event_type").agg(
+        est = _view_frame(spark, state, view_schema).groupBy("event_type").agg(
             F.count(F.lit(1)).cast("long").alias("n_registers"),
             (
                 F.sum(
@@ -1448,14 +1299,9 @@ def streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             (raw <= 2.5 * HLL_M) & (F.col("zeros") > 0),
             F.lit(HLL_M) * F.log(F.lit(float(HLL_M)) / F.col("zeros")),
         ).otherwise(raw)
-        out = est.select(
+        return est.select(
             "event_type", "n_registers", F.round(corrected, 4).alias("hll_estimate")
-        ).collect()
-        return spark.createDataFrame(
-            out, "event_type string, n_registers long, hll_estimate double"
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # --- streaming CUSUM change-point monitor (VERDICT r8 directive #7) --------
@@ -1608,10 +1454,6 @@ def _cusum_merge(u: DataFrame) -> DataFrame:
     """,
 )
 def streaming_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="sca_")
     view_schema = (
         "event_type string, kind string, bucket long, "
         "v1 long, v2 long, v3 long, v4 long, v5 long"
@@ -1641,7 +1483,7 @@ def streaming_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return opens, carry, kdf
 
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, CUSUM_REF_HI)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         upsert, state = _versioned_view(
@@ -1658,7 +1500,7 @@ def streaming_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
         # generation 1: the reference range accrues as open bucket counts
         _run_bounded_foreach(src, root + "/ck", [None], upsert)
         if state["path"] is None:
-            return spark.createDataFrame([], out_schema)
+            return T.lookup_frame(spark, [], out_schema)
 
         # generation-1 commit: freeze the allowance k from the reference
         # buckets, retire every closed bucket (all but each type's max —
@@ -1727,9 +1569,7 @@ def streaming_cusum_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # materialize before the temp view dirs are removed
         )
-        return spark.createDataFrame(out, out_schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, out, out_schema)
 
 
 TDM_REF_HI = 150   # reference window: doc_id < 150 (frozen after gen 1)
@@ -1805,10 +1645,6 @@ TDM_BAND = 0.2     # alarm when tokens/doc drifts beyond ±20% of reference
     """,
 )
 def streaming_token_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="stdm_")
     view_schema = (
         "source string, n_ref long, tok_ref long, ch_ref long, "
         "n_cur long, tok_cur long, ch_cur long"
@@ -1833,7 +1669,7 @@ def streaming_token_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         T.append(spark, docs, tp)
 
-    try:
+    with scratch_root(spark) as root:
         tp = T.create_topic(root, "docs", n_partitions=2)
         append_docs(tp, 0, 300)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
@@ -1873,17 +1709,7 @@ def streaming_token_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
             [None, lambda: append_docs(tp, 300, TDM_DOCS)],
             upsert,
         )
-        if state["path"] is None:
-            out_schema = (
-                "source string, n_ref long, n_cur long, tok_ref long, "
-                "tok_cur long, ref_tokens_per_doc double, "
-                "cur_tokens_per_doc double, ref_chars_per_token double, "
-                "cur_chars_per_token double, drift_ratio double, "
-                "alarm boolean"
-            )
-            return spark.createDataFrame([], out_schema)
-        rows = spark.read.parquet(state["path"]).collect()
-        cat = spark.createDataFrame(rows, view_schema)
+        cat = _view_frame(spark, state, view_schema)
         ref_tpd = F.col("tok_ref").cast("double") / F.col("n_ref")
         cur_tpd = F.col("tok_cur").cast("double") / F.col("n_cur")
         drift = F.round(cur_tpd / ref_tpd, 4)
@@ -1915,8 +1741,6 @@ def streaming_token_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame
                 ok, ~drift.between(F.lit(1 - TDM_BAND), F.lit(1 + TDM_BAND))
             ).alias("alarm"),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 WSR_HI = 2000  # replayed sequence range (bounded runtime; gen split at half)
@@ -1968,12 +1792,8 @@ WSR_HI = 2000  # replayed sequence range (bounded runtime; gen split at half)
 def streaming_watermark_skew_rebalance(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="swsr_")
     view_schema = "producer_name string, n long, frontier_us long"
-    try:
+    with scratch_root(spark) as root:
         tp = _replay_topic(spark, sf_dir, root, 0, WSR_HI // 2)
         src = spark.readStream.format("pulsarlike").option("path", tp).load()
         upsert, state = _versioned_view(
@@ -1994,15 +1814,7 @@ def streaming_watermark_skew_rebalance(
             [None, lambda: _append_range(spark, sf_dir, tp, WSR_HI // 2, WSR_HI)],
             upsert,
         )
-        out_schema = (
-            "producer_name string, n_events long, frontier_us long, "
-            "lag_us long, defines_watermark boolean, load_bp long, "
-            "rebalance_splits long"
-        )
-        if state["path"] is None:
-            return spark.createDataFrame([], out_schema)
-        rows = spark.read.parquet(state["path"]).collect()
-        st = spark.createDataFrame(rows, view_schema)
+        st = _view_frame(spark, state, view_schema)
         g = st.agg(
             F.max("frontier_us").alias("gmax"),
             F.min("frontier_us").alias("gmin"),
@@ -2020,8 +1832,6 @@ def streaming_watermark_skew_rebalance(
                 "rebalance_splits"
             ),
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 # --------------------------------------------------------------------------
@@ -2067,11 +1877,7 @@ EOS_TOTAL = 400     # generation 2 appends [250, 400)
     """,
 )
 def streaming_exactly_once_sink_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    root = tempfile.mkdtemp(prefix="eos_")
-    try:
+    with scratch_root(spark) as root:
         in_tp = _replay_topic(spark, sf_dir, root + "/in", 0, EOS_GEN1_HI)
         out_tp = T.create_topic(root + "/out", "sink", n_partitions=8)
         src = spark.readStream.format("pulsarlike").option("path", in_tp).load()
@@ -2121,10 +1927,7 @@ def streaming_exactly_once_sink_commit(spark: SparkSession, sf_dir: str) -> Data
                 ).cast("long").alias("payload_md5_sum"),
             )
         )
-        rows = out.collect()  # 8 rows — materialize before cleanup
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, out.collect(), out.schema)  # 8 rows
 
 
 @query(
@@ -2199,16 +2002,13 @@ def streaming_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFra
         doc_trigrams,
         overlap_span_stats,
     )
-    from pulsar_3_2_codedump_spark.sources import register
 
-    register(spark)
     half = SB_SCORE_DOCS // 2
     out_schema = (
         "doc_id long, gen int, n_tri long, n_hit long, max_run long, "
         "matched_span_tokens long, overlap_ratio double"
     )
-    root = tempfile.mkdtemp(prefix="scontam_")
-    try:
+    with scratch_root(spark) as root:
         docs = load(spark, sf_dir, "documents")
         # the fixed reference: even-doc trigram set, persisted once —
         # every micro-batch joins against these blocks (stream-static)
@@ -2270,13 +2070,7 @@ def streaming_contamination_monitor(spark: SparkSession, sf_dir: str) -> DataFra
             T.append(spark, env.filter(F.col("key").cast("long") >= half), tp)
 
         _run_bounded_foreach(src, root + "/ck", [gen1, gen2], score)
-        return (
-            spark.createDataFrame(out, out_schema)
-            if out
-            else spark.createDataFrame([], out_schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, out, out_schema)
 
 
 ANN_SERVE_K = 5  # neighbors returned per arriving query
@@ -2348,12 +2142,9 @@ def streaming_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         dot,
         l2_norm,
     )
-    from pulsar_3_2_codedump_spark.sources import register
 
-    register(spark)
     out_schema = "query_id long, gen int, rnk long, neighbor_id long"
-    root = tempfile.mkdtemp(prefix="sann_")
-    try:
+    with scratch_root(spark) as root:
         emb = load(spark, sf_dir, "embeddings")
         cells = _ivf_cells(emb)
         # the static serving index: corpus vectors + their coarse cell +
@@ -2447,13 +2238,7 @@ def streaming_ann_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.append(spark, qenv(F.col("vec_id") % 100 == 50, "qsrc-g2"), tp)
 
         _run_bounded_foreach(src, root + "/ck", [gen1, gen2], serve)
-        return (
-            spark.createDataFrame(out, out_schema)
-            if out
-            else spark.createDataFrame([], out_schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return T.lookup_frame(spark, out, out_schema)
 
 
 MINHASH_IVM_DOCS = 400       # doc_id bound of the maintained corpus slice
@@ -2520,13 +2305,10 @@ def streaming_minhash_signature_ivm(spark: SparkSession, sf_dir: str) -> DataFra
         minhash_signature,
         shingles,
     )
-    from pulsar_3_2_codedump_spark.sources import register
 
-    register(spark)
     hcols = ", ".join(f"h{j} long" for j in range(N_HASHES))
     view_schema = f"doc_id long, ver long, {hcols}"
-    root = tempfile.mkdtemp(prefix="smivm_")
-    try:
+    with scratch_root(spark) as root:
         docs = load(spark, sf_dir, "documents").filter(
             F.col("doc_id") < MINHASH_IVM_DOCS
         )
@@ -2590,13 +2372,4 @@ def streaming_minhash_signature_ivm(spark: SparkSession, sf_dir: str) -> DataFra
             T.append(spark, denv(upd, "docsrc-g2"), tp)
 
         _run_bounded_foreach(src, root + "/ck", [None, gen2], upsert)
-        if state["path"] is None:
-            return spark.createDataFrame([], view_schema)
-        rows = spark.read.parquet(state["path"]).collect()
-        return (
-            spark.createDataFrame(rows, view_schema)
-            if rows
-            else spark.createDataFrame([], view_schema)
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        return _view_frame(spark, state, view_schema)

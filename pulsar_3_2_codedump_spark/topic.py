@@ -53,17 +53,25 @@ MANIFEST = "manifest.json"
 
 
 def lookup_frame(spark: SparkSession, rows: list, schema: StructType | str) -> DataFrame:
-    """A small driver-side frame (offset bounds, cursor metadata, an empty
-    envelope) built from a pyarrow table, which Spark plans as a
+    """A small driver-side frame (offset bounds, constant tables, the rows a
+    query collected) built from a pyarrow table, which Spark plans as a
     ``LocalRelation`` scanned in the JVM. ``createDataFrame`` of
     a Python list instead plans a ``PythonRDD``: every evaluation runs one
     Python-worker task per slice, each with a fixed cost (about 0.05 CPU-s
     on a 4-CPU host, see ``worker_daemon``) far above the cost of its few
-    rows."""
+    rows.
+
+    ``rows`` (tuples or collected ``Row``s, possibly none) are read as
+    ``createDataFrame`` reads them: ``schema.toInternal`` turns a naive
+    datetime, which is what ``collect()`` returns, into an instant in the
+    process's local time zone before pyarrow sees it. A struct column with a
+    non-nullable timestamp field is not supported: Spark's arrow conversion
+    cannot cast to it."""
     if isinstance(schema, str):
         schema = DataType.fromDDL(schema)
     table = pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+        [dict(zip(schema.names, schema.toInternal(r))) for r in rows],
+        schema=to_arrow_schema(schema),
     )
     return spark.createDataFrame(table)
 

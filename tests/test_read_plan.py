@@ -1,7 +1,12 @@
 """Python-worker tasks the log's own plumbing plans: the driver-side lookup
-frames (``topic.lookup_frame``) and the ``pulsarlike`` readers' shared task
+frames (``topic.lookup_frame``), the registered queries that return them
+from a ``queries.scratch_root``, and the ``pulsarlike`` readers' shared task
 planner (``plan_tasks``)."""
 
+import os
+import time
+
+import pytest
 from pyspark.sql import functions as F
 
 from pulsar_3_2_codedump_spark import topic as T
@@ -77,6 +82,54 @@ def test_marker_frames_run_no_python_worker(spark):
         "__txn:t1", None, {"txn_id": "t1"}, MARKER_TXN_COMMIT
     )
     assert row["publish_time"] is not None
+
+
+def test_lookup_frame_reads_collected_timestamps_as_create_data_frame(spark):
+    # collect() returns naive datetimes in the process's local time zone;
+    # a lookup frame of those rows must hold the same instants
+    src = spark.sql(
+        "SELECT timestamp'2024-01-01 12:00:00' AS t, date'2024-01-02' AS d, "
+        "map('a', timestamp'2024-01-01 12:00:00') AS m"
+    )
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        rows = src.collect()
+        want = spark.createDataFrame(rows, src.schema).collect()
+        got = T.lookup_frame(spark, rows, src.schema).collect()
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert got == want == rows
+
+
+def test_query_results_run_no_python_worker(spark):
+    from pulsar_3_2_codedump_spark.queries import load_all
+
+    registry = load_all()
+    for name in (
+        "streaming_count_windows",
+        "exactly_once_replay_audit",
+        "range_join_price_bands",
+    ):
+        df = registry[name].fn(spark, SF_DIR)
+        assert not _python_rdds(df), name
+        assert df.count() > 0, name
+
+
+def test_scratch_root_is_removed_when_the_body_raises(spark):
+    from pulsar_3_2_codedump_spark.queries import scratch_root
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with scratch_root(spark) as root:
+            T.create_topic(root, "t", n_partitions=1)
+            assert os.path.isdir(root)
+            raise RuntimeError("boom")
+    assert not os.path.exists(root)
 
 
 def _multi_partition_topic(spark, tmp_root, n_appends=3):

@@ -241,3 +241,38 @@ def test_named_cursor_not_rewritten_when_unchanged(spark, tmp_root):
         assert {p: c["read"] for p, c in json.load(f).items()} == {
             p: int(e) for p, e in ends.items()
         }
+
+
+def test_capped_reader_resumes_from_checkpoint_after_restart(spark, tmp_root):
+    """A capped reader with no named subscription, restarted from its
+    checkpoint, counts its cap from the checkpointed end: every run
+    delivers new rows, within the cap, and no row twice."""
+    import os
+
+    tp = T.create_topic(tmp_root, "capped", n_partitions=2)
+    env = wrap_events(load(spark, SF_DIR, "events")).drop("partition", "offset")
+    T.append(spark, env.filter(F.col("sequence_id") < 400), tp)
+    ck = os.path.join(tmp_root, "capped_ck")
+    seen: list = []
+
+    def run(cap):
+        q = (
+            spark.readStream.format("pulsarlike").option("path", tp)
+            .option("maxRecordsPerTrigger", str(cap)).load()
+            .select("partition", "offset")
+            .writeStream.foreachBatch(lambda b, _id: seen.extend(map(tuple, b.collect())))
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(120)
+
+    run(1000)
+    assert len(seen) == 400
+    T.append(spark, env.filter(F.col("sequence_id").between(400, 599)), tp)
+    for _ in range(6):
+        before = len(seen)
+        run(50)
+        assert 0 < len(seen) - before <= 2 * 50
+        if len(seen) == 600:
+            break
+    assert len(seen) == len(set(seen)) == 600

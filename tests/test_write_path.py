@@ -158,6 +158,37 @@ def test_sink_replay_tokens_stay_bounded(spark, tmp_root):
     _check_log(spark, tp, n)
 
 
+def test_two_sinks_on_one_topic_keep_their_own_replay_tokens(spark, tmp_root):
+    """Two stream copies into one topic, each with its own checkpoint and
+    no ``sinkId``: both land all their rows, and a replayed batch of one of
+    them (its checkpoint commit lost) is a no-op."""
+    dst = T.create_topic(tmp_root, "dst", n_partitions=2)
+    copies = {}
+    for name, n in (("a", 100), ("b", 50)):
+        src = T.create_topic(tmp_root, name, n_partitions=2)
+        T.append(spark, _frame(spark, 0, n, name), src)
+        copies[name] = (src, os.path.join(tmp_root, f"ck_{name}"))
+
+    def copy(name):
+        src, ck = copies[name]
+        q = (
+            spark.readStream.format("pulsarlike").option("path", src).load()
+            .writeStream.format("pulsarlike").option("path", dst)
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True).start()
+        )
+        q.awaitTermination(180)
+
+    copy("a")
+    copy("b")
+    _check_log(spark, dst, 150)
+    commits = os.path.join(copies["b"][1], "commits")
+    for f in os.listdir(commits):
+        os.remove(os.path.join(commits, f))
+    copy("b")  # re-runs batch 0 from the offset log
+    _check_log(spark, dst, 150)
+
+
 def test_every_writer_leaves_one_segment_shape(spark, tmp_root):
     src = T.create_topic(tmp_root, "src", n_partitions=2)
     T.append(spark, _frame(spark, 100, 160, "s"), src)
