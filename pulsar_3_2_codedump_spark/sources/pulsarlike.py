@@ -47,7 +47,6 @@ boundary (no per-row serde); segment pruning happens before any file IO.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import uuid
@@ -384,7 +383,9 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
     (``subscriptions.subscription_cursor_path``), the broker-side
     subscription state of the reference (PersistentSubscription +
     ManagedCursorImpl:131): ``latestOffset`` advances its read position and
-    ``commit`` acks cumulatively.
+    ``commit`` acks cumulatively. The read position never sets where a
+    stream starts or where its cap counts from; Spark's checkpoint does, so
+    a new checkpoint on an existing subscription starts at ``initialOffset``.
     """
 
     def __init__(self, options):
@@ -418,11 +419,7 @@ class PulsarLikeStreamReader(_SegmentScanMixin, DataSourceStreamReader):
         max_rec = self.options.get("maxrecordspertrigger")
         if max_rec:
             cap = int(max_rec)
-            cur = (
-                getattr(self, "_last_end", None)
-                or (self._cursor and S.read_position(self._cursor))
-                or self.initialOffset()
-            )
+            cur = getattr(self, "_last_end", None) or self.initialOffset()
             ends = {p: min(e, cur.get(p, 0) + cap) for p, e in ends.items()}
         self._last_end = ends
         if self._cursor:
@@ -521,9 +518,7 @@ class PulsarLikeStreamWriter(DataSourceStreamWriter):
         # be treated as each other's replays. The sink is option("sinkId")
         # or else its query's checkpoint, which a restart keeps.
         ckpt = self.options.get("checkpointlocation")
-        sink = self.options.get("sinkid") or (
-            hashlib.md5(ckpt.encode()).hexdigest()[:10] if ckpt else ""
-        )
+        sink = self.options.get("sinkid") or (T.checkpoint_writer_id(ckpt) if ckpt else "")
         self._commit(messages, f"stream:{sink}:{batchId}")
 
     def _commit(self, messages, token: str | None) -> None:

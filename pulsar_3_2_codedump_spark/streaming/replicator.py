@@ -26,7 +26,6 @@ append is a no-op, restoring exactly-once per destination
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -38,8 +37,7 @@ def _token(checkpoint: str, tag: str, batch_id: int) -> str:
     """Replay-stable idempotency token for one logical foreachBatch write:
     same (checkpoint, tag, batch id) → same token, so a replayed batch after
     a crash-before-checkpoint-commit is skipped by topic.append."""
-    h = hashlib.md5(checkpoint.encode()).hexdigest()[:10]
-    return f"{h}:{tag}:{batch_id}"
+    return f"{T.checkpoint_writer_id(checkpoint)}:{tag}:{batch_id}"
 
 
 def replicate(

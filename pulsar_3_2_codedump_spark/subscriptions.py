@@ -390,12 +390,12 @@ def advance_read(path: str, pos: dict) -> None:
     The ``pulsarlike`` stream source calls this when it plans a micro-batch
     (``latestOffset``) under a named ``subscription``: the read position is
     how far the subscription has been planned, the broker cursor's read
-    position. A capped reader on a new checkpoint counts its first cap from
-    it. (A restarted query needs no durable copy: Spark hands the reader its
-    checkpointed end through ``partitions``.) The position is stored at
-    planning time because under Trigger.AvailableNow a run executes one
-    batch and stops before the lazy source commit (which Spark issues at the
-    NEXT batch's construction) ever fires.
+    position, as stats and expiry see it. The reader does not resume from
+    it: Spark's checkpoint sets where a stream starts, and a restarted query
+    learns its checkpointed end through ``partitions``. The position is
+    stored at planning time because under Trigger.AvailableNow a run
+    executes one batch and stops before the lazy source commit (which Spark
+    issues at the NEXT batch's construction) ever fires.
 
     An unchanged position is not rewritten: Spark polls ``latestOffset``
     after every empty trigger, and an idle cursor must age for

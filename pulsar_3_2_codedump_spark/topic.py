@@ -34,6 +34,7 @@ store path; atomic-rename becomes a conditional-put of the manifest object.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -552,6 +553,19 @@ def _commit_segments(topic_path: str, stage, batch_token: str | None = None) -> 
     finally:
         shutil.rmtree(stage_dir, ignore_errors=True)
     return new_ends
+
+
+def checkpoint_writer_id(checkpoint: str) -> str:
+    """A streaming writer's replay identity: a hash of its query's
+    checkpoint location, which a restart keeps. The location is normalised
+    first (no ``file:`` scheme, absolute, no trailing ``/``), so every
+    spelling of one checkpoint names the same writer and a batch replayed
+    under another spelling is still recognised by ``_commit_segments``."""
+    if checkpoint.startswith("file:"):
+        checkpoint = checkpoint[len("file:"):]
+        if checkpoint.startswith("//"):  # file:///x is the local path /x
+            checkpoint = "/" + checkpoint.lstrip("/")
+    return hashlib.md5(os.path.abspath(checkpoint).encode()).hexdigest()[:10]
 
 
 def read_topic(

@@ -276,3 +276,19 @@ def test_capped_reader_resumes_from_checkpoint_after_restart(spark, tmp_root):
         if len(seen) == 600:
             break
     assert len(seen) == len(set(seen)) == 600
+
+
+def test_new_checkpoint_on_a_subscription_starts_within_the_cap(spark, tmp_root):
+    """A subscription's read position does not set where a stream starts: a
+    new checkpoint on a subscription that has planned the whole topic plans
+    its first batch from ``initialOffset``, within maxRecordsPerTrigger."""
+    from pulsar_3_2_codedump_spark.sources.pulsarlike import PulsarLikeStreamReader
+
+    tp = _make_topic(spark, tmp_root, parts=2)
+    PulsarLikeStreamReader({"path": tp, "subscription": "s"}).latestOffset()
+    reader = PulsarLikeStreamReader(
+        {"path": tp, "subscription": "s", "maxrecordspertrigger": "50"}
+    )
+    start = reader.initialOffset()
+    end = reader.latestOffset()
+    assert all(0 < end[p] - start[p] <= 50 for p in start)

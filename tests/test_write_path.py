@@ -189,6 +189,16 @@ def test_two_sinks_on_one_topic_keep_their_own_replay_tokens(spark, tmp_root):
     _check_log(spark, dst, 150)
 
 
+def test_checkpoint_writer_id_ignores_the_spelling(tmp_root, monkeypatch):
+    """One checkpoint under any spelling names one writer, so a batch
+    replayed after a restart under another spelling is still a replay."""
+    monkeypatch.chdir(tmp_root)
+    ck = os.path.join(tmp_root, "ck")
+    spellings = (ck, ck + "/", "ck", "./ck/", "file:" + ck, "file://" + ck)
+    assert len({T.checkpoint_writer_id(s) for s in spellings}) == 1
+    assert T.checkpoint_writer_id(ck) != T.checkpoint_writer_id(ck + "2")
+
+
 def test_every_writer_leaves_one_segment_shape(spark, tmp_root):
     src = T.create_topic(tmp_root, "src", n_partitions=2)
     T.append(spark, _frame(spark, 100, 160, "s"), src)
