@@ -18,8 +18,6 @@ operators/routing.md5_hash32 note on murmur3/xxhash64 substitution).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from pulsar_3_2_codedump_spark.catalog import fanout, load
@@ -209,9 +207,6 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     global _LAST_SIG
     if _LAST_SIG is not None:
         _LAST_SIG.unpersist(blocking=True)
-    from pulsar_3_2_codedump_spark.catalog import record_plan_only_materialization
-
-    record_plan_only_materialization(sig)
     # LAZY persist (r16): the eager count() paid a full extra
     # shingle+md5 pass as its own job just to pre-fill the cache; under
     # the single main action the four sig consumers populate and share
@@ -382,32 +377,20 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     # Driver-side loop with a per-round convergence scalar — the canonical
     # Spark shape for iterative graph algorithms (each round is ONE shuffle
     # join + ONE min-agg; localCheckpoint cuts the growing lineage).
-    # Under SPARK_GRAFT_PLAN_ONLY the convergence count() is an action the
-    # planning sweeps must not run: build exactly ONE round (every round
-    # has the identical join+agg topology, so one round IS the plan under
-    # audit) with the label frame cut to a schema-preserving leaf.
-    import os
-
-    plan_only = bool(os.environ.get("SPARK_GRAFT_PLAN_ONLY"))
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
-    for _ in range(1 if plan_only else 32):
+    for _ in range(32):
         nbr = (
             sym.join(lab.withColumnRenamed("doc_id", "src"), "src")
             .groupBy(F.col("dst").alias("doc_id"))
             .agg(F.min("label").alias("nbr_min"))
         )
-        new_lab = ckpt_unless_plan_only(
+        new_lab = (
             lab.join(nbr, "doc_id", "left")
             .select(
                 "doc_id",
                 F.least(F.col("label"), F.coalesce("nbr_min", F.col("label"))).alias("label"),
-            ),
-            cut_plan_only=True,
+            )
+            .localCheckpoint()
         )
-        if plan_only:
-            lab = new_lab
-            break
         changed = (
             new_lab.alias("n")
             .join(lab.alias("o"), "doc_id")
@@ -1052,9 +1035,6 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = sh.withColumn("hs", base_hashes(F.col("sh"))).select(
         "doc_id", "sh", *minhash_signature(F.col("hs"))
     ).persist()
-    from pulsar_3_2_codedump_spark.catalog import record_plan_only_materialization
-
-    record_plan_only_materialization(sig)
     # lazy persist (r16) — same reasoning as minhash_lsh_dedup: the eager
     # count was a guaranteed extra md5 pass; the consumers fill the cache
     _LAST_SIG = sig
@@ -1741,20 +1721,7 @@ _D_ESD_LCP = (
     """,
 )
 def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    # SPARK_GRAFT_ESD_NO_PROBE: planning-only sweeps (the flip audit) set
-    # this to keep the registry pass plan-only — the gate's census probe is
-    # a driver-side Spark action, and with the probe off the plan is the
-    # common-profile cold plan the audit should judge anyway.
-    thr = (
-        None
-        if os.environ.get("SPARK_GRAFT_ESD_NO_PROBE")
-        else ESD_ESCALATE
-    )
-    return exact_substring_stats(
-        fanout(load(spark, sf_dir, "documents")), escalate_threshold=thr
-    )
+    return exact_substring_stats(fanout(load(spark, sf_dir, "documents")))
 
 
 def exact_substring_stats(
@@ -1795,8 +1762,7 @@ def exact_substring_stats(
     when the gate finds nothing (every real-text profile) the plan IS the
     r11 plan; the only common-profile cost is the doc-sampled probe
     (~probe_fraction of one expansion pass). escalate_threshold=None
-    disables the gate entirely (and SPARK_GRAFT_ESD_NO_PROBE does so for
-    the registered query, keeping planning-only sweeps action-free).
+    disables the gate entirely.
 
     The saturated column (ADVICE r11): max_dup_len is EXACT for
     saturated=false docs and an upper bound (length of the longest

@@ -175,11 +175,10 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = range_bucket(pv, "v", KS_BUCKETS)
     # one triangular carry join for BOTH running sums over the
     # metadata-scale (KS_BUCKETS-row, lineage-cut) partials frame
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
-    parts = ckpt_unless_plan_only(
-        b.groupBy("bucket").agg(F.sum("na").alias("pa"), F.sum("nb").alias("pb")),
-        cut_plan_only=True,
+    parts = (
+        b.groupBy("bucket")
+        .agg(F.sum("na").alias("pa"), F.sum("nb").alias("pb"))
+        .localCheckpoint()
     )
     carry = (
         parts.select(F.col("bucket").alias("__b"))
@@ -431,17 +430,14 @@ def bootstrap_median_replicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(CAST(conv(substr(md5(concat(CAST(o_orderkey AS STRING), '#', "
         "CAST(replicate AS STRING))), 1, 8), 16, 10) AS BIGINT) / 4294967296.0)"
     )
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
     # persist-before-reuse (r12 scan audit): pv is the (replicate x
     # distinct-value) weighted frame — every downstream pass (range-bucket
     # bounds, bucket partials, the triangular carry's two partials refs,
     # the in-bucket resolution) re-ran the corpus explode + Poisson weight
     # when left lazy (7 orders scans in the emitted plan). Checkpoint the
     # post-aggregation frame once: one corpus scan, and everything after
-    # operates on the B x NDV(v) reduction (cut_plan_only: the audited
-    # plan shows the product's one-scan topology).
-    pv = ckpt_unless_plan_only(
+    # operates on the B x NDV(v) reduction.
+    pv = (
         orders.select(
             "o_orderkey",
             F.col("o_totalprice").alias("v"),
@@ -450,8 +446,8 @@ def bootstrap_median_replicates(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("wt", F.expr(_pois_case_sql(u_sql)))
         .filter(F.col("wt") > 0)
         .groupBy("replicate", "v")
-        .agg(F.sum("wt").alias("na")),
-        cut_plan_only=True,
+        .agg(F.sum("wt").alias("na"))
+        .localCheckpoint()
     )
     b = range_bucket(pv, "v", 32)
     partials = b.groupBy("replicate", "bucket").agg(F.sum("na").alias("pn"))

@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pulsar_3_2_codedump_spark.catalog import (
-    ckpt_unless_plan_only,
     fanout,
     load,
     persist_shared_corpus_frame,
@@ -869,14 +868,14 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm(F.col("embedding")).alias("c_norm"),
     )
     wp = W.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("cand_id"))
-    pool = ckpt_unless_plan_only(
+    pool = (
         F.broadcast(q)
         .join(c, F.col("cand_id") != F.col("query_id"))
         .withColumn("rel", dot(F.col("q_emb"), F.col("c_emb")) / (F.col("q_norm") * F.col("c_norm")))
         .withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") <= MMR_POOL)
-        .select("query_id", "cand_id", "rel", "c_emb", "c_norm"),
-        cut_plan_only=True,  # |queries| x MMR_POOL bounded
+        .select("query_id", "cand_id", "rel", "c_emb", "c_norm")
+        .localCheckpoint()  # |queries| x MMR_POOL bounded
     )
     a = pool.select(
         "query_id", F.col("cand_id").alias("ca"), F.col("c_emb").alias("ea"),
@@ -894,13 +893,13 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))).alias("sim"),
         )
     )
-    sims = ckpt_unless_plan_only(sims, cut_plan_only=True)
+    sims = sims.localCheckpoint()
     cand = pool.select("query_id", "cand_id", "rel")
-    best = ckpt_unless_plan_only(
+    best = (
         cand.withColumn("rn", F.row_number().over(wp))
         .filter(F.col("rn") == 1)
-        .select("query_id", "cand_id", F.col("rel").alias("score")),
-        cut_plan_only=True,
+        .select("query_id", "cand_id", F.col("rel").alias("score"))
+        .localCheckpoint()
     )
     outs = [best.select("query_id", F.lit(1).alias("step"), "cand_id", "score")]
     selected = best.select("query_id", "cand_id")
@@ -925,7 +924,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("query_id", "cand_id", "score")
         )
-        pick = ckpt_unless_plan_only(pick, cut_plan_only=True)  # loop-carried
+        pick = pick.localCheckpoint()  # loop-carried
         outs.append(
             pick.select("query_id", F.lit(step).alias("step"), "cand_id", "score")
         )

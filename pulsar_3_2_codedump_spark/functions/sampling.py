@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from pulsar_3_2_codedump_spark.catalog import (
-    ckpt_unless_plan_only,
     load,
     persist_shared_corpus_frame,
 )
@@ -713,20 +712,20 @@ def greedy_coverage_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             cand = cand.join(covered, "tok", "left_anti")
         if selected is not None:
             cand = cand.join(selected, "doc_id", "left_anti")
-        best = ckpt_unless_plan_only(
+        best = (
             cand.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("marginal_gain"))
             .orderBy(F.desc("marginal_gain"), F.asc("doc_id"))
-            .limit(1),
-            cut_plan_only=True,  # loop-carried 1-row frame
+            .limit(1)
+            .localCheckpoint()  # loop-carried 1-row frame
         )
         outs.append(best.select(F.lit(step).alias("step"), "doc_id", "marginal_gain"))
         picked_toks = tok.join(F.broadcast(best.select("doc_id")), "doc_id").select("tok")
-        covered = ckpt_unless_plan_only(
+        covered = (
             (
                 picked_toks if covered is None else covered.unionByName(picked_toks)
-            ).distinct(),
-            cut_plan_only=True,  # loop-carried accumulator
+            ).distinct()
+            .localCheckpoint()  # loop-carried accumulator
         )
         sel = best.select("doc_id")
         selected = sel if selected is None else selected.unionByName(sel)

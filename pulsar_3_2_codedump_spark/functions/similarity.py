@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
-from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only, fanout, load
+from pulsar_3_2_codedump_spark.catalog import fanout, load
 from pulsar_3_2_codedump_spark.queries import query
 from pulsar_3_2_codedump_spark.topic import lookup_frame
 
@@ -1454,8 +1454,6 @@ def _ivf_cells(emb: DataFrame) -> DataFrame:
     but it materialized rows ON THE DRIVER inside a query path (§5);
     localCheckpoint keeps the blocks executor-local with identical rows,
     schema, and downstream plans."""
-    import os
-
     order = (F.md5(F.concat(F.lit("cell:"), F.col("vec_id").cast("string"))), F.col("vec_id"))
     cells = (
         emb.orderBy(*order)
@@ -1463,16 +1461,6 @@ def _ivf_cells(emb: DataFrame) -> DataFrame:
         .withColumn("cell_id", F.row_number().over(W.orderBy(*order)))
         .select("cell_id", F.col("embedding").alias("cent"))
     )
-    if os.environ.get("SPARK_GRAFT_PLAN_ONLY"):
-        # planning-only sweeps (the flip audit) must not run actions at
-        # construction; the lazy Limit-bounded subtree is the right frame
-        # for them to judge (identical rows, un-materialized). Record that
-        # this control-plane collect materializes an embeddings-rooted
-        # frame so the scan audit's per-table attribution sees it.
-        from pulsar_3_2_codedump_spark.catalog import record_plan_only_materialization
-
-        record_plan_only_materialization(cells)
-        return cells
     return cells.localCheckpoint()
 
 
@@ -1676,10 +1664,7 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # discipline). At 100 TB the faiss-style alternative is to train
     # the codebook on a bounded sample and encode in one pass; the
     # oracle-matched form trains on the full corpus, so it persists.
-    # Identity under PLAN_ONLY (default): the flip audit judges the full
-    # assignment lineage, as pinned by
-    # test_ivf_cells_materializes_once_and_plan_only_stays_lazy.
-    assigned = ckpt_unless_plan_only(assigned)
+    assigned = assigned.localCheckpoint()
     res = assigned.select("vec_id", "embedding")
     cb = pq_codebook(res, kernel="arrow")
     codes = pq_encode(fanout(res), cb, kernel="arrow")
@@ -1846,7 +1831,7 @@ def kmeans_lloyd_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         )
     )
-    cent1 = ckpt_unless_plan_only(cent1, cut_plan_only=True)  # k-bounded centroids
+    cent1 = cent1.localCheckpoint()  # k-bounded centroids
     a2 = assign(cent1)
     cs = cent1.select(
         "cluster_id",
@@ -1902,7 +1887,7 @@ def _pi_step(qdf: DataFrame, vdf: DataFrame) -> DataFrame:
     m = n.orderBy(F.desc(F.abs("n")), F.asc("pos")).limit(1).select(
         F.col("n").alias("m")
     )
-    return ckpt_unless_plan_only(
+    return (
         n.crossJoin(F.broadcast(m))
         .withColumn(
             "val",
@@ -1918,8 +1903,8 @@ def _pi_step(qdf: DataFrame, vdf: DataFrame) -> DataFrame:
                 F.array_sort(F.collect_list(F.struct("pos", "val"))),
                 lambda st: st["val"],
             ).alias("v")
-        ),
-        cut_plan_only=True,  # loop-carried 1-row vector frame
+        )
+        .localCheckpoint()  # loop-carried 1-row vector frame
     )
 
 
@@ -1990,11 +1975,11 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # v0 = all-ones at fixed-point scale; 1-row array frame (constant value,
     # so the limit(1) row choice is immaterial)
-    v = ckpt_unless_plan_only(
+    v = (
         qdf.limit(1).select(
             F.transform("q", lambda _: F.lit(PI_SCALE).cast("long")).alias("v")
-        ),
-        cut_plan_only=True,
+        )
+        .localCheckpoint()
     )
     vs = []
     for _ in range(PI_ITERS):
@@ -2778,8 +2763,6 @@ def _nn_descent_edges(av: DataFrame, cells: DataFrame) -> list[DataFrame]:
     shuffle per round and went superlinear (381 s vs 14 s at 20k); the
     id-only form keeps the candidate shuffles ~60x lighter. Every round
     is checkpointed (loop-carried n x M frame)."""
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
     wr = W.partitionBy("cell_id").orderBy("cd", "vec_id")
     ranked = (
         av.join(F.broadcast(cells), "cell_id")
@@ -2813,11 +2796,11 @@ def _nn_descent_edges(av: DataFrame, cells: DataFrame) -> list[DataFrame]:
             .join(eb, "dst")
             .withColumn("d", _sqdist(F.col("se"), F.col("de")))
         )
-        return ckpt_unless_plan_only(
+        return (
             scored.withColumn("rn", F.row_number().over(we))
             .filter(F.col("rn") <= HNSW_M)
-            .select("src", "dst", "d"),
-            cut_plan_only=True,  # loop-carried n x M frame
+            .select("src", "dst", "d")
+            .localCheckpoint()  # loop-carried n x M frame
         )
 
     rounds = [
@@ -2961,8 +2944,6 @@ def _hnsw_oracle() -> str:
     oracle=_hnsw_oracle(),
 )
 def hnsw_beam_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
     emb = load(spark, sf_dir, "embeddings")
     cells = _ivf_cells(emb)
     assign = _argmin_cell(emb, cells, "vec_id", 1)
@@ -2970,14 +2951,14 @@ def hnsw_beam_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NN-descent kNN digraph (bounded build — no all-pairs term); the final
     # edge list picks up the dst embedding ONCE (checkpointed) so the
     # unrolled hops never re-join the corpus for neighbor expansion
-    edges = ckpt_unless_plan_only(
+    edges = (
         _nn_descent_edges(av, cells)[-1]
         .join(
             emb.select(F.col("vec_id").alias("dst"), F.col("embedding").alias("de")),
             "dst",
         )
-        .select("src", "dst", "de"),
-        cut_plan_only=True,  # n x M frame referenced once per hop
+        .select("src", "dst", "de")
+        .localCheckpoint()  # n x M frame referenced once per hop
     )
     # HNSW_ENTRIES evenly-spread entry points per cell over the distance-
     # to-centroid rank order (rank 1 is the medoid): per-cell strata
@@ -3059,9 +3040,9 @@ def hnsw_beam_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("vec_id") != F.col("query_id"))
             .distinct()
         )
-        beam = ckpt_unless_plan_only(
-            rescore(frontier, HNSW_EF),
-            cut_plan_only=True,  # loop-carried #queries x EF frame
+        beam = (
+            rescore(frontier, HNSW_EF)
+            .localCheckpoint()  # loop-carried #queries x EF frame
         )
     approx_top = rescore(beam, HNSW_K).select(
         "query_id", F.col("vec_id").alias("neighbor_id")
@@ -3311,8 +3292,6 @@ def _nsw_long_link_oracle() -> str:
     oracle=_nsw_long_link_oracle(),
 )
 def nsw_long_link_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
     emb = load(spark, sf_dir, "embeddings")
     cells = _ivf_cells(emb)
     assign = _argmin_cell(emb, cells, "vec_id", 1)
@@ -3354,9 +3333,9 @@ def nsw_long_link_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the walk graph: id-pair frame (~16 B/row), materialized once;
     # embeddings re-enter only inside each hop's bounded rescore
-    medge = ckpt_unless_plan_only(
-        edges0.unionByName(ring).dropDuplicates(["src", "dst"]),
-        cut_plan_only=True,  # <= n x (M + LL_K) frame referenced per hop
+    medge = (
+        edges0.unionByName(ring).dropDuplicates(["src", "dst"])
+        .localCheckpoint()  # <= n x (M + LL_K) frame referenced per hop
     )
     # spread strata entry points per cell (same device as the flat query)
     wm = W.partitionBy("cell_id").orderBy("cd", "vec_id")
@@ -3392,11 +3371,11 @@ def nsw_long_link_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         PQIVF_NPROBE,
     ).select(F.col("vec_id").alias("query_id"), "cell_id")
-    beam = ckpt_unless_plan_only(
+    beam = (
         probe1.join(entrypts, "cell_id").select(
             "query_id", F.col("entry_id").alias("vec_id")
-        ),
-        cut_plan_only=True,  # #queries x (nprobe x ENTRIES) frame, used twice
+        )
+        .localCheckpoint()  # #queries x (nprobe x ENTRIES) frame, used twice
     )
     entrystats = beam.groupBy("query_id").agg(
         F.sum("vec_id").cast("long").alias("entry_id_sum"),
@@ -3436,9 +3415,9 @@ def nsw_long_link_search_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("vec_id") != F.col("query_id"))
             .distinct()
         )
-        beam = ckpt_unless_plan_only(
-            rescore(frontier, HNSW_EF),
-            cut_plan_only=True,  # loop-carried #queries x EF frame
+        beam = (
+            rescore(frontier, HNSW_EF)
+            .localCheckpoint()  # loop-carried #queries x EF frame
         )
     beamstats = beam.groupBy("query_id").agg(
         F.sum("vec_id").cast("long").alias("beam_id_sum")

@@ -1148,17 +1148,15 @@ def overlap_span_stats(held: DataFrame, ref: DataFrame) -> DataFrame:
     micro-batch with EXACTLY the batch query's plan (r14)."""
     from pyspark.sql.window import Window as W
 
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
     # the hit frame feeds the runs decomposition AND the per-doc counts —
     # left lazy both re-ran the trigram join (4 documents scans, and the
     # doc-parity filters are arithmetic so they cannot push into the
     # parquet scan). Bounded: <= SB_SCORE_DOCS held docs x positions.
-    hit = ckpt_unless_plan_only(
+    hit = (
         held.join(ref, "tgm", "left").select(
             "doc_id", "pos", F.coalesce("is_hit", F.lit(False)).alias("is_hit")
-        ),
-        cut_plan_only=True,
+        )
+        .localCheckpoint()
     )
     runs = hit.filter("is_hit").select(
         "doc_id",
@@ -1414,8 +1412,6 @@ def suffix_longest_match_doubling(spark: SparkSession, sf_dir: str) -> DataFrame
     held_base = docs.filter(
         (F.col("doc_id") % 2 == 1) & (F.col("doc_id") < SB_SCORE_DOCS)
     )
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
     # level 1: explode held tokens once; higher levels NEVER re-read text —
     # candidates come from the previous hit set's self-join (the prune).
     # Each level's hit set is checkpointed: it is referenced THREE times
@@ -1423,12 +1419,12 @@ def suffix_longest_match_doubling(spark: SparkSession, sf_dir: str) -> DataFrame
     # would otherwise double per level (2^levels plan copies — the CC
     # per-round discipline). Hit sets shrink geometrically, so the
     # materialized frames are the small end of the pipeline.
-    hit = ckpt_unless_plan_only(
+    hit = (
         held_base.select("doc_id", F.posexplode("ws").alias("pos", "h"))
         .withColumn("pos", F.col("pos") + 1)
         .join(refs[1], "h")
-        .select("doc_id", "pos", "h"),
-        cut_plan_only=True,
+        .select("doc_id", "pos", "h")
+        .localCheckpoint()
     )
     counts = [
         hit.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -1443,10 +1439,7 @@ def suffix_longest_match_doubling(spark: SparkSession, sf_dir: str) -> DataFrame
         cand = a.join(b, ["doc_id", "pos"]).select(
             "doc_id", "pos", combine(F.col("ha"), F.col("hb")).alias("h")
         )
-        hit = ckpt_unless_plan_only(
-            cand.join(refs[m], "h").select("doc_id", "pos", "h"),
-            cut_plan_only=True,
-        )
+        hit = cand.join(refs[m], "h").select("doc_id", "pos", "h").localCheckpoint()
         counts.append(
             hit.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
             .withColumn("m", F.lit(m))

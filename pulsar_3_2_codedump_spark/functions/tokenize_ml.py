@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only, fanout, load
+from pulsar_3_2_codedump_spark.catalog import fanout, load
 from pulsar_3_2_codedump_spark.functions.dedup_ml import _D_WORDS
 from pulsar_3_2_codedump_spark.queries import query
 
@@ -291,9 +291,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("word").rlike("^[a-z]+$"))
     # vocabulary-bounded after the agg; localCheckpoint cuts the lineage so
     # the three unrolled iterations never re-scan the corpus
-    words = ckpt_unless_plan_only(
-        tok.groupBy("word").agg(F.count(F.lit(1)).alias("c")), cut_plan_only=True
-    )
+    words = tok.groupBy("word").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
     repr_df = words.select(
         F.concat(
             F.lit(_SEP), F.array_join(F.split("word", ""), _SEP + _SEP), F.lit(_SEP)
@@ -411,9 +409,7 @@ def bpe_apply_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("word").rlike("^[a-z]+$"))
     # train exactly as bpe_train_merges, but carry the word key through the
     # merge chain; vocabulary-bounded after the agg, lineage cut once
-    words = ckpt_unless_plan_only(
-        docw.groupBy("word").agg(F.count(F.lit(1)).alias("c")), cut_plan_only=True
-    )
+    words = docw.groupBy("word").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
     repr_df = words.select(
         "word",
         F.concat(

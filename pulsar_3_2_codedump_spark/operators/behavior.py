@@ -22,7 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pulsar_3_2_codedump_spark.catalog import (
-    ckpt_unless_plan_only,
     load,
     persist_shared_corpus_frame,
 )
@@ -220,7 +219,7 @@ def rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncate lineage first (the dedup_clusters localCheckpoint pattern) so
     # the three rank pipelines below all read the flat materialized frame
     # instead of nesting each other's aggregates (~4^depth plan growth)
-    per = ckpt_unless_plan_only(per, cut_plan_only=True)
+    per = per.localCheckpoint()
     # r16 restructure (OPTIMIZATION_r16.md, in-rep faster 3 of 4 reps, e.g.
     # 1.45 s vs 2.74 s at sf0.1; shuffle Exchanges 24 -> 16 under the
     # PLANS.md counting convention): the three NTILE
@@ -482,15 +481,13 @@ def event_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unrolled iterations reference them repeatedly, and without the cut
     # every iteration's lineage re-scans the corpus (rfm_scores precedent —
     # flatten lineage once the frame is metadata-scale)
-    edges = ckpt_unless_plan_only(
+    edges = (
         seq.filter(F.col("dst").isNotNull())
         .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("w")),
-        cut_plan_only=True,
+        .agg(F.count(F.lit(1)).alias("w"))
+        .localCheckpoint()
     )
-    nodes = ckpt_unless_plan_only(
-        events.select(F.col("event_type").alias("node")).distinct(), cut_plan_only=True
-    )
+    nodes = events.select(F.col("event_type").alias("node")).distinct().localCheckpoint()
     outd = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     n = nodes.agg(F.count(F.lit(1)).alias("n"))
 
@@ -750,8 +747,6 @@ FUNNEL_WINDOW_US = 24 * 3600 * 1_000_000  # conversion window per step: 24h
     """,
 )
 def funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only
-
     events = load(spark, sf_dir, "events")
     steps = ["view", "click", "purchase"]
 
@@ -762,11 +757,11 @@ def funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     # emitted plan). Checkpointing each bounded per-user stage (<= #users
     # rows, the CC per-round discipline) makes it 1 events scan per
     # (step, chain) leg — 5 total, each with its event_type filter pushed.
-    prev0 = ckpt_unless_plan_only(
+    prev0 = (
         events.filter(F.col("event_type") == steps[0])
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t")),
-        cut_plan_only=True,
+        .agg(F.min("ts").alias("t"))
+        .localCheckpoint()
     )
 
     def chain(windowed: bool):
@@ -780,9 +775,11 @@ def funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.unix_micros(F.col("ts"))
                     <= F.unix_micros(F.col("t")) + FUNNEL_WINDOW_US
                 )
-            prev = ckpt_unless_plan_only(
-                nxt.filter(cond).groupBy("user_id").agg(F.min("ts").alias("t")),
-                cut_plan_only=True,
+            prev = (
+                nxt.filter(cond)
+                .groupBy("user_id")
+                .agg(F.min("ts").alias("t"))
+                .localCheckpoint()
             )
             counts.append(prev.agg(F.count(F.lit(1)).alias("users")))
         return counts

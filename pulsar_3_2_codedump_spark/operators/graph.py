@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only, fanout, load
+from pulsar_3_2_codedump_spark.catalog import fanout, load
 from pulsar_3_2_codedump_spark.queries import query
 
 CC_PROBE_LEN = 60   # chars compared per candidate pair (fuzzy_blocking_pairs)
@@ -146,17 +146,17 @@ def _cc_oracle() -> str:
     oracle=_cc_oracle(),
 )
 def connected_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = ckpt_unless_plan_only(_linkage_edges(spark, sf_dir), cut_plan_only=True)
+    e = _linkage_edges(spark, sf_dir).localCheckpoint()
     nodes = (
         e.select(F.col("va").alias("node"))
         .union(e.select("vb"))
         .distinct()
     )
-    adj = ckpt_unless_plan_only(
+    adj = (
         e.select(F.col("va").alias("v"), F.col("vb").alias("u"))
         .unionAll(e.select(F.col("vb").alias("v"), F.col("va").alias("u")))
-        .unionAll(nodes.select(F.col("node").alias("v"), F.col("node").alias("u"))),
-        cut_plan_only=True,
+        .unionAll(nodes.select(F.col("node").alias("v"), F.col("node").alias("u")))
+        .localCheckpoint()
     )
     lbl = nodes.select("node", F.col("node").alias("lbl"))
     for _ in range(CC_ROUNDS):
@@ -165,11 +165,11 @@ def connected_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exchanges — the rfm_scores precedent); the label frame is one row
         # per linkage-graph node, the standard iterative-algorithm
         # materialization point
-        nm = ckpt_unless_plan_only(
+        nm = (
             adj.join(lbl.withColumnRenamed("node", "u"), "u")
             .groupBy(F.col("v").alias("node"))
-            .agg(F.min("lbl").alias("lbl")),
-            cut_plan_only=True,
+            .agg(F.min("lbl").alias("lbl"))
+            .localCheckpoint()
         )
         # pointer jump: lbl <- lbl(lbl)
         lbl = (
@@ -265,9 +265,7 @@ def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    und = ckpt_unless_plan_only(  # |types|²-bounded frame; cut lineage off the corpus
-        und, cut_plan_only=True
-    )
+    und = und.localCheckpoint()  # |types|²-bounded; cut lineage off the corpus
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = und.select(F.col("a").alias("x"), F.col("b").alias("z"))

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pulsar_3_2_codedump_spark.catalog import ckpt_unless_plan_only, load
+from pulsar_3_2_codedump_spark.catalog import load
 from pulsar_3_2_codedump_spark.queries import query
 
 BLOOM_M_BITS = 16384  # filter size in bits (m)
@@ -152,7 +152,7 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # m=2^24 that is 500k comparisons per element_at; measured 25x slower in
     # tools/scale_smoke.py).
     # metadata-scale (m/32 rows); cut lineage
-    words = ckpt_unless_plan_only(words, cut_plan_only=True)
+    words = words.localCheckpoint()
     probe = customer.select("c_custkey", "c_mktsegment")
     passes = None
     for i in range(BLOOM_K):

@@ -99,6 +99,16 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def plan_audit(spark):
+    """One product-mode sweep of the registry's plans (tools/plan_audit.py),
+    shared by the broadcast-flip and redundant-scan gates."""
+    from pulsar_3_2_codedump_spark.queries import load_all
+    from tools.plan_audit import sweep
+
+    return sweep(spark, load_all(), SF_DIR)
+
+
 @pytest.fixture()
 def tmp_root(tmp_path):
     return str(tmp_path)

@@ -1,21 +1,13 @@
-"""The broadcast-audit tool guards the 100x posture (no data-proportional
-frame may ride a statically-planned BroadcastExchange — the r10 50M-smoke
-crash class), so its plan parsing and classification rules get pinned here
-on canned plan strings. No Spark needed."""
+"""The plan audit's broadcast check guards the 100x posture (no
+data-proportional frame may ride a statically-planned BroadcastExchange —
+the r10 50M-smoke crash class), so its plan parsing and classification
+rules get pinned here on canned plan strings (no Spark needed), and the
+registry gate reads the product-mode sweep of every batch query."""
 
-import os
-import sys
-
-sys.path.insert(
-    0,
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    ),
-)
-
-from broadcast_audit import audit_plan, audit_plan_rich, subtree
+from types import SimpleNamespace
 
 from tests.conftest import SF_DIR
+from tools.plan_audit import audit_plan_rich, subtree
 
 FACT_BUILD = """AdaptiveSparkPlan isFinalPlan=false
 +- SortMergeJoin [ng#1], [ng#2], Inner
@@ -44,8 +36,6 @@ DIM_BUILD = FACT_BUILD.replace("documents.parquet", "nation.parquet").replace(
 
 
 def test_fact_backed_keyed_aggregate_build_is_flagged():
-    hits = audit_plan(FACT_BUILD)
-    assert len(hits) == 1 and hits[0][0] == ["documents"]
     rich = audit_plan_rich(FACT_BUILD)
     assert len(rich) == 1
     fact, keys, _root = rich[0]
@@ -63,51 +53,31 @@ SUFFIX_NAME_BUILD = FACT_BUILD.replace("documents", "predocuments")
 
 
 def test_limit_scalar_and_dim_builds_are_not_flagged():
-    assert audit_plan(LIMIT_BUILD) == []          # bounded by construction
-    assert audit_plan_rich(SCALAR_BUILD) == []    # one-row threshold
-    assert audit_plan(DIM_BUILD) == []            # dimension scan, not a fact
-    assert audit_plan(COLLECT_LIMIT_BUILD) == []  # CollectLimit is Limit-bounded
-    assert audit_plan(SUFFIX_NAME_BUILD) == []    # identifier merely ends in a fact name
+    assert audit_plan_rich(LIMIT_BUILD) == []          # bounded by construction
+    assert audit_plan_rich(SCALAR_BUILD) == []         # one-row threshold
+    assert audit_plan_rich(DIM_BUILD) == []            # dimension scan, not a fact
+    assert audit_plan_rich(COLLECT_LIMIT_BUILD) == []  # CollectLimit is Limit-bounded
+    assert audit_plan_rich(SUFFIX_NAME_BUILD) == []    # identifier merely ends in a fact name
 
 
-def test_flip_audit_only_allowlisted_fact_broadcasts_survive(spark):
+def test_flip_audit_only_allowlisted_fact_broadcasts_survive(plan_audit):
     """The class-(b) pin (VERDICT r10 item 3): every fact-backed broadcast
-    in the registry must be ESTIMATE-DRIVEN — plan the whole registry with
-    the broadcast threshold floored (-1, the 100TB condition where every
-    corpus-derived frame's estimate exceeds any threshold) and assert the
-    only builds still broadcasting are the explicit, documented measurement
-    forms in EXPLICIT_MEASUREMENT_BROADCASTS. Catches any future explicit
-    F.broadcast()/hint('BROADCAST') of a data-proportional frame at plan
-    time — this test found six TPC-H shapes broadcasting ORDERS when first
-    written. Plan-only by contract (ADVICE r11): queries whose fn() runs
-    Spark jobs at construction time are excluded via CONSTRUCTION_EXECUTES
-    (reasons documented there), and the sweep disables the ESD census
-    probe via SPARK_GRAFT_ESD_NO_PROBE; ~2 min for the full registry."""
-    from broadcast_audit import (
-        CONSTRUCTION_JOBS_OK,
-        EXPLICIT_MEASUREMENT_BROADCASTS,
-        flip_audit,
-    )
-    from pulsar_3_2_codedump_spark.queries import load_all
+    in the registry must be ESTIMATE-DRIVEN — the sweep builds the whole
+    registry with the broadcast threshold floored (-1, the 100TB condition
+    where every corpus-derived frame's estimate exceeds any threshold), and
+    the only builds still broadcasting, in the final plans or in the
+    executions their construction ran, are the explicit, documented
+    measurement forms in EXPLICIT_MEASUREMENT_BROADCASTS. Catches any
+    future explicit F.broadcast()/hint('BROADCAST') of a data-proportional
+    frame — this test found six TPC-H shapes broadcasting ORDERS when first
+    written."""
+    from tools.plan_audit import EXPLICIT_MEASUREMENT_BROADCASTS
 
-    jobs: dict = {}
-    flagged = flip_audit(spark, load_all(), SF_DIR, jobs_out=jobs)
-    # VERDICT r12 item 2: the sweep is action-free — constructing and
-    # planning every batch query launches ZERO execution jobs, except the
-    # enumerated control-plane collects / fixture builds in
-    # CONSTRUCTION_JOBS_OK (parquet footer-schema metadata reads are
-    # excluded by exec_jobs_after — they fire even for a bare load()).
-    offenders = {n: js for n, js in jobs.items() if n not in CONSTRUCTION_JOBS_OK}
-    assert not offenders, (
-        f"plan-only flip sweep ran execution jobs outside "
-        f"CONSTRUCTION_JOBS_OK: {offenders}"
-    )
-    skips = {n: h for n, h in flagged.items() if h and h[0][0] == "SKIP"}
-    assert not skips, f"flip audit could not plan: {skips}"
-    rogue = set(flagged) - set(EXPLICIT_MEASUREMENT_BROADCASTS)
+    assert not plan_audit.failed, f"queries failed to build: {plan_audit.failed}"
+    rogue = set(plan_audit.flips) - set(EXPLICIT_MEASUREMENT_BROADCASTS)
     assert not rogue, (
         f"fact-backed broadcasts survive a floored threshold outside the "
-        f"documented allowlist: { {n: flagged[n] for n in sorted(rogue)} }"
+        f"documented allowlist: { {n: plan_audit.flips[n] for n in sorted(rogue)} }"
     )
     # every allowlist entry must carry a non-empty documented reason
     for name, reason in EXPLICIT_MEASUREMENT_BROADCASTS.items():
@@ -163,7 +133,7 @@ def test_generic_key_names_are_not_globally_bounded():
     assert len(rich) == 1 and rich[0][1] == ["bucket"]
     # per-query qualification path: the same plan under a query that
     # declares its 'bucket' domain-bounded passes
-    from broadcast_audit import QUERY_BOUNDED_KEYS
+    from tools.plan_audit import QUERY_BOUNDED_KEYS
 
     QUERY_BOUNDED_KEYS["__canned__"] = {"bucket"}
     try:
@@ -181,48 +151,25 @@ def test_subtree_stops_at_sibling_depth():
     assert "SortMergeJoin" not in sub and "Sort [ng#1" not in sub
 
 
-# ADVICE r13: cut_plan_only's empty-RDD leaf hid the cut subtrees'
-# explicit broadcasts and fact scans from the flip audit. This pass
-# re-plans every cut-using query with SPARK_GRAFT_PLAN_ONLY_NO_CUT=1
-# (identity mode even for cut-marked frames) so those subtrees are
-# judged too. connected_components/greedy/BPE-class loop-carried builds
-# are tractable here because the fixture unrolls are bounded; if a new
-# query's identity plan becomes intractable, exclude it HERE with the
-# reason, not by silently relying on the cut.
-NO_CUT_AUDITED = [
-    "nn_descent_graph_convergence",
-    "suffix_longest_match_doubling",
-    "cross_corpus_overlap_spans",
-    "funnel_within_window",
-    "kmeans_lloyd_iterations",
-    "pca_power_iteration",
-    "ivfpq_residual_topk",
-    "tfidf_top_terms",
-    "bpe_train_merges",
-    "connected_components_star",
-    "dedup_clusters",
-    "greedy_coverage_selection",
-    "event_trigram_paths",
-    "duplicated_ngram_coverage",
-    "psi_drift",
-    "bloom_filter_semi_join",
-    "hnsw_beam_search_recall",
-]
+def test_broadcast_inside_checkpointed_subtree_is_flagged(spark):
+    """A fact-backed explicit broadcast that only a construction-time
+    execution runs (here: inside a localCheckpoint, so the final plan shows
+    a bare Scan ExistingRDD) is still judged by the sweep."""
+    from pyspark.sql import functions as F
 
+    from pulsar_3_2_codedump_spark.catalog import load
+    from tools.plan_audit import sweep
 
-def test_flip_audit_sees_through_plan_only_cuts(spark, monkeypatch):
-    """The cut-subtree blind spot stays closed: with cuts disabled, the
-    flip audit (floored broadcast threshold) over every cut-using query
-    must find no unqualified fact-backed broadcast inside the subtrees the
-    normal sweeps cannot see (the bloom word table, the HNSW entry-strata
-    targets, the capped ANN query sets)."""
-    from broadcast_audit import flip_audit
+    def fn(s, sf):
+        ev = load(s, sf, "events")
+        per_user = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
+        cut = ev.join(F.broadcast(per_user), "user_id").localCheckpoint()
+        return cut.groupBy("event_type").count()
 
-    from pulsar_3_2_codedump_spark.queries import load_all
-
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY_NO_CUT", "1")
-    flagged = flip_audit(spark, load_all(), SF_DIR, only=NO_CUT_AUDITED)
-    assert not flagged, flagged
+    report = sweep(spark, {"probe": SimpleNamespace(fn=fn)}, SF_DIR)
+    assert not report.failed, report.failed
+    hits = report.flips.get("probe")
+    assert hits and all(h[:2] == (["events"], ["user_id"]) for h in hits), hits
 
 
 def test_capped_query_set_filter_is_bounded():
@@ -230,8 +177,6 @@ def test_capped_query_set_filter_is_bounded():
     build whose spine filters on BOTH the stride modulus and the id cap is
     bounded (<= ANN_MAX_QUERIES rows at any corpus size); either predicate
     alone is not."""
-    from broadcast_audit import audit_plan_rich
-
     from pulsar_3_2_codedump_spark.functions.similarity import (
         QUERY_ID_CAP,
         QUERY_STRIDE,

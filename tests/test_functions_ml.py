@@ -892,21 +892,22 @@ def test_exact_substring_escalation_boundary_is_bit_identical(spark):
     assert result(escalate_threshold=1) == gate_off
 
 
-def test_exact_substring_probe_env_gate(spark, monkeypatch):
-    """SPARK_GRAFT_ESD_NO_PROBE keeps the registered query's construction
-    action-free (planning-only sweeps), with identical results."""
+def test_exact_substring_query_matches_ungated_reference(spark):
+    """The registered query (census probe on) returns exactly the rows of
+    exact_substring_stats with the escalation gate disabled."""
+    from pulsar_3_2_codedump_spark.catalog import fanout, load
     from pulsar_3_2_codedump_spark.functions.dedup_ml import (
         exact_substring_dedup,
+        exact_substring_stats,
     )
 
     with_probe = sorted(
         tuple(r) for r in exact_substring_dedup(spark, SF_DIR).collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_ESD_NO_PROBE", "1")
-    without = sorted(
-        tuple(r) for r in exact_substring_dedup(spark, SF_DIR).collect()
+    reference = exact_substring_stats(
+        fanout(load(spark, SF_DIR, "documents")), escalate_threshold=None
     )
-    assert with_probe == without
+    assert with_probe == sorted(tuple(r) for r in reference.collect())
 
 
 def test_data_proportional_joins_never_broadcast(spark):
@@ -1014,35 +1015,23 @@ def test_ivfpq_residual_invariants(spark):
         assert len(ranks) <= PQ_TOP_K
 
 
-def test_ivf_cells_materializes_once_and_plan_only_stays_lazy(spark, monkeypatch):
-    """Pins the r12 materialize-once contract of _ivf_cells: in product
-    mode the centroid frame is a driver-local scan (ExistingRDD from the
-    collected 16 rows — centroid derivation = exactly ONE corpus pass;
-    downstream broadcasts carry an exact size), while under
-    SPARK_GRAFT_PLAN_ONLY (the flip-audit sweep) construction stays
-    action-free and the plan keeps the Limit-bounded lineage the
-    boundedness classifier judges. Rows must be identical in both modes —
-    materialization is a plan choice, never an answer."""
+def test_ivf_cells_materializes_once(spark):
+    """Pins the r12 materialize-once contract of _ivf_cells: the centroid
+    frame is a checkpointed scan (ExistingRDD — centroid derivation is
+    exactly ONE corpus pass; downstream broadcasts carry an exact size)
+    holding PQIVF_CELLS rows numbered 1..PQIVF_CELLS."""
     from pulsar_3_2_codedump_spark.catalog import load
-    from pulsar_3_2_codedump_spark.functions.similarity import _ivf_cells
+    from pulsar_3_2_codedump_spark.functions.similarity import (
+        PQIVF_CELLS,
+        _ivf_cells,
+    )
 
-    emb = load(spark, SF_DIR, "embeddings")
-
-    monkeypatch.delenv("SPARK_GRAFT_PLAN_ONLY", raising=False)
-    mat = _ivf_cells(emb)
+    mat = _ivf_cells(load(spark, SF_DIR, "embeddings"))
     mat_plan = mat._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in mat_plan or "LocalTableScan" in mat_plan, mat_plan
     assert "FileScan" not in mat_plan, mat_plan
-
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_ONLY", "1")
-    lazy = _ivf_cells(emb)
-    lazy_plan = lazy._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan" in lazy_plan, lazy_plan
-    assert "TakeOrderedAndProject" in lazy_plan or "GlobalLimit" in lazy_plan, lazy_plan
-
-    key = lambda r: r["cell_id"]  # noqa: E731
-    assert sorted(mat.collect(), key=key) == sorted(lazy.collect(), key=key)
-    assert mat.schema == lazy.schema
+    ids = sorted(r["cell_id"] for r in mat.collect())
+    assert ids == list(range(1, PQIVF_CELLS + 1))
 
 
 def _py_sq(a, b):

@@ -1,103 +1,101 @@
-"""Registry-wide redundant-scan GATE (VERDICT r12 item 5).
+"""Registry-wide redundant-scan gate (VERDICT r12 item 5).
 
 The r12 waste class — a shared frame re-planned (and re-SCANNED) per plan
 branch whenever its subtree has no Exchange root for ReuseExchange to
-dedupe — recurred six times before tools/scan_audit.py existed. A tool you
-must remember to run is not a gate, so this test runs the audit over the
-WHOLE registry and fails on any >=4x same-fact-table scan plan that is
-neither disciplined (persist / checkpoint / ckpt_unless_plan_only, which
-the audit detects via plan markers OR the suppressed-checkpoint counter)
-nor triaged in scan_audit.BENIGN_MULTISCAN with a stated class+reason.
-
-The same sweep doubles as the action-free proof for the scan side
-(VERDICT r12 item 2): constructing and planning every batch query under
-SPARK_GRAFT_PLAN_ONLY must launch ZERO Spark execution jobs outside the
-enumerated control-plane collects / fixture builds in
-broadcast_audit.CONSTRUCTION_JOBS_OK (Spark's per-read parquet
-footer-schema metadata reads, named 'parquet at ...', fire even for a
-bare load() and are excluded by scan_audit.exec_jobs_after).
+dedupe — recurred six times before the scan audit existed. A tool you
+must remember to run is not a gate, so this test reads the audit of the
+WHOLE registry's product plans (tools/plan_audit.py) and fails on any
+final plan that scans one fact table >= 4 times and is not triaged in
+BENIGN_MULTISCAN with a stated class and reason.
 """
 
-import os
-import sys
-
-sys.path.insert(
-    0,
-    os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-    ),
-)
+from types import SimpleNamespace
 
 from tests.conftest import SF_DIR
 
 
-def test_registry_has_no_unclassified_multiscan_plans_and_sweep_runs_no_jobs(spark):
-    from broadcast_audit import CONSTRUCTION_JOBS_OK
-    from scan_audit import BENIGN_MULTISCAN, audit
+def test_registry_has_no_unclassified_multiscan_plans(plan_audit):
+    from tools.plan_audit import BENIGN_MULTISCAN
 
-    from pulsar_3_2_codedump_spark.queries import load_all
-
-    jobs: dict = {}
-    hits = audit(spark, load_all(), SF_DIR, jobs_out=jobs)
-
-    # 1) zero execution jobs during the plan-only sweep outside the
-    # enumerated control-plane/fixture-build queries (footer reads excluded
-    # by exec_jobs_after)
-    offenders = {n: js for n, js in jobs.items() if n not in CONSTRUCTION_JOBS_OK}
-    assert not offenders, (
-        f"plan-only scan sweep ran execution jobs outside "
-        f"CONSTRUCTION_JOBS_OK: {offenders}"
-    )
-    for name, reason in CONSTRUCTION_JOBS_OK.items():
-        assert reason and len(reason) > 20, name
-
-    # 2) every hit is triaged — fail on any NEW >=4x fact-scan plan
-    rogue = [h for h in hits if h[1] not in BENIGN_MULTISCAN]
+    rogue = [h for h in plan_audit.scans if h[1] not in BENIGN_MULTISCAN]
     assert not rogue, (
-        "untriaged >=4x same-fact-scan plans (fix with "
-        "catalog.ckpt_unless_plan_only / persist_shared_corpus_frame / a "
-        f"one-scan rewrite, or triage in BENIGN_MULTISCAN): {rogue}"
+        "untriaged >=4x same-fact-scan plans (fix with localCheckpoint / "
+        "persist_shared_corpus_frame / a one-scan rewrite, or triage in "
+        f"BENIGN_MULTISCAN): {rogue}"
     )
-
-    # 3) allowlist hygiene: entries carry a non-trivial documented reason
+    # allowlist hygiene: entries carry a non-trivial documented reason
     for name, reason in BENIGN_MULTISCAN.items():
         assert reason and len(reason) > 20, name
 
 
-def test_discipline_is_attributed_per_table(spark, monkeypatch):
-    """ADVICE r13: a checkpoint of a control-plane frame must NOT excuse an
-    unrelated fact table scanned >= threshold times — and a materialization
-    whose subtree DOES read the multi-scanned table must. Both directions,
-    on synthetic single-query registries."""
-    from types import SimpleNamespace
+def test_checkpoint_and_cached_subtree_scan_once(spark):
+    """A fact frame unioned 4x is flagged; the same frame after
+    localCheckpoint() is not, and neither is a persisted copy, whose
+    cached plan prints under every reference but is counted once."""
+    from pulsar_3_2_codedump_spark.catalog import load, persist_shared_corpus_frame
+    from tools.plan_audit import sweep
 
-    from scan_audit import audit
+    def union4(frame):
+        def fn(s, sf):
+            ev = frame(load(s, sf, "events").select("event_id", "user_id"))
+            return ev.unionByName(ev).unionByName(ev).unionByName(ev).groupBy(
+                "user_id"
+            ).count()
 
-    from pulsar_3_2_codedump_spark.catalog import (
-        ckpt_unless_plan_only,
-        load,
-    )
+        return SimpleNamespace(fn=fn)
 
-    def masked(s, sf):
-        # discipline tick on a frame that reads NO fact table...
-        ckpt_unless_plan_only(s.range(0, 10))
-        ev = load(s, sf, "events").select("event_id", "user_id")
-        # ...while the events table is unioned 4x (re-scanned per branch)
-        u = ev
-        for _ in range(3):
-            u = u.unionByName(ev)
-        return u.groupBy("user_id").count()
+    registry = {
+        "raw": union4(lambda ev: ev),
+        "checkpointed": union4(lambda ev: ev.localCheckpoint()),
+        "persisted": union4(persist_shared_corpus_frame),
+    }
+    report = sweep(spark, registry, SF_DIR)
+    assert not report.failed, report.failed
+    assert [(h[1], h[2]["events"]) for h in report.scans] == [("raw", 4)]
 
-    def covered(s, sf):
-        ev = ckpt_unless_plan_only(
-            load(s, sf, "events").select("event_id", "user_id")
-        )
-        u = ev
-        for _ in range(3):
-            u = u.unionByName(ev)
-        return u.groupBy("user_id").count()
 
-    reg = lambda fn: {"probe": SimpleNamespace(fn=fn)}  # noqa: E731
-    hits = audit(spark, reg(masked), SF_DIR)
-    assert [h[1] for h in hits] == ["probe"], hits  # loophole now flags
-    assert audit(spark, reg(covered), SF_DIR) == []  # real coverage excuses
+# A persisted, already-executed aggregate referenced twice (Spark 4.1
+# output, scan lines shortened): each reference prints the cached plan
+# under re-aliased output columns, and the executed adaptive plan prints
+# its final plan and then the initial one.
+_CACHED_TWICE = """AdaptiveSparkPlan isFinalPlan=false
++- Union
+   :- InMemoryTableScan [user_id#2L, count#6L]
+   :     +- InMemoryRelation [user_id#2L, count#6L], StorageLevel(disk, memory, deserialized, 1 replicas)
+   :           +- AdaptiveSparkPlan isFinalPlan=true
+                  +- == Final Plan ==
+                     ResultQueryStage 1
+                     +- *(2) HashAggregate(keys=[user_id#2L], functions=[count(1)], output=[user_id#2L, count#6L])
+                        +- ShuffleQueryStage 0
+                           +- Exchange hashpartitioning(user_id#2L, 1), ENSURE_REQUIREMENTS, [plan_id=46]
+                              +- *(1) HashAggregate(keys=[user_id#2L], functions=[partial_count(1)], output=[user_id#2L, count#16L])
+                                 +- *(1) ColumnarToRow
+                                    +- FileScan parquet [user_id#2L] Batched: true, Location: InMemoryFileIndex(1 paths)[file:/data/events.parquet]
+                  +- == Initial Plan ==
+                     HashAggregate(keys=[user_id#2L], functions=[count(1)], output=[user_id#2L, count#6L])
+                     +- Exchange hashpartitioning(user_id#2L, 1), ENSURE_REQUIREMENTS, [plan_id=11]
+                        +- HashAggregate(keys=[user_id#2L], functions=[partial_count(1)], output=[user_id#2L, count#16L])
+                           +- FileScan parquet [user_id#2L] Batched: true, Location: InMemoryFileIndex(1 paths)[file:/data/events.parquet]
+   +- InMemoryTableScan [user_id#85L, count#89L]
+         +- InMemoryRelation [user_id#85L, count#89L], StorageLevel(disk, memory, deserialized, 1 replicas)
+               +- AdaptiveSparkPlan isFinalPlan=true
+                  +- == Final Plan ==
+                     ResultQueryStage 1
+                     +- *(2) HashAggregate(keys=[user_id#2L], functions=[count(1)], output=[user_id#2L, count#6L])
+                        +- ShuffleQueryStage 0
+                           +- Exchange hashpartitioning(user_id#2L, 1), ENSURE_REQUIREMENTS, [plan_id=46]
+                              +- *(1) HashAggregate(keys=[user_id#2L], functions=[partial_count(1)], output=[user_id#2L, count#16L])
+                                 +- *(1) ColumnarToRow
+                                    +- FileScan parquet [user_id#2L] Batched: true, Location: InMemoryFileIndex(1 paths)[file:/data/events.parquet]
+                  +- == Initial Plan ==
+                     HashAggregate(keys=[user_id#2L], functions=[count(1)], output=[user_id#2L, count#6L])
+                     +- Exchange hashpartitioning(user_id#2L, 1), ENSURE_REQUIREMENTS, [plan_id=11]
+                        +- HashAggregate(keys=[user_id#2L], functions=[partial_count(1)], output=[user_id#2L, count#16L])
+                           +- FileScan parquet [user_id#2L] Batched: true, Location: InMemoryFileIndex(1 paths)[file:/data/events.parquet]
+"""
+
+
+def test_scan_counts_read_one_cached_plan_once_and_its_final_half():
+    from tools.plan_audit import scan_counts
+
+    assert scan_counts(_CACHED_TWICE) == {"events": 1}

@@ -383,9 +383,9 @@ def test_cusum_view_merge_survives_arbitrary_microbatch_splits(spark, tmp_root):
         spark.readStream.format("pulsarlike")
         .option("path", tp)
         .option("maxRecordsPerTrigger", "40")  # 2 partitions × 40 per batch
-        # flow control across restarts needs the named durable cursor —
-        # each start() builds a fresh reader, and only the subscription
-        # carries the capped read position forward (reader docstring)
+        # flow control across restarts: each start() builds a fresh
+        # reader, and the query's checkpoint carries the capped read
+        # position forward (reader docstring)
         .option("subscription", "cusum-split-test")
         .load()
     )

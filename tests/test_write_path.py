@@ -1,9 +1,10 @@
 """One write path for a topic: ``topic.append``, the ``pulsarlike`` stream
 sink and the batch writer all commit through ``topic._commit_segments``,
 and every segment they leave is a directory of parquet files that store
-``offset``. Faults are injected at the commit point: a commit that dies
-after moving its segments but before the manifest replace must leave no
-visible rows, and its retry must land each row exactly once. ``append``
+``offset``. Faults are injected at the commit point, raised in-process or
+by killing a writer process: a commit that dies after moving its segments
+but before the manifest replace must leave no visible rows, and its retry
+must land each row exactly once. ``append``
 itself is one plan with one action, its dedup holds against the producer
 marks, and two processes appending at once leave a dense log."""
 
@@ -117,6 +118,74 @@ def test_sink_retry_after_crash_before_manifest_replace(spark, tmp_root, monkeyp
     writer.commit([writer.write(_rows(20, 50))], 1)  # a replay of it: no-op
     _check_log(spark, tp, 50)
     assert os.listdir(os.path.join(tp, "_stream_staging")) == []
+
+
+# A writer process that commits one sink batch (pyarrow-staged, no Spark
+# session) and dies by os._exit at the named point of _commit_segments.
+_KILL_CHILD = r"""
+import os, shutil, sys
+from pulsar_3_2_codedump_spark.sources import pulsarlike as PL
+from tests.test_write_path import _rows
+
+tp, lo, hi, batch, point = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4]), sys.argv[5]
+writer = PL.PulsarLikeStreamWriter({"path": tp, "sinkid": "k"}, None)
+staged = writer.write(_rows(lo, hi))
+if point == "before_replace":  # the manifest's tmp file is written
+    os.replace = lambda *a, **k: os._exit(17)
+elif point == "before_cleanup":  # the manifest is replaced
+    rmtree = shutil.rmtree
+    def die_at_staging(path, *a, **k):
+        if os.path.basename(path).startswith("_staging_"):
+            os._exit(17)
+        rmtree(path, *a, **k)
+    shutil.rmtree = die_at_staging
+writer.commit([staged], batch)
+"""
+
+
+def _commit_in_child(tp, lo, hi, batch, point="none"):
+    """Run the writer process; it must exit 0, or 17 when it has a kill
+    point."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])),
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", _KILL_CHILD, tp, str(lo), str(hi), str(batch), point],
+        cwd=root, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert done.returncode == (0 if point == "none" else 17), done.stderr[-3000:]
+
+
+@pytest.mark.parametrize("point", ["before_replace", "before_cleanup"])
+def test_commit_killed_then_retried_lands_once(spark, tmp_root, point):
+    """A writer killed inside the commit (not a raised fault: no finally
+    block runs) before or after the manifest replace; the retry of its
+    batch leaves a dense log with each row once, and no manifest entry
+    points at the killed attempt's segments."""
+    tp = T.create_topic(tmp_root, "k", n_partitions=2)
+    _commit_in_child(tp, 0, 20, 0)
+    _commit_in_child(tp, 20, 50, 1, point)
+    committed = point == "before_cleanup"
+    assert T.read_topic(spark, tp).count() == (50 if committed else 20)
+    orphans = set(_unlisted_segments(tp))
+    assert bool(orphans) != committed  # the killed attempt's moved segments
+    left = os.listdir(tp)
+    assert any(f.startswith("_staging_") for f in left)  # never cleaned
+    # killed inside the manifest write: its temp file is there, unreplaced
+    assert any(f.startswith(T.MANIFEST + ".tmp.") for f in left) != committed
+    _commit_in_child(tp, 20, 50, 1)  # the retry
+    _commit_in_child(tp, 20, 50, 1)  # a replay of it: no-op
+    _check_log(spark, tp, 50)
+    assert set(_unlisted_segments(tp)) == orphans  # retry made no new ones
+    m = T.read_manifest(tp)
+    listed = {T._seg_path(tp, p, s) for p, segs in m["segments"].items() for s in segs}
+    assert all(os.path.isdir(path) for path in listed)
+    assert not listed & orphans
 
 
 def test_sink_topic_leaves_no_unlisted_segments(spark, tmp_root):
