@@ -14,7 +14,7 @@ Layout
 - ``envelope``   : the canonical message envelope StructType (PulsarApi.proto:106-166)
 - ``catalog``    : fixture loading / view registration
 - ``topic``      : topic = partitioned directory of parquet segments + manifest
-- ``sources``    : the custom "pulsarlike" streaming source/sink (Python Data Source API)
+- ``sources``    : the custom "pulsarlike" streaming source (Python Data Source API)
 - ``operators``  : compaction, tableview, dedup, time ops, routing, windows, relational
 - ``functions``  : text analysis, minhash/simhash dedup, similarity search, multimodal
 - ``streaming``  : delayed delivery, function runtime, replicator

@@ -39,7 +39,6 @@ def get_spark(app_name: str = "pulsar_3_2_codedump_spark", cpus: int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # workers skip re-reading Spark's own archives on every task
         .config("spark.python.daemon.module", "pulsar_3_2_codedump_spark.worker_daemon")
         # Fixture parquet carries isAdjustedToUTC=false timestamps; read them

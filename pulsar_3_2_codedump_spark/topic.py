@@ -12,18 +12,21 @@ Reference mapping:
   - BrokerEntryMetadata.index (PulsarApi.proto:191): the monotonic
     per-partition ``offset`` column, stored in every segment. One commit
     function, ``_commit_segments``, assigns it from the manifest's
-    per-partition high-water mark for every writer (``append``, the
-    ``pulsarlike`` stream sink and batch writer), as the broker's single
-    append path does (AppendIndexMetadataInterceptor).
+    per-partition high-water mark, as the broker's single append path does
+    (AppendIndexMetadataInterceptor). ``append`` is the one writer; a
+    stream writes through it from ``foreachBatch``.
   - Transaction buffer visibility (TopicTransactionBuffer.java:258):
     segments are staged FIRST, then the manifest is atomically replaced
     (write-temp + os.replace) — a reader never sees a half-appended batch.
     A ``batch_token`` recorded in the same replace makes a replayed commit
-    a no-op, which is exactly-once for ``foreachBatch`` appends and the
-    stream sink's micro-batches.
+    a no-op, which is exactly-once for ``foreachBatch`` appends.
   - Message dedup (MessageDeduplication.java:325): append() drops rows whose
     (producer_name, sequence_id) is ≤ the stored per-producer high-water
     mark, then advances the marks in the same manifest commit.
+
+Reads: ``read_topic`` is the one batch read (offset bounds, markers on
+request) and ``read_topic_compacted`` the compacted read; the ``pulsarlike``
+stream source (sources/pulsarlike.py) reads the same segments as a stream.
 
 Scale posture: the manifest holds only segment-level metadata (start/count
 per segment + per-producer seq marks), never row data — listing stays O(#segments).
@@ -151,7 +154,7 @@ def create_shadow_topic(root: str, name: str, source_topic_path: str) -> str:
     topic's ledgers — readers see the source's segments live (the shadow
     follows source growth because every scan re-reads the source manifest),
     subscriptions/cursors are the shadow's own, and produce is rejected
-    (``append``/the streaming sink raise ShadowTopicError)."""
+    (``_commit_segments`` raises ShadowTopicError)."""
     src_manifest = read_manifest(source_topic_path)  # validates the source
     topic_path = os.path.join(root, name)
     os.makedirs(topic_path, exist_ok=True)
@@ -395,10 +398,10 @@ def _append_unlocked(
     already-committed token is a no-op. This closes the foreachBatch
     exactly-once hole (foreachBatch is at-least-once: a crash after append
     but before the streaming checkpoint commit replays the micro-batch —
-    reference semantics TopicTransactionBuffer.java:258 all-or-nothing; the
-    stream sink keys its micro-batches the same way). Tokens must be stable
-    across replays of the same logical batch (e.g. hash(checkpoint) +
-    batch_id) and unique across logical writes to this topic.
+    reference semantics TopicTransactionBuffer.java:258 all-or-nothing).
+    Tokens must be stable across replays of the same logical batch (e.g.
+    ``checkpoint_writer_id(checkpoint)`` + batch_id) and unique across
+    logical writes to this topic.
     """
 
     def stage(manifest: dict, ends: dict[int, int], stage_dir: str):
@@ -493,10 +496,11 @@ def _staged_stats(stage_dir: str):
 
 
 def _commit_segments(topic_path: str, stage, batch_token: str | None = None) -> dict[int, int]:
-    """The one commit protocol for every writer to a topic (``append``, the
-    ``pulsarlike`` stream sink and batch writer), as every Pulsar producer's
-    entries pass through the broker's one append path. The caller holds the
-    writer lock. Returns the new end offsets.
+    """The one commit protocol for every write of new rows to a topic
+    (``append``, and through it ``txn_commit`` and every ``foreachBatch``
+    stream writer), as every Pulsar producer's entries pass through the
+    broker's one append path. The caller holds the writer lock. Returns the
+    new end offsets.
 
     ``stage(manifest, ends, stage_dir)`` gets the rows of one batch into
     ``<stage_dir>/partition=<p>/`` as parquet files that store the
@@ -711,9 +715,9 @@ def compact_topic(spark: SparkSession, topic_path: str, tombstone=None) -> dict[
 
     The reference's two phases (scan → build latestForKey map → rewrite) are
     one declarative plan: ``operators.compaction.compact`` (latest per key,
-    tombstones dropped) + write. Readers with readCompacted=true get
-    union(snapshot, tail > horizon) — see sources/pulsarlike.py. Returns the
-    compaction horizon per partition.
+    tombstones dropped) + write. ``read_topic_compacted`` reads
+    union(snapshot, tail > horizon). Returns the compaction horizon per
+    partition.
     """
     # imported here: the module registers its queries when first imported
     from pulsar_3_2_codedump_spark.operators import compaction
@@ -746,7 +750,9 @@ def compact_topic(spark: SparkSession, topic_path: str, tombstone=None) -> dict[
 
 def read_topic_compacted(spark: SparkSession, topic_path: str) -> DataFrame:
     """readCompacted=true (§2.D3, CompactedTopicImpl.java): compacted snapshot
-    for the log ≤ horizon, raw tail after it."""
+    for the log ≤ horizon, raw tail after it. A shadow topic reads its
+    source's snapshot, as it reads the source's segments."""
+    topic_path = resolve_data_topic(topic_path)
     manifest = read_manifest(topic_path)
     horizon = {int(p): int(e) for p, e in manifest.get("compaction_horizon", {}).items()}
     snap_rel = manifest.get("compacted_path")
@@ -981,16 +987,19 @@ def topic_stats(topic_path: str) -> dict:
     opened, exactly like the broker serving stats from ledger metadata).
     Subscriptions are the topic's cursors
     (``subscriptions.acked_positions``); the backlog counts from each one's
-    acked position."""
+    acked position. A shadow topic lists its own subscriptions over its
+    source's segments."""
     from pulsar_3_2_codedump_spark.subscriptions import acked_positions
 
-    manifest = read_manifest(topic_path)
+    topic_name = read_manifest(topic_path).get("name")
+    data_path = resolve_data_topic(topic_path)
+    manifest = read_manifest(data_path)
     ends = end_offsets(manifest)
     parts = {}
     for p, segs in manifest["segments"].items():
         size = 0
         for s in segs:
-            sp = _seg_path(topic_path, p, s)
+            sp = _seg_path(data_path, p, s)
             if os.path.isdir(sp):
                 size += sum(
                     os.path.getsize(os.path.join(sp, f))
@@ -1011,7 +1020,7 @@ def topic_stats(topic_path: str) -> dict:
         for name, pos in acked_positions(topic_path).items()
     }
     return {
-        "name": manifest.get("name"),
+        "name": topic_name,
         "n_partitions": manifest["n_partitions"],
         "partitions": parts,
         "subscriptions": subs,

@@ -109,6 +109,24 @@ def plan_audit(spark):
     return sweep(spark, load_all(), SF_DIR)
 
 
+def drain(spark, topic_path, **options):
+    """Every row the ``pulsarlike`` stream source delivers from
+    ``topic_path`` in one availableNow run, as the memory sink's table.
+    ``options`` are source options (``readMarkers="true"``, ...)."""
+    import uuid
+
+    reader = spark.readStream.format("pulsarlike").option("path", topic_path)
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    q = (
+        reader.load().writeStream.format("memory").queryName(name)
+        .trigger(availableNow=True).start()
+    )
+    assert q.awaitTermination(180), "availableNow drain did not finish"
+    return spark.table(name)
+
+
 @pytest.fixture()
 def tmp_root(tmp_path):
     return str(tmp_path)

@@ -119,50 +119,3 @@ def test_windowed_agg_replay_after_crash_no_duplicates(spark, tmp_root):
     # window identity, not monotonically_increasing_id)
     seqs2 = {(r["key"], r["sequence_id"]) for r in replay.select("key", "sequence_id").collect()}
     assert seqs2 == seqs
-
-
-def test_stream_sink_abort_and_replay_with_time_bounds(spark, tmp_root):
-    """abort() and the idempotent replayed-batch commit() path must clean up
-    the staged files, and the committed segment carries publish-time bounds
-    (the crash-recovery path the exactly-once contract protects)."""
-    import datetime as dt
-    import os
-
-    from pyspark.sql import Row
-
-    from pulsar_3_2_codedump_spark.sources import pulsarlike as PL
-
-    tp = T.create_topic(tmp_root, "sink", n_partitions=1)
-    base = dt.datetime(2024, 5, 1)
-
-    def rows():
-        return iter(
-            Row(
-                key=str(i), value=None, properties=None,
-                event_time=base + dt.timedelta(seconds=i),
-                publish_time=base + dt.timedelta(seconds=i),
-                producer_name="p", sequence_id=i, deliver_at=None,
-                marker_type=None, replicated_from=None, partition=0,
-            )
-            for i in range(5)
-        )
-
-    writer = PL.PulsarLikeStreamWriter({"path": tp}, None)
-
-    msg = writer.write(rows())
-    assert list(msg.files) == [0]  # one staged file, for partition 0
-
-    # abort must remove the staged file without raising
-    writer.abort([msg], 0)
-    assert os.listdir(os.path.join(tp, "_stream_staging")) == []
-
-    # commit, then replay the same batch id — idempotent skip + cleanup
-    msg2 = writer.write(rows())
-    writer.commit([msg2], 1)
-    segs = T.read_manifest(tp)["segments"]["0"]
-    assert len(segs) == 1 and segs[0]["min_pt"] is not None
-    assert T.read_topic(spark, tp).count() == 5
-    msg3 = writer.write(rows())  # the replayed attempt's stage
-    writer.commit([msg3], 1)  # same batchId → no-op append, cleanup only
-    assert T.read_topic(spark, tp).count() == 5
-    assert os.listdir(os.path.join(tp, "_stream_staging")) == []

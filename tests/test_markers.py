@@ -20,7 +20,7 @@ from pulsar_3_2_codedump_spark.envelope import (
     wrap_events,
 )
 from pulsar_3_2_codedump_spark.sources import pulsarlike as PL
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, drain
 
 
 def _env(spark, limit=120):
@@ -55,15 +55,14 @@ def test_read_topic_hides_markers(spark, tmp_root):
 
 
 def test_pulsarlike_reader_hides_markers(spark, tmp_root):
+    """The stream source hides markers unless ``readMarkers=true``."""
     tp, n_data, n_markers = _topic_with_markers(spark, tmp_root)
-    df = spark.read.format("pulsarlike").option("path", tp).load()
+    df = drain(spark, tp)
     assert df.count() == n_data
     assert df.filter(F.col("marker_type").isNotNull()).count() == 0
-    internal = (
-        spark.read.format("pulsarlike").option("path", tp)
-        .option("readMarkers", "true").load()
-    )
+    internal = drain(spark, tp, readMarkers="true")
     assert internal.count() == n_data + n_markers
+    assert internal.filter(F.col("marker_type") == MARKER_TXN_COMMIT).count() == n_markers
 
 
 def test_compaction_drops_markers(spark, tmp_root):
@@ -153,34 +152,6 @@ def test_marker_injection_visible_only_with_flag(spark, tmp_root):
     assert T.read_topic(spark, tp).count() == n
     ends = T.end_offsets(T.read_manifest(tp))
     assert ends[0] == n + 1  # the marker holds a log position
-
-
-def test_batch_reader_splits_large_ranges(spark, tmp_root):
-    """A topic partition's scan fans out into multiple segment-aligned tasks
-    under maxRowsPerTask — one giant task per partition would serialize a
-    100 TB scan."""
-    tp = T.create_topic(tmp_root, "split", n_partitions=1)
-    data = _env(spark, 90).withColumn("partition", F.lit(0))
-    for i in range(3):  # 3 segments of 30 rows
-        T.append(
-            spark,
-            data.filter((F.col("sequence_id") >= 30 * i) & (F.col("sequence_id") < 30 * (i + 1))),
-            tp, dedup=False,
-        )
-    reader = PL.PulsarLikeBatchReader({"path": tp, "maxrowspertask": "30"})
-    parts = [p for p in reader.partitions() if isinstance(p, PL.RangePartition)]
-    assert len(parts) == 3
-    assert [(p.lo, p.hi) for p in sorted(parts, key=lambda x: x.lo)] == [(0, 30), (30, 60), (60, 90)]
-    # default budget: one task
-    reader2 = PL.PulsarLikeBatchReader({"path": tp})
-    assert len(reader2.partitions()) == 1
-    # data identity through the DataFrame API with the option set
-    df = (
-        spark.read.format("pulsarlike").option("path", tp)
-        .option("maxRowsPerTask", "30").load()
-    )
-    assert df.count() == 90
-    assert df.select("offset").distinct().count() == 90
 
 
 def test_repl_snapshot_cursor_translation(spark, tmp_root):

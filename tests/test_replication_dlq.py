@@ -90,14 +90,14 @@ def test_read_compacted_via_source(spark, tmp_root):
     env = wrap_events(load(spark, SF_DIR, "events")).drop("partition", "offset")
     tail = env.filter(F.col("sequence_id").between(600, 699))
     T.append(spark, tail, tp)
-    df = spark.read.format("pulsarlike").option("path", tp).option("readCompacted", "true").load()
+    df = T.read_topic_compacted(spark, tp)
     n_keys = (
         wrap_events(load(spark, SF_DIR, "events"))
         .filter(F.col("sequence_id") < 600).select("key").distinct().count()
     )
     assert df.count() == n_keys + 100
     # non-compacted read still sees the full log
-    full = spark.read.format("pulsarlike").option("path", tp).load()
+    full = T.read_topic(spark, tp)
     assert full.count() == 700
 
 

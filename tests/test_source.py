@@ -1,4 +1,5 @@
-"""The pulsarlike data source: batch/stream read, offsets, seek, sink (§2.A, §4)."""
+"""The pulsarlike stream source: reads, offsets, seek, cursors, and stream
+copies through ``foreachBatch`` + ``topic.append`` (§2.A, §4)."""
 
 import json
 
@@ -7,7 +8,8 @@ from pyspark.sql import functions as F
 from pulsar_3_2_codedump_spark import topic as T
 from pulsar_3_2_codedump_spark.catalog import load
 from pulsar_3_2_codedump_spark.envelope import wrap_events
-from tests.conftest import SF_DIR
+from pulsar_3_2_codedump_spark.streaming.replicator import replicate
+from tests.conftest import SF_DIR, drain
 
 
 def _make_topic(spark, root, name="events", parts=4):
@@ -18,9 +20,13 @@ def _make_topic(spark, root, name="events", parts=4):
 
 
 def test_batch_read_matches_topic(spark, tmp_root):
+    """One availableNow run of the source delivers exactly the rows of the
+    batch read."""
     tp = _make_topic(spark, tmp_root)
-    df = spark.read.format("pulsarlike").option("path", tp).load()
+    df = drain(spark, tp)
     assert df.count() == 1000
+    cols = ["partition", "offset", "key", "sequence_id"]
+    assert sorted(df.select(cols).collect()) == sorted(T.read_topic(spark, tp).select(cols).collect())
     assert set(df.columns) >= {"key", "value", "partition", "offset", "publish_time"}
     # per-key ordering guarantee: within a partition offsets are unique+dense
     stats = df.groupBy("partition").agg(F.max("offset").alias("hi"), F.count("*").alias("n")).collect()
@@ -93,62 +99,25 @@ def test_seek_by_timestamp_matches_predicate(spark, tmp_root):
     q.awaitTermination(120)
     got = spark.sql("select count(*) c from src_seek").collect()[0]["c"]
     expected = (
-        spark.read.format("pulsarlike").option("path", tp).load()
+        T.read_topic(spark, tp)
         .filter(F.col("publish_time") >= F.lit(ts).cast("timestamp")).count()
     )
     assert got == expected
 
 
 def test_stream_sink_roundtrip_and_offsets(spark, tmp_root):
+    """A stream copy (``replicate``: ``foreachBatch`` + ``append``) lands
+    every row at dense offsets; a restart on the same checkpoint with no new
+    data adds nothing."""
     src_tp = _make_topic(spark, tmp_root)
     dst_tp = T.create_topic(tmp_root, "copy", n_partitions=4)
-    q = (
-        spark.readStream.format("pulsarlike").option("path", src_tp).load()
-        .writeStream.format("pulsarlike").option("path", dst_tp)
-        .option("checkpointLocation", tmp_root + "/ck")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    out = spark.read.format("pulsarlike").option("path", dst_tp).load()
+    replicate(spark, src_tp, dst_tp, "c1", tmp_root + "/ck").awaitTermination(180)
+    out = T.read_topic(spark, dst_tp)
     assert out.count() == 1000
     for r in out.groupBy("partition").agg(F.max("offset").alias("hi"), F.count("*").alias("n")).collect():
-        assert r["hi"] == r["n"] - 1  # sink assigned dense offsets
-    # restart with same checkpoint: no new data → no duplicates (idempotent)
-    q2 = (
-        spark.readStream.format("pulsarlike").option("path", src_tp).load()
-        .writeStream.format("pulsarlike").option("path", dst_tp)
-        .option("checkpointLocation", tmp_root + "/ck")
-        .trigger(availableNow=True).start()
-    )
-    q2.awaitTermination(180)
-    assert spark.read.format("pulsarlike").option("path", dst_tp).load().count() == 1000
-
-
-def test_batch_writer_via_format(spark, tmp_root):
-    """A1 batch producer surface: df.write.format('pulsarlike').save()."""
-    tp = T.create_topic(tmp_root, "w", n_partitions=4)
-    env = wrap_events(load(spark, SF_DIR, "events")).drop("offset")
-    env.write.format("pulsarlike").option("path", tp).mode("append").save()
-    out = spark.read.format("pulsarlike").option("path", tp).load()
-    assert out.count() == 1000
-    for r in out.groupBy("partition").agg(F.max("offset").alias("hi"), F.count("*").alias("n")).collect():
-        assert r["hi"] == r["n"] - 1
-
-
-def test_batch_reader_filter_pushdown_prunes(spark, tmp_root):
-    """§2.C1 at the custom source: offset/partition predicates are pushed
-    into segment listing (and results still correct)."""
-    tp = _make_topic(spark, tmp_root)
-    df = spark.read.format("pulsarlike").option("path", tp).load()
-    sub = df.filter((F.col("offset") >= 100) & (F.col("partition") == 2))
-    rows = sub.collect()
-    full = {(r["partition"], r["offset"]) for r in df.collect()}
-    assert {(r["partition"], r["offset"]) for r in rows} == {
-        (p, o) for (p, o) in full if p == 2 and o >= 100
-    }
-    # the predicates were CONSUMED by pushdown: no post-scan Filter node remains
-    plan = sub._jdf.queryExecution().executedPlan().toString()
-    assert "Filter (" not in plan and "+- Filter" not in plan
+        assert r["hi"] == r["n"] - 1  # the commit assigned dense offsets
+    replicate(spark, src_tp, dst_tp, "c1", tmp_root + "/ck").awaitTermination(180)
+    assert T.read_topic(spark, dst_tp).count() == 1000
 
 
 def test_multi_topic_streaming_union(spark, tmp_root):
@@ -174,20 +143,14 @@ def test_multi_topic_streaming_union(spark, tmp_root):
 
 def test_per_key_order_preserved_through_stream_copy(spark, tmp_root):
     """Key_Shared's core guarantee end-to-end (§2.B3): after a full
-    stream-copy (source -> sink), each key's messages appear in the
+    stream-copy (``replicate``), each key's messages appear in the
     destination in the same relative order (by offset) as in the source."""
     src_tp = _make_topic(spark, tmp_root, parts=4)
     dst_tp = T.create_topic(tmp_root, "ordered-copy", n_partitions=4)
-    q = (
-        spark.readStream.format("pulsarlike").option("path", src_tp).load()
-        .writeStream.format("pulsarlike").option("path", dst_tp)
-        .option("checkpointLocation", tmp_root + "/ck_ord")
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
+    replicate(spark, src_tp, dst_tp, "c1", tmp_root + "/ck_ord").awaitTermination(180)
 
     def key_sequences(tp):
-        df = spark.read.format("pulsarlike").option("path", tp).load()
+        df = T.read_topic(spark, tp)
         rows = df.select("key", "partition", "offset", "sequence_id").collect()
         seqs = {}
         for r in sorted(rows, key=lambda r: (r["partition"], r["offset"])):

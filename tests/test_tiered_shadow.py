@@ -7,7 +7,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pulsar_3_2_codedump_spark import topic as TP
+from pulsar_3_2_codedump_spark import subscriptions as S, topic as TP
+from pulsar_3_2_codedump_spark.sources.pulsarlike import PulsarLikeStreamReader
+from tests.conftest import drain
 
 
 def _envelope_rows(spark, lo, hi):
@@ -63,14 +65,10 @@ def test_offload_reads_stay_transparent_and_are_idempotent(spark, tmp_path):
                     os.path.join(tp, f"partition={p}", s["path"])
                 )
 
-    # batch read, custom-source batch read, and streaming reader all
-    # resolve the tiered location transparently
+    # the batch read and the stream source both resolve the tiered
+    # location transparently
     assert _collect_keys(TP.read_topic(spark, tp)) == before
-    from pulsar_3_2_codedump_spark.sources import register
-
-    register(spark)
-    via_source = spark.read.format("pulsarlike").option("path", tp).load()
-    assert _collect_keys(via_source) == before
+    assert _collect_keys(drain(spark, tp)) == before
 
     # appends continue normally after offload (new local segments)
     TP.append(spark, _envelope_rows(spark, 60, 70), tp)
@@ -121,20 +119,13 @@ def test_shadow_topic_follows_source_and_rejects_produce(spark, tmp_path):
     TP.append(spark, _envelope_rows(spark, 20, 30), src)
     assert _collect_keys(TP.read_topic(spark, shadow)) == {str(i) for i in range(30)}
 
-    # the custom source reads shadows too (its own checkpoints = its own
+    # the stream source reads shadows too (its own checkpoints = its own
     # subscriptions; only the data path re-points)
-    from pulsar_3_2_codedump_spark.sources import register
+    assert _collect_keys(drain(spark, shadow)) == {str(i) for i in range(30)}
 
-    register(spark)
-    via_source = spark.read.format("pulsarlike").option("path", shadow).load()
-    assert _collect_keys(via_source) == {str(i) for i in range(30)}
-
-    # produce is rejected on both write paths
+    # produce is rejected
     with pytest.raises(TP.ShadowTopicError):
         TP.append(spark, _envelope_rows(spark, 90, 91), shadow)
-    with pytest.raises(Exception, match="shadow"):
-        (_envelope_rows(spark, 90, 91)
-         .write.format("pulsarlike").option("path", shadow).mode("append").save())
     # offload owns no ledgers either
     with pytest.raises(TP.ShadowTopicError):
         TP.offload_segments(shadow, str(tmp_path / "tier"), {0: 10})
@@ -153,3 +144,42 @@ def test_exclusive_producer_cannot_publish_to_shadow(spark, tmp_path):
     with pytest.raises(TP.ShadowTopicError):
         TP.append_exclusive(spark, _envelope_rows(spark, 0, 5), shadow, grant)
     assert TP.end_offsets(TP.read_manifest(src)) == {0: 0, 1: 0}
+
+
+def test_shadow_compacted_read_is_the_sources(spark, tmp_path):
+    """A compacted read through a shadow reads its source's snapshot and
+    horizon, not the raw log."""
+    root = str(tmp_path / "topics")
+    src = TP.create_topic(root, "src", n_partitions=2)
+    TP.append(spark, _envelope_rows(spark, 0, 40).withColumn(
+        "key", (F.col("sequence_id") % 5).cast("string")), src)
+    TP.compact_topic(spark, src)
+    TP.append(spark, _envelope_rows(spark, 40, 43), src)  # tail past the horizon
+    shadow = TP.create_shadow_topic(root, "src-shadow", src)
+
+    def rows(tp):
+        return sorted(
+            TP.read_topic_compacted(spark, tp).select("partition", "offset", "key").collect()
+        )
+
+    assert len(rows(src)) == 5 + 3
+    assert rows(shadow) == rows(src)
+
+
+def test_shadow_subscription_cursor_stays_with_the_shadow(spark, tmp_path):
+    """A named subscription on a shadow keeps its cursor under the shadow:
+    the source's subscriptions are untouched, and the shadow's stats list
+    it with its backlog."""
+    root = str(tmp_path / "topics")
+    src = TP.create_topic(root, "src", n_partitions=2)
+    TP.append(spark, _envelope_rows(spark, 0, 20), src)
+    shadow = TP.create_shadow_topic(root, "src-shadow", src)
+
+    reader = PulsarLikeStreamReader({"path": shadow, "subscription": "s"})
+    end = reader.latestOffset()
+    reader.commit({p: e - 2 for p, e in end.items()})
+    assert os.path.isfile(S.subscription_cursor_path(shadow, "s"))
+    assert S.acked_positions(src) == {}
+    stats = TP.topic_stats(shadow)
+    assert stats["name"] == "src-shadow"
+    assert stats["subscriptions"]["s"]["backlog"] == 2 * len(end)

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from pulsar_3_2_codedump_spark import topic as T
 from pulsar_3_2_codedump_spark.catalog import load
 from pulsar_3_2_codedump_spark.envelope import wrap_events
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, drain
 
 
 def _env(spark):
@@ -148,8 +148,7 @@ def test_merge_small_segments_preserves_data(spark, tmp_root):
     after_rows = {(r["partition"], r["offset"], r["sequence_id"]) for r in after.collect()}
     assert after_rows == before_rows
     # streaming source still reads the merged topic correctly
-    df = spark.read.format("pulsarlike").option("path", tp).load()
-    assert df.count() == len(before_rows)
+    assert drain(spark, tp).count() == len(before_rows)
     # appends continue cleanly after a merge
     extra = env.limit(0)
     ends = T.end_offsets(m_after)

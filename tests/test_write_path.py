@@ -1,23 +1,31 @@
-"""One write path for a topic: ``topic.append``, the ``pulsarlike`` stream
-sink and the batch writer all commit through ``topic._commit_segments``,
-and every segment they leave is a directory of parquet files that store
-``offset``. Faults are injected at the commit point, raised in-process or
-by killing a writer process: a commit that dies after moving its segments
-but before the manifest replace must leave no visible rows, and its retry
-must land each row exactly once. ``append``
-itself is one plan with one action, its dedup holds against the producer
-marks, and two processes appending at once leave a dense log."""
+"""One write path for a topic: ``topic.append`` (and through it every
+``foreachBatch`` stream writer and ``txn_commit``) commits through
+``topic._commit_segments``, and every segment a writer or a merge leaves is
+a directory of parquet files that store ``offset``. Faults are injected at
+the commit point, raised in-process or by killing a writer process that
+stages its rows with pyarrow alone: a commit that dies after moving its
+segments but before the manifest replace must leave no visible rows, and
+its retry must land each row exactly once. ``append`` itself is one plan
+with one action, its dedup holds against the producer marks, and two
+processes appending at once leave a dense log."""
 
 import datetime as dt
 import os
 import uuid
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import Row
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from pulsar_3_2_codedump_spark import topic as T
+from pulsar_3_2_codedump_spark.envelope import ENVELOPE_SCHEMA
 from pulsar_3_2_codedump_spark.sources import pulsarlike as PL
+from pulsar_3_2_codedump_spark.streaming.replicator import _token, replicate
+from tests.conftest import drain
 
 _BASE = dt.datetime(2024, 5, 1)
 _SCHEMA = (
@@ -40,14 +48,49 @@ def _frame(spark, lo, hi, producer="p"):
     return spark.createDataFrame(_tuples(lo, hi, producer), _SCHEMA)
 
 
-def _rows(lo, hi, producer="p"):
-    """What Spark hands the sink's write(): one Row per message."""
-    return iter(Row(**dict(zip(_NAMES, t))) for t in _tuples(lo, hi, producer))
+# the rows a stage writes: the envelope minus offset (stamped at commit) and
+# partition (the segment's directory)
+_STAGE_SCHEMA = to_arrow_schema(
+    StructType([f for f in ENVELOPE_SCHEMA.fields if f.name not in ("offset", "partition")])
+)
+
+
+def _stage(lo, hi, n_partitions, producer="p"):
+    """A ``_commit_segments`` stage built with pyarrow alone, no Spark: row
+    ``i`` goes to partition ``i % n_partitions``, each partition's rows in
+    order at dense offsets from its end. It sets no producer marks."""
+    rows = [dict(zip(_NAMES, t)) for t in _tuples(lo, hi, producer)]
+
+    def stage(manifest, ends, stage_dir):
+        parts = {}
+        for p in range(n_partitions):
+            tbl = pa.Table.from_pylist(rows[p::n_partitions], schema=_STAGE_SCHEMA)
+            if not tbl.num_rows:
+                continue
+            offsets = np.arange(ends[p], ends[p] + tbl.num_rows, dtype=np.int64)
+            os.makedirs(os.path.join(stage_dir, f"partition={p}"))
+            pq.write_table(
+                tbl.append_column("offset", pa.array(offsets)),
+                os.path.join(stage_dir, f"partition={p}", "part-00000.parquet"),
+            )
+            pt = pc.min_max(tbl.column("publish_time").cast(pa.timestamp("us")))
+            parts[p] = (tbl.num_rows, pt["min"].value, pt["max"].value)
+        return parts, {}
+
+    return stage
+
+
+def _commit(tp, lo, hi, token=None):
+    """Commit rows ``lo..hi`` under the writer lock, staged by ``_stage``."""
+    n = T.read_manifest(tp)["n_partitions"]
+    with T._topic_write_lock(tp):
+        return T._commit_segments(tp, _stage(lo, hi, n), token)
 
 
 def _check_log(spark, tp, n):
-    """``n`` rows, each (producer, sequence) once, at dense offsets."""
-    rows = T.read_topic(spark, tp).select(
+    """``n`` rows, markers included, each (producer, sequence) once, at
+    dense offsets."""
+    rows = T.read_topic(spark, tp, read_markers=True).select(
         "partition", "offset", "producer_name", "sequence_id"
     ).collect()
     assert len(rows) == n
@@ -105,31 +148,13 @@ def test_append_retry_after_crash_before_manifest_replace(spark, tmp_root, monke
     _check_log(spark, tp, 50)
 
 
-def test_sink_retry_after_crash_before_manifest_replace(spark, tmp_root, monkeypatch):
-    tp = T.create_topic(tmp_root, "s", n_partitions=2)
-    writer = PL.PulsarLikeStreamWriter({"path": tp}, None)
-    writer.commit([writer.write(_rows(0, 20))], 0)
-    _fail_manifest_replace_once(monkeypatch)
-    with pytest.raises(OSError, match="injected"):
-        writer.commit([writer.write(_rows(20, 50))], 1)
-    assert T.read_topic(spark, tp).count() == 20  # nothing of batch 1 is visible
-    # Spark re-runs the failed batch's tasks and commits the same batchId
-    writer.commit([writer.write(_rows(20, 50))], 1)
-    writer.commit([writer.write(_rows(20, 50))], 1)  # a replay of it: no-op
-    _check_log(spark, tp, 50)
-    assert os.listdir(os.path.join(tp, "_stream_staging")) == []
-
-
-# A writer process that commits one sink batch (pyarrow-staged, no Spark
+# A writer process that commits one batch (pyarrow-staged, no Spark
 # session) and dies by os._exit at the named point of _commit_segments.
 _KILL_CHILD = r"""
 import os, shutil, sys
-from pulsar_3_2_codedump_spark.sources import pulsarlike as PL
-from tests.test_write_path import _rows
+from tests.test_write_path import _commit
 
 tp, lo, hi, batch, point = sys.argv[1], int(sys.argv[2]), int(sys.argv[3]), int(sys.argv[4]), sys.argv[5]
-writer = PL.PulsarLikeStreamWriter({"path": tp, "sinkid": "k"}, None)
-staged = writer.write(_rows(lo, hi))
 if point == "before_replace":  # the manifest's tmp file is written
     os.replace = lambda *a, **k: os._exit(17)
 elif point == "before_cleanup":  # the manifest is replaced
@@ -139,7 +164,7 @@ elif point == "before_cleanup":  # the manifest is replaced
             os._exit(17)
         rmtree(path, *a, **k)
     shutil.rmtree = die_at_staging
-writer.commit([staged], batch)
+_commit(tp, lo, hi, f"k:{batch}")
 """
 
 
@@ -189,18 +214,16 @@ def test_commit_killed_then_retried_lands_once(spark, tmp_root, point):
 
 
 def test_sink_topic_leaves_no_unlisted_segments(spark, tmp_root):
-    """Merge, retention trim and offload delete the segments they drop, for
-    segments the sink wrote too."""
+    """Merge, retention trim and offload delete the segments they drop."""
     tp = T.create_topic(tmp_root, "leak", n_partitions=2)
-    writer = PL.PulsarLikeStreamWriter({"path": tp}, None)
     for b in range(3):
-        writer.commit([writer.write(_rows(10 * b, 10 * b + 10))], b)
+        _commit(tp, 10 * b, 10 * b + 10, f"b{b}")
     assert T.merge_small_segments(spark, tp) == 4  # 3 segments -> 1, per partition
     assert _unlisted_segments(tp) == []
 
     merged_ends = T.end_offsets(T.read_manifest(tp))
     for b in range(3, 6):
-        writer.commit([writer.write(_rows(10 * b, 10 * b + 10))], b)
+        _commit(tp, 10 * b, 10 * b + 10, f"b{b}")
     assert T.trim_retention(spark, tp, merged_ends) == 2
     assert _unlisted_segments(tp) == []
 
@@ -211,26 +234,26 @@ def test_sink_topic_leaves_no_unlisted_segments(spark, tmp_root):
 
 
 def test_sink_replay_tokens_stay_bounded(spark, tmp_root):
-    """Each micro-batch commits the token ``stream:<sinkId>:<batchId>`` into
-    the same bounded list as ``append``'s batch tokens."""
+    """A stream writer's micro-batch tokens go into one bounded list: the
+    commit keeps the last 512."""
     tp = T.create_topic(tmp_root, "many", n_partitions=1)
-    writer = PL.PulsarLikeStreamWriter({"path": tp, "sinkid": "q"}, None)
     n = 520
     for b in range(n):
-        writer.commit([writer.write(_rows(b, b + 1))], b)
+        _commit(tp, b, b + 1, f"q:{b}")
     m = T.read_manifest(tp)
     assert "committed_stream_batches" not in m
     toks = m["committed_batch_tokens"]
-    assert len(toks) == 512 and toks[-1] == f"stream:q:{n - 1}"
-    writer.commit([writer.write(_rows(n - 1, n))], n - 1)  # replay: no-op
+    assert len(toks) == 512 and toks[-1] == f"q:{n - 1}"
+    _commit(tp, n - 1, n, f"q:{n - 1}")  # replay: no-op
     assert T.end_offsets(T.read_manifest(tp)) == {0: n}
     _check_log(spark, tp, n)
 
 
 def test_two_sinks_on_one_topic_keep_their_own_replay_tokens(spark, tmp_root):
-    """Two stream copies into one topic, each with its own checkpoint and
-    no ``sinkId``: both land all their rows, and a replayed batch of one of
-    them (its checkpoint commit lost) is a no-op."""
+    """Two stream copies (``replicate``) into one topic, each with its own
+    checkpoint: both land all their rows under tokens of their own, and a
+    replayed batch of one of them (its checkpoint commit lost) is a
+    no-op."""
     dst = T.create_topic(tmp_root, "dst", n_partitions=2)
     copies = {}
     for name, n in (("a", 100), ("b", 50)):
@@ -240,22 +263,19 @@ def test_two_sinks_on_one_topic_keep_their_own_replay_tokens(spark, tmp_root):
 
     def copy(name):
         src, ck = copies[name]
-        q = (
-            spark.readStream.format("pulsarlike").option("path", src).load()
-            .writeStream.format("pulsarlike").option("path", dst)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(180)
+        replicate(spark, src, dst, "c1", ck).awaitTermination(180)
 
     copy("a")
     copy("b")
     _check_log(spark, dst, 150)
+    toks = T.read_manifest(dst)["committed_batch_tokens"]
+    assert toks == [_token(copies[name][1], "repl", 0) for name in ("a", "b")]
     commits = os.path.join(copies["b"][1], "commits")
     for f in os.listdir(commits):
         os.remove(os.path.join(commits, f))
     copy("b")  # re-runs batch 0 from the offset log
     _check_log(spark, dst, 150)
+    assert T.read_manifest(dst)["committed_batch_tokens"] == toks
 
 
 def test_checkpoint_writer_id_ignores_the_spelling(tmp_root, monkeypatch):
@@ -269,19 +289,18 @@ def test_checkpoint_writer_id_ignores_the_spelling(tmp_root, monkeypatch):
 
 
 def test_every_writer_leaves_one_segment_shape(spark, tmp_root):
+    """``append``, a stream copy, a transaction's commit and a merge all
+    leave segments of one shape, which the batch read and the stream source
+    read alike."""
     src = T.create_topic(tmp_root, "src", n_partitions=2)
     T.append(spark, _frame(spark, 100, 160, "s"), src)
     tp = T.create_topic(tmp_root, "all", n_partitions=3)
 
     T.append(spark, _frame(spark, 0, 40, "a"), tp)
-    q = (
-        spark.readStream.format("pulsarlike").option("path", src).load()
-        .writeStream.format("pulsarlike").option("path", tp)
-        .option("checkpointLocation", os.path.join(tmp_root, "ck_sink"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-    _frame(spark, 200, 230, "w").write.format("pulsarlike").option("path", tp).mode("append").save()
+    replicate(spark, src, tp, "c1", os.path.join(tmp_root, "ck_copy")).awaitTermination(180)
+    txn = T.txn_begin(tp)
+    T.txn_append(spark, _frame(spark, 200, 230, "w"), tp, txn)
+    T.txn_commit(spark, tp, txn)  # 30 rows and one commit marker
     T.append(spark, _frame(spark, 40, 50, "a"), tp)
 
     def assert_one_shape():
@@ -295,23 +314,17 @@ def test_every_writer_leaves_one_segment_shape(spark, tmp_root):
     assert_one_shape()
     assert T.merge_small_segments(spark, tp) > 0
     assert_one_shape()
-    _check_log(spark, tp, 140)
+    _check_log(spark, tp, 141)
 
     def positions(df):
         return {(r.partition, r.offset) for r in df.select("partition", "offset").collect()}
 
-    name = f"one_shape_{uuid.uuid4().hex[:8]}"
-    q = (
-        spark.readStream.format("pulsarlike").option("path", tp).load()
-        .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", os.path.join(tmp_root, "ck_mem"))
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
     via_topic = positions(T.read_topic(spark, tp))
     assert len(via_topic) == 140
-    assert positions(spark.read.format("pulsarlike").option("path", tp).load()) == via_topic
-    assert positions(spark.table(name)) == via_topic
+    assert positions(drain(spark, tp)) == via_topic
+    assert positions(drain(spark, tp, readMarkers="true")) == positions(
+        T.read_topic(spark, tp, read_markers=True)
+    )
 
 
 def test_trim_retention_crash_before_manifest_replace(spark, tmp_root, monkeypatch):

@@ -424,7 +424,7 @@ def main() -> None:
         "  one-time envelope BUILD lineage (routing window + exchanges), which executes",
         "  once per session, not per query; steady-state execution starts at the",
         "  InMemoryTableScan. Against real topic segments the scan is parquet with",
-        "  full pushdown (see test_batch_reader_filter_pushdown).",
+        "  full pushdown (see `topic.read_topic`).",
         "- Scalar-subquery thresholds (Q11/Q15/Q20/Q22 shapes) appear as single-row",
         "  `BroadcastNestedLoopJoin` — a broadcast of one aggregate row, not a",
         "  quadratic join.",

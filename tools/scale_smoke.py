@@ -106,10 +106,8 @@ def main() -> None:
         return
 
     # bulk ingest through the JVM path (topic.append: route → offset-assign →
-    # parquet write → the shared manifest commit). THE way 100 TB enters a
-    # topic — the streaming sink reaches the same commit, but its rows pass
-    # through Python one at a time, so it is for live tails only (see
-    # PulsarLikeStreamWriter docstring / SCALE.md).
+    # parquet write → the manifest commit). topic.append is the one writer:
+    # a stream writes through it from foreachBatch (see SCALE.md).
     import shutil
     import tempfile
 
