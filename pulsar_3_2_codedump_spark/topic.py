@@ -37,6 +37,7 @@ store path; atomic-rename becomes a conditional-put of the manifest object.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -117,9 +118,15 @@ def read_manifest(topic_path: str) -> dict:
 
 def _write_json_atomic(path: str, obj) -> None:
     tmp = f"{path}.tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(obj, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)  # readers see the old or the new file, never half
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f, indent=1, sort_keys=True)
+        os.replace(tmp, path)  # readers see the old or the new file, never half
+    except BaseException:
+        # a raised fault leaves no temp file; a killed writer's stays
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(tmp)
+        raise
 
 
 def _write_manifest_atomic(topic_path: str, manifest: dict) -> None:
@@ -331,7 +338,6 @@ def _topic_write_lock(topic_path: str):
     old or the new manifest, both consistent, thanks to the atomic replace).
     On object storage, replace with a conditional-put (ETag/If-Match) CAS
     loop on the manifest object — same protocol, no lock server needed."""
-    import contextlib
     import fcntl
 
     @contextlib.contextmanager

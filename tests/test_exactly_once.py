@@ -44,7 +44,7 @@ def _delete_last_commit(checkpoint: str) -> None:
     files = sorted(f for f in os.listdir(cdir) if not f.startswith("."))
     assert files, "no committed batches to crash"
     os.remove(os.path.join(cdir, files[-1]))
-    crc = os.path.join(cdir, f".{files[-1]}.crc")  # Hadoop ChecksumFs sidecar
+    crc = os.path.join(cdir, f".{files[-1]}.crc")  # ChecksumFileSystem sidecar
     if os.path.exists(crc):
         os.remove(crc)
 

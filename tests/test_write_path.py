@@ -213,6 +213,36 @@ def test_commit_killed_then_retried_lands_once(spark, tmp_root, point):
     assert not listed & orphans
 
 
+@pytest.mark.parametrize("fault", ["dump", "replace"])
+def test_manifest_write_raising_leaves_no_temp_file(spark, tmp_root, monkeypatch, fault):
+    """A manifest write that raises (not a kill) while writing its temp
+    file or at the replace removes the temp file; the old manifest stays."""
+    tp = T.create_topic(tmp_root, "r", n_partitions=2)
+    _commit(tp, 0, 20)
+    before = T.read_manifest(tp)
+
+    def fail(*a, **k):
+        raise OSError("injected manifest write fault")
+
+    replace = os.replace
+
+    def fail_at_manifest(src, dst):
+        if dst.endswith(T.MANIFEST):
+            fail()
+        replace(src, dst)
+
+    if fault == "dump":
+        monkeypatch.setattr(T.json, "dump", fail)
+    else:
+        monkeypatch.setattr(T.os, "replace", fail_at_manifest)
+    with pytest.raises(OSError, match="injected"):
+        _commit(tp, 20, 50, "r:1")
+    monkeypatch.undo()
+    assert not [f for f in os.listdir(tp) if f.startswith(T.MANIFEST + ".tmp.")]
+    assert T.read_manifest(tp) == before
+    _check_log(spark, tp, 20)
+
+
 def test_sink_topic_leaves_no_unlisted_segments(spark, tmp_root):
     """Merge, retention trim and offload delete the segments they drop."""
     tp = T.create_topic(tmp_root, "leak", n_partitions=2)
