@@ -6,6 +6,8 @@ events documents embeddings — one parquet file per table under an sf dir.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 TABLES = [
@@ -40,25 +42,57 @@ def _conform_timestamps(df: DataFrame) -> DataFrame:
     )
 
 
+# (applicationId, absolute path) -> ((size, st_mtime_ns), the schema Spark
+# inferred for the file at that size and mtime); see ``load``
+_SCHEMAS: dict[tuple[str, str], tuple[tuple[int, int], T.StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema of a file only on
+    its first read in this session."""
+    # a directory's size and mtime do not change when a file in it is
+    # rewritten in place, so only a single file is memoized
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    st = os.stat(path)
+    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+    stamp = (st.st_size, st.st_mtime_ns)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table; normalizes timestamp representations the
     fixtures have shipped with across driver versions — nanosecond
     TIMESTAMP(NANOS) (readable only as long) and tz-naive TIMESTAMP_NTZ —
     down to plain session-TZ microsecond TIMESTAMP, matching what DuckDB's
-    reader produces on the same files."""
+    reader produces on the same files.
+
+    Spark infers a parquet file's schema with a Spark job that reads its
+    footer. ``load`` memoizes the inferred schema per session
+    (``applicationId``), absolute path, file size and ``st_mtime_ns``, and
+    later loads of the same file pass it to the reader, so they run no job.
+    A rewritten fixture has a new size or mtime and is inferred again. Each
+    call still builds a new relation: two loads of one table in a self-join
+    keep distinct attribute ids."""
     try:
         # Prefer reading tz-naive parquet timestamps as TIMESTAMP directly;
         # the cast below still guards sessions where this conf is absent/locked.
         spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     except Exception:
         pass
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _conform_timestamps(df)
-    return _conform_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return _conform_timestamps(_read_parquet(spark, path))
 
 
 def fanout(df: DataFrame, partitions: int | None = None) -> DataFrame:

@@ -6,7 +6,7 @@ Scale posture: on a real cluster the same settings apply except
 (we only pin them in local mode so 32 threads aren't starved by 200
 default partitions).
 
-Two settings cut the fixed cost of every streaming micro-batch:
+Three settings cut fixed costs that every micro-batch or query pays again:
 
 - ``spark.sql.streaming.checkpointFileManagerClass`` is Spark's
   ``FileSystemBasedCheckpointFileManager``. The default FileContext manager
@@ -21,6 +21,12 @@ Two settings cut the fixed cost of every streaming micro-batch:
   trigger finds no new data Spark sleeps this long before it polls the
   sources again; each ``pulsarlike`` poll is a round trip to a Python
   worker, so an idle query made about a hundred of them a second.
+- ``spark.sql.codegen.cache.maxEntries`` is 1000, not Spark's 100. One
+  ``analytics`` cycle of the benchmark (sf0.01) generates 164 distinct
+  classes, so the 100-entry cache evicted each before its next use and
+  every cycle compiled all of them again with Janino (about 1.4 s on a
+  4-CPU host) and loaded new classes for the JIT to compile again. A generated class averages 2.5 KB
+  of bytecode. The conf is static: the JVM's first session fixes it.
 """
 
 from __future__ import annotations
@@ -63,6 +69,8 @@ def get_spark(app_name: str = "pulsar_3_2_codedump_spark", cpus: int | None = No
             "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
         )
         .config("spark.sql.streaming.pollingDelay", "100ms")
+        # generated classes outlive a cycle of queries (static, per JVM)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # Fixture parquet carries isAdjustedToUTC=false timestamps; read them
         # as session-TZ TIMESTAMP (session TZ is UTC) not TIMESTAMP_NTZ so
         # unix_micros/watermarks work. catalog.load also casts defensively.

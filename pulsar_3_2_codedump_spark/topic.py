@@ -44,6 +44,7 @@ import os
 import shutil
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -456,11 +457,16 @@ def _append_unlocked(
 def _map_lookup(mapping: dict, key_type: str, key_col: str):
     """``mapping[key_col]`` as a column, NULL for a key not in the
     (non-empty) ``mapping`` or a NULL key. The map is a literal, so the
-    lookup costs no join and no broadcast, whatever its size."""
+    lookup costs no join and no broadcast, whatever its size.
+
+    Keys and values are each one array literal (from a numpy array), not an
+    array of element literals: generated code inlines element literals, so
+    new marks or ends would compile a new class, e.g. when the optimizer
+    evaluates an append's dedup filter over a driver-side frame."""
     keys, vals = zip(*mapping.items())
     m = F.map_from_arrays(
-        F.lit(list(keys)).cast(f"array<{key_type}>"),
-        F.lit([int(v) for v in vals]).cast("array<bigint>"),
+        F.lit(np.array(keys)).cast(f"array<{key_type}>"),
+        F.lit(np.array([int(v) for v in vals], dtype=np.int64)),
     )
     return F.element_at(m, F.col(key_col))
 
