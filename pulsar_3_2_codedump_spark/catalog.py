@@ -121,11 +121,11 @@ _SHARED_FRAMES: list[DataFrame] = []
 
 
 def persist_shared_corpus_frame(df: DataFrame) -> DataFrame:
-    """Lazy DISK_ONLY persist for a corpus-sized frame shared by branches.
+    """Lazy DISK_ONLY persist: the one lifecycle for any frame a query
+    caches, whatever its size (a tokenized projection, a basket table, a
+    MinHash signature, a trained codebook).
 
-    The materialize-once discipline for frames proportional to the corpus
-    (a tokenized projection, a basket table); bounded, control-plane and
-    loop-carried frames use ``localCheckpoint`` instead. Persist keeps
+    Loop-carried frames use ``localCheckpoint`` instead. Persist keeps
     LINEAGE, so on executor loss the partition is recomputed from the
     parquet scan instead of killing the job the way a lost localCheckpoint
     block would, and DISK_ONLY keeps a 100 TB-scale frame out of executor
@@ -135,7 +135,9 @@ def persist_shared_corpus_frame(df: DataFrame) -> DataFrame:
 
     Frames are tracked in ``_SHARED_FRAMES``; long-running drivers release
     them between queries via ``release_shared_frames`` (ADVICE r13 — see
-    the tracker comment above)."""
+    the tracker comment above). No query keeps a cached frame of its own
+    between calls: one left behind would be spliced into later plans and
+    would outlive the session that made it."""
     from pyspark import StorageLevel
 
     out = df.persist(StorageLevel.DISK_ONLY)

@@ -200,39 +200,31 @@ def wrap_table(
     df: DataFrame,
     key_col: str,
     event_time_col: str | None,
-    n_partitions: int = N_PARTITIONS,
     producer: str = "producer-0",
 ) -> DataFrame:
     """Generic fixture→envelope publisher: wrap ANY table's rows as messages
     (the schema-encode step of ProducerImpl.serializeAndSendMessage:617 —
     payload = JSON of all columns; typed decode comes back via the schema
     registry). Tables with no event-time column (dimension/JDBC ingests)
-    pass ``event_time_col=None``: epoch timestamps, key-ordered offsets —
-    still deterministic."""
+    pass ``event_time_col=None``: epoch timestamps. The rows carry no
+    partition or offset: ``topic.append`` routes and numbers them."""
     payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
     et = (
         F.col(event_time_col)
         if event_time_col
         else F.lit("1970-01-01 00:00:00").cast("timestamp")
     )
-    w = Window.partitionBy("partition").orderBy(et, F.col(key_col).cast("string"))
-    return (
-        df.withColumn("partition", F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_partitions)).cast("int"))
-        .withColumn("offset", F.row_number().over(w).cast("long") - 1)
-        .select(
-            F.col(key_col).cast("string").alias("key"),
-            F.to_binary(payload, F.lit("utf-8")).alias("value"),
-            F.create_map(F.lit("source_table"), F.lit("generic")).alias("properties"),
-            et.alias("event_time"),
-            et.alias("publish_time"),
-            F.lit(producer).alias("producer_name"),
-            F.monotonically_increasing_id().alias("sequence_id"),
-            F.lit(None).cast("timestamp").alias("deliver_at"),
-            F.lit(None).cast("int").alias("marker_type"),
-            F.lit(None).cast("string").alias("replicated_from"),
-            "partition",
-            "offset",
-        )
+    return df.select(
+        F.col(key_col).cast("string").alias("key"),
+        F.to_binary(payload, F.lit("utf-8")).alias("value"),
+        F.create_map(F.lit("source_table"), F.lit("generic")).alias("properties"),
+        et.alias("event_time"),
+        et.alias("publish_time"),
+        F.lit(producer).alias("producer_name"),
+        F.monotonically_increasing_id().alias("sequence_id"),
+        F.lit(None).cast("timestamp").alias("deliver_at"),
+        F.lit(None).cast("int").alias("marker_type"),
+        F.lit(None).cast("string").alias("replicated_from"),
     )
 
 

@@ -13,14 +13,14 @@ Scale posture (100 TB):
     array_intersect) — JVM codegen, no Python UDFs.
 
 All hashes derive from md5 hex (shared with the DuckDB oracle — see
-operators/routing.md5_hash32 note on murmur3/xxhash64 substitution).
+operators/routing.md5_hash32 note on the murmur3 substitution).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from pulsar_3_2_codedump_spark.catalog import fanout, load
+from pulsar_3_2_codedump_spark.catalog import fanout, load, persist_shared_corpus_frame
 from pulsar_3_2_codedump_spark.queries import query
 
 N_HASHES = 8  # minhash signature length
@@ -83,9 +83,6 @@ def _d_md5int(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}), 1, 8)) AS BIGINT)"
 
 
-_LAST_SIG = None  # last persisted minhash signature frame (bounded cache)
-
-
 @query(
     "exact_dedup",
     section="2.N-dedup",
@@ -129,8 +126,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fanout(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
     # the shingled frame feeds the inverted index AND both verify sides —
     # persist once (corpus-sized -> DISK_ONLY; r13 scan audit: 4 -> 1)
-    from pulsar_3_2_codedump_spark.catalog import persist_shared_corpus_frame
-
     sh = persist_shared_corpus_frame(
         docs.select("doc_id", shingles(F.col("text")).alias("sh"))
     )
@@ -163,6 +158,57 @@ def _minhash_sig_sql() -> str:
     return ", ".join(cols)
 
 
+def _lsh_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The MinHash-LSH candidate pipeline: the persisted signature
+    ``doc_id, sh, h0..h7`` and the distinct band-equal pairs
+    ``doc_a < doc_b``. Callers verify the candidates against ``sig``."""
+    docs = fanout(load(spark, sf_dir, "documents"))
+    sh = docs.select("doc_id", shingles(F.col("text")).alias("sh"))
+    # materialize (shingles, base hashes, signature) ONCE — four plan branches
+    # (bands a/b, verify x/y) would otherwise re-run the md5 pass each.
+    # LAZY persist (r16): the eager count() paid a full extra
+    # shingle+md5 pass as its own job just to pre-fill the cache; under
+    # the single main action the four sig consumers populate and share
+    # the cache anyway (a racing partition recompute is cheaper than the
+    # guaranteed extra pass — measured 1.89 s lazy vs 2.36 s eager at
+    # sf0.1, OPTIMIZATION_r16.md).
+    sig = persist_shared_corpus_frame(
+        sh.withColumn("hs", base_hashes(F.col("sh"))).select(
+            "doc_id", "sh", *minhash_signature(F.col("hs"))
+        )
+    )
+    # bands via ONE explode pass over the cached signature (a 4-way union
+    # would scan it 4×; at scale the band table is 4n tiny rows either way)
+    bands = sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.col(f"h{b * BAND_SIZE}").alias("b1"),
+                        F.col(f"h{b * BAND_SIZE + 1}").alias("b2"),
+                    )
+                    for b in range(N_HASHES // BAND_SIZE)
+                ]
+            )
+        ).alias("bd"),
+    ).select("doc_id", "bd.band", "bd.b1", "bd.b2")
+    a, bb = bands.alias("a"), bands.alias("b")
+    cand = (
+        a.join(
+            bb,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.b1") == F.col("b.b1"))
+            & (F.col("a.b2") == F.col("b.b2"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+    return sig, cand
+
+
 @query(
     "minhash_lsh_dedup",
     section="2.N-dedup",
@@ -193,57 +239,7 @@ def _minhash_sig_sql() -> str:
     """,
 )
 def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = fanout(load(spark, sf_dir, "documents"))
-    sh = docs.select("doc_id", shingles(F.col("text")).alias("sh"))
-    # materialize (shingles, base hashes, signature) ONCE — four plan branches
-    # (bands a/b, verify x/y) would otherwise re-run the md5 pass each
-    sig = sh.withColumn("hs", base_hashes(F.col("sh"))).select(
-        "doc_id", "sh", *minhash_signature(F.col("hs"))
-    )
-    # Bound cache growth: each invocation persists a fresh signature frame;
-    # drop the previous invocation's cache before materializing this one
-    # (repeated benchmark/driver calls otherwise accumulate cached copies
-    # until eviction thrash shows up as run-to-run variance).
-    global _LAST_SIG
-    if _LAST_SIG is not None:
-        _LAST_SIG.unpersist(blocking=True)
-    # LAZY persist (r16): the eager count() paid a full extra
-    # shingle+md5 pass as its own job just to pre-fill the cache; under
-    # the single main action the four sig consumers populate and share
-    # the cache anyway (a racing partition recompute is cheaper than the
-    # guaranteed extra pass — measured 1.89 s lazy vs 2.36 s eager at
-    # sf0.1, OPTIMIZATION_r16.md).
-    sig = sig.persist()
-    _LAST_SIG = sig
-    # bands via ONE explode pass over the cached signature (a 4-way union
-    # would scan it 4×; at scale the band table is 4n tiny rows either way)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.col(f"h{b * BAND_SIZE}").alias("b1"),
-                        F.col(f"h{b * BAND_SIZE + 1}").alias("b2"),
-                    )
-                    for b in range(N_HASHES // BAND_SIZE)
-                ]
-            )
-        ).alias("bd"),
-    ).select("doc_id", "bd.band", "bd.b1", "bd.b2")
-    a, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.b1") == F.col("b.b1"))
-            & (F.col("a.b2") == F.col("b.b2"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sig, cand = _lsh_candidates(spark, sf_dir)
     x = sig.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     y = sig.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
@@ -627,8 +623,6 @@ def shingle_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = fanout(load(spark, sf_dir, "documents").filter(F.col("doc_id") < 300))
     # the shingled frame feeds the inverted index AND both verify sides —
     # persist once (corpus-sized -> DISK_ONLY; r13 scan audit: 4 -> 1)
-    from pulsar_3_2_codedump_spark.catalog import persist_shared_corpus_frame
-
     sh = persist_shared_corpus_frame(
         docs.select("doc_id", shingles(F.col("text")).alias("sh"))
     )
@@ -1025,46 +1019,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = fanout(load(spark, sf_dir, "documents"))
-    sh = docs.select("doc_id", shingles(F.col("text")).alias("sh"))
-    # same bounded signature cache as minhash_lsh_dedup: one md5 pass for
-    # the four plan branches (bands x2, verify x2), previous copy dropped
-    global _LAST_SIG
-    if _LAST_SIG is not None:
-        _LAST_SIG.unpersist(blocking=True)
-    sig = sh.withColumn("hs", base_hashes(F.col("sh"))).select(
-        "doc_id", "sh", *minhash_signature(F.col("hs"))
-    ).persist()
-    # lazy persist (r16) — same reasoning as minhash_lsh_dedup: the eager
-    # count was a guaranteed extra md5 pass; the consumers fill the cache
-    _LAST_SIG = sig
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.col(f"h{b * BAND_SIZE}").alias("b1"),
-                        F.col(f"h{b * BAND_SIZE + 1}").alias("b2"),
-                    )
-                    for b in range(N_HASHES // BAND_SIZE)
-                ]
-            )
-        ).alias("bd"),
-    ).select("doc_id", "bd.band", "bd.b1", "bd.b2")
-    a, bb = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.b1") == F.col("b.b1"))
-            & (F.col("a.b2") == F.col("b.b2"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sig, cand = _lsh_candidates(spark, sf_dir)
     xcols = ["sh"] + [f"h{j}" for j in range(N_HASHES)]
     x = sig.select(F.col("doc_id").alias("doc_a"), *[F.col(c).alias(f"x_{c}") for c in xcols])
     y = sig.select(F.col("doc_id").alias("doc_b"), *[F.col(c).alias(f"y_{c}") for c in xcols])

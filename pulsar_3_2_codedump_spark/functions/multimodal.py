@@ -60,7 +60,7 @@ class MediaDecodeUnavailable(NotImplementedError):
 def decode_image(blob: bytes):  # pragma: no cover - real path needs PIL
     raise MediaDecodeUnavailable(
         "image decode requires PIL/opencv (not in container); "
-        "use extract_features(deterministic_fake=True) for the tested fake path"
+        "extract_features is the tested deterministic fake path"
     )
 
 
@@ -79,17 +79,16 @@ def as_media_table(docs: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(media: DataFrame, deterministic_fake: bool = True) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over blobs (mapInPandas).
 
-    The fake kernel is deterministic (byte statistics) so tests can assert
-    exact values; the real kernel raises MediaDecodeUnavailable.
+    The kernel is a deterministic fake (byte statistics) so tests can assert
+    exact values; a real decode would go through ``decode_image``, which
+    raises MediaDecodeUnavailable here.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not deterministic_fake:
-                decode_image(b"")
             feats = []
             for blob in pdf["blob"]:
                 b = bytes(blob)

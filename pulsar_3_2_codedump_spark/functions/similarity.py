@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
-from pulsar_3_2_codedump_spark.catalog import fanout, load
+from pulsar_3_2_codedump_spark.catalog import fanout, load, persist_shared_corpus_frame
 from pulsar_3_2_codedump_spark.queries import query
 from pulsar_3_2_codedump_spark.topic import lookup_frame
 
@@ -1074,24 +1074,17 @@ def pq_adc_search_arrow(codes_df: DataFrame, cb: DataFrame, qdf: DataFrame) -> D
     )
 
 
-_LAST_CODEBOOK = None  # last cached trained codebook (bounded cache — same
-                       # unpersist-on-next-call pattern as dedup_ml._LAST_SIG)
-
-
-def pq_codebook(emb: DataFrame, kernel: str = "expr") -> DataFrame:
+def pq_codebook(emb: DataFrame) -> DataFrame:
     """Trained PQ codebook (Jégou et al., 'Product Quantization for Nearest
     Neighbor Search'): seed codewords 1..PQ_K are the PQ_K vectors ranked
     first by md5(vec_id) (reproducible uniform sample), refined by ONE
     Lloyd iteration per subspace — assign every corpus subvector to its
     nearest seed, recompute codewords as the per-dimension mean of their
-    assigned subvectors (rounded to 6dp so the grouped double mean is
+    assigned subvectors (rounded to 6dp so the grouped double sum is
     cross-engine/run reproducible; empty cells keep their seed). Training
-    is itself a DataFrame job: one broadcast equi-join + two agg shuffles —
-    the k-means-on-Spark pattern, linear in corpus size per iteration."""
-    global _LAST_CODEBOOK
-    if _LAST_CODEBOOK is not None:
-        _LAST_CODEBOOK.unpersist(blocking=True)
-        _LAST_CODEBOOK = None
+    is itself a DataFrame job: one Arrow partial-sums pass + two agg
+    shuffles — the k-means-on-Spark pattern, linear in corpus size per
+    iteration."""
     seed_order = (F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
     seeds = (
         emb.orderBy(*seed_order)
@@ -1102,86 +1095,63 @@ def pq_codebook(emb: DataFrame, kernel: str = "expr") -> DataFrame:
         seeds.select(F.col("vec_id").alias("seed_vec"), "code_id"), "seed_vec"
     ).select("m", "code_id", F.col("sv").alias("cw"))
 
-    if kernel == "arrow":
-        # Lloyd assign + per-batch PARTIAL SUMS in one Arrow pass: instead of
-        # the corpus x PQ_M x PQ_SUB double-posexplode (64M rows at 1M
-        # vectors), each batch emits at most PQ_M*PQ_K*PQ_SUB partial
-        # (sum, count) rows — the shuffle carries ~1k rows per batch. The
-        # grouped double sum is round-6dp'd exactly like the avg it replaces.
-        import numpy as np
+    # Lloyd assign + per-batch PARTIAL SUMS in one Arrow pass: instead of
+    # the corpus x PQ_M x PQ_SUB double-posexplode (64M rows at 1M
+    # vectors), each batch emits at most PQ_M*PQ_K*PQ_SUB partial
+    # (sum, count) rows — the shuffle carries ~1k rows per batch. The
+    # grouped double sum is round-6dp'd so the codewords reproduce.
+    import numpy as np
 
-        cb0np = _pq_cb_numpy(cb0)
+    cb0np = _pq_cb_numpy(cb0)
 
-        def partials(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-                xs = x.reshape(len(x), PQ_M, 1, PQ_SUB)
-                d = np.zeros((len(x), PQ_M, PQ_K))
-                for i in range(PQ_SUB):  # same order as the _sqdist fold
-                    t = xs[:, :, :, i] - cb0np[None, :, :, i]
-                    d += t * t
-                codes = d.argmin(axis=2)  # (B, PQ_M), 0-based
-                ssum = np.zeros((PQ_M, PQ_K, PQ_SUB))
-                cnt = np.zeros((PQ_M, PQ_K), dtype=np.int64)
-                xsub = x.reshape(len(x), PQ_M, PQ_SUB)
-                for m in range(PQ_M):
-                    np.add.at(cnt[m], codes[:, m], 1)
-                    for i in range(PQ_SUB):
-                        np.add.at(ssum[m, :, i], codes[:, m], xsub[:, m, i])
-                rows = [
-                    (m, k + 1, i + 1, ssum[m, k, i], int(cnt[m, k]))
-                    for m in range(PQ_M)
-                    for k in range(PQ_K)
-                    if cnt[m, k]
-                    for i in range(PQ_SUB)
-                ]
-                yield pd.DataFrame(rows, columns=["m", "code_id", "i", "s", "n"])
+    def partials(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+            xs = x.reshape(len(x), PQ_M, 1, PQ_SUB)
+            d = np.zeros((len(x), PQ_M, PQ_K))
+            for i in range(PQ_SUB):  # same order as the _sqdist fold
+                t = xs[:, :, :, i] - cb0np[None, :, :, i]
+                d += t * t
+            codes = d.argmin(axis=2)  # (B, PQ_M), 0-based
+            ssum = np.zeros((PQ_M, PQ_K, PQ_SUB))
+            cnt = np.zeros((PQ_M, PQ_K), dtype=np.int64)
+            xsub = x.reshape(len(x), PQ_M, PQ_SUB)
+            for m in range(PQ_M):
+                np.add.at(cnt[m], codes[:, m], 1)
+                for i in range(PQ_SUB):
+                    np.add.at(ssum[m, :, i], codes[:, m], xsub[:, m, i])
+            rows = [
+                (m, k + 1, i + 1, ssum[m, k, i], int(cnt[m, k]))
+                for m in range(PQ_M)
+                for k in range(PQ_K)
+                if cnt[m, k]
+                for i in range(PQ_SUB)
+            ]
+            yield pd.DataFrame(rows, columns=["m", "code_id", "i", "s", "n"])
 
-        part = emb.mapInPandas(partials, "m int, code_id int, i int, s double, n long")
-        pos = part.groupBy("m", "code_id", "i").agg(
-            F.round(F.sum("s") / F.sum("n"), 6).alias("mv")
-        )
-    else:
-        enc0 = emb.crossJoin(F.broadcast(_pq_cbflat(cb0))).select(
-            "embedding", _pq_codes_col().alias("codes")
-        )
-        assigned = enc0.select(
-            "embedding", F.posexplode("codes").alias("m", "code_id")
-        ).select(
-            "m",
-            "code_id",
-            F.posexplode(
-                F.slice(F.col("embedding"), F.col("m") * PQ_SUB + 1, PQ_SUB)
-            ).alias("i", "v"),
-        )
-        pos = assigned.groupBy("m", "code_id", "i").agg(
-            F.round(F.avg(F.col("v").cast("double")), 6).alias("mv")
-        )
+    part = emb.mapInPandas(partials, "m int, code_id int, i int, s double, n long")
+    pos = part.groupBy("m", "code_id", "i").agg(
+        F.round(F.sum("s") / F.sum("n"), 6).alias("mv")
+    )
     trained = pos.groupBy("m", "code_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("i", "mv"))), lambda s: s["mv"]
         ).alias("cw1")
     )
-    # cache: the codebook is PQ_M*PQ_K rows but costs a full corpus pass to
-    # train — encode, LUT build and _pq_cb_numpy each collect it, so an
-    # uncached plan would re-run Lloyd once per consumer. Tracked in
-    # _LAST_CODEBOOK so the next training run unpersists this one (bounded:
-    # at most one codebook frame lives in the cache manager at a time).
-    cb = (
-        cb0.join(trained, ["m", "code_id"], "left")
-        .select(
+    # persist: the codebook is PQ_M*PQ_K rows but costs a full corpus pass
+    # to train — encode, LUT build and _pq_cb_numpy each collect it, so an
+    # uncached plan would re-run Lloyd once per consumer
+    return persist_shared_corpus_frame(
+        cb0.join(trained, ["m", "code_id"], "left").select(
             "m",
             "code_id",
             F.coalesce(
                 F.col("cw1"), F.transform(F.col("cw"), lambda x: x.cast("double"))
             ).alias("cw"),
         )
-        .cache()
     )
-    _LAST_CODEBOOK = cb
-    return cb
 
 
 _D_CODEBOOK = f"""
@@ -1264,7 +1234,7 @@ _D_CODEBOOK = f"""
 )
 def pq_adc_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb, kernel="arrow")
+    cb = pq_codebook(emb)
     # production kernels: Arrow-vectorized encode + LUT-gather search over
     # the 8-byte/vector code form; both are bit-identical to the JVM expr
     # reference (pinned in tests), so the driver's exact-oracle hash
@@ -1352,8 +1322,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             l2_norm(F.col("embedding")).alias("cent_norm"),
         )
     )
-    from pulsar_3_2_codedump_spark.catalog import persist_shared_corpus_frame
-
     aw = W.partitionBy("vec_id").orderBy(F.desc("cc"), F.asc("cluster_id"))
     # persist-before-reuse (r13 scan audit): the assignment feeds BOTH
     # self-join sides and the final verdict join — left lazy each re-ran
@@ -1528,7 +1496,7 @@ def _argmin_cell(df: DataFrame, cells: DataFrame, id_col: str, keep_rank: int) -
 )
 def ivfadc_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb, kernel="arrow")
+    cb = pq_codebook(emb)
     cells = _ivf_cells(emb)
     codes = pq_encode(fanout(emb), cb, kernel="arrow")
     assign = _argmin_cell(emb, cells, "vec_id", 1)
@@ -1666,7 +1634,7 @@ def ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # oracle-matched form trains on the full corpus, so it persists.
     assigned = assigned.localCheckpoint()
     res = assigned.select("vec_id", "embedding")
-    cb = pq_codebook(res, kernel="arrow")
+    cb = pq_codebook(res)
     codes = pq_encode(fanout(res), cb, kernel="arrow")
     wq = W.partitionBy("query_id").orderBy("sqd", "cell_id")
     qres = (
@@ -2616,7 +2584,7 @@ _D_OPQ_PERM = f"""
 def opq_rotated_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     rotated = opq_rotate(emb)
-    cb = pq_codebook(rotated, kernel="arrow")
+    cb = pq_codebook(rotated)
     codes = pq_encode(fanout(rotated), cb, kernel="arrow")
     adc = pq_adc_search_arrow(
         codes, cb, rotated.filter(_query_pred())

@@ -50,7 +50,7 @@ def ingest_external(
     df = reader.load(path)
     env = wrap_table(
         df, key_col, event_time_col, producer=f"src:{fmt}:{os.path.basename(path)}"
-    ).drop("partition", "offset")
+    )
     # connector ingests carry no producer-retry semantics and wrap_table's
     # sequence ids are not stable across reads — broker dedup marks would
     # silently drop rows of a SECOND ingest into the same topic (hwm compare)
@@ -120,9 +120,7 @@ def ingest_jdbc(
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
     df = reader.load()
-    env = wrap_table(
-        df, key_col, event_time_col, producer=f"jdbc:{table}"
-    ).drop("partition", "offset")
+    env = wrap_table(df, key_col, event_time_col, producer=f"jdbc:{table}")
     # see ingest_external: dedup marks + unstable sequence ids would drop a
     # second table's rows silently
     return T.append(spark, env, topic_path, dedup=False)

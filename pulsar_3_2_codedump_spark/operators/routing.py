@@ -43,7 +43,7 @@ def route_by_key(df: DataFrame, n_partitions: int, key_col: str = "key") -> Data
 def md5_hash32(col):
     """Deterministic 32-bit key hash shared with the SQL oracle: first 8 hex
     chars of md5 as an integer. (Stands in for murmur3_32 — semantics-compat,
-    not byte-compat, per SURVEY §4; swap xxhash64 in production.)"""
+    not byte-compat, per SURVEY §4.)"""
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10).cast("long")
 
 
@@ -60,19 +60,11 @@ def dispatch_key(df_or_cols=None):
     return F.coalesce(F.col("ordering_key").cast("string"), F.col("key"))
 
 
-def key_shared_bucket(key_col, n_consumers: int, oracle_compat: bool = True):
+def key_shared_bucket(key_col, n_consumers: int):
     """Key_Shared AUTO_SPLIT: equal hash ranges over the 64K slot space →
-    consumer id.
-
-    ``oracle_compat=True`` uses the md5-based 32-bit hash reproducible in
-    DuckDB SQL (the correctness-gate form). Production form
-    (``oracle_compat=False``) uses ``xxhash64`` — same assignment semantics
-    (any uniform hash), ~8× faster per `tools/scale_smoke.py` because md5 +
-    base-16 `conv` string round-trips leave codegen."""
-    if oracle_compat:
-        slot = md5_hash32(key_col) % KEY_HASH_SPACE
-    else:
-        slot = F.pmod(F.xxhash64(key_col.cast("string")), F.lit(KEY_HASH_SPACE))
+    consumer id. The slot is the md5-based 32-bit hash reproducible in
+    DuckDB SQL (``md5_hash32``), so the oracle checks the assignment."""
+    slot = md5_hash32(key_col) % KEY_HASH_SPACE
     return F.floor(slot / (KEY_HASH_SPACE / n_consumers)).cast("int")
 
 

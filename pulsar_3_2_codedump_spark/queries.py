@@ -19,7 +19,7 @@ import shutil
 import tempfile
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -31,19 +31,18 @@ class Query:
     oracle: str | None = None
     section: str = ""  # SURVEY §2 item, e.g. "2.D1"
     doc: str = ""
-    tags: list[str] = field(default_factory=list)
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def query(name: str, oracle: str | None = None, section: str = "", doc: str = "", tags=None):
+def query(name: str, oracle: str | None = None, section: str = "", doc: str = ""):
     """Decorator: register a (spark_fn, oracle_sql) pair under ``name``."""
 
     def deco(fn):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name, fn, oracle, section, doc or (fn.__doc__ or ""), tags or [])
+        REGISTRY[name] = Query(name, fn, oracle, section, doc or (fn.__doc__ or ""))
         return fn
 
     return deco

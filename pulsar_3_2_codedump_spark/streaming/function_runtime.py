@@ -51,13 +51,12 @@ def pulsar_function(
     input_col: str,
     output_col: str,
     output_type: DataType,
-    drop_nulls: bool = True,
 ) -> DataFrame:
     """Function<X,T> adapter: vectorized per-message transform; null → filtered
     (Function.java:40 'null means no output')."""
     udf = F.pandas_udf(fn, output_type)
     out = df.withColumn(output_col, udf(F.col(input_col)))
-    return out.filter(F.col(output_col).isNotNull()) if drop_nulls else out
+    return out.filter(F.col(output_col).isNotNull())
 
 
 def window_function(

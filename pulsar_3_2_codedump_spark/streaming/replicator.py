@@ -46,7 +46,6 @@ def replicate(
     dst_topic: str,
     cluster_name: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming copy query topicA→topicA' with the loop guard
     (PersistentReplicator.java:227: skip messages already replicated)."""
@@ -64,9 +63,7 @@ def replicate(
         )
 
     writer = src.writeStream.foreachBatch(copy_batch).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def process_with_dlq(
@@ -79,7 +76,6 @@ def process_with_dlq(
     is_failure,
     max_redeliver: int,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
     """Consume → process; failing rows re-publish to -RETRY with
     redelivery_count+1 until maxRedeliverCount, then land in -DLQ
@@ -136,9 +132,7 @@ def process_with_dlq(
             b.unpersist()
 
     writer = src.writeStream.foreachBatch(route_batch).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def windowed_with_late_side_output(
@@ -149,7 +143,6 @@ def windowed_with_late_side_output(
     window_duration: str,
     watermark_lag: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ):
     """Windowed count with a late-data side topic (WindowConfig.lateDataTopic,
     G6): the dual-query pattern — the main watermarked aggregation drops late
@@ -228,9 +221,7 @@ def windowed_with_late_side_output(
             b.unpersist()
 
     writer = src.writeStream.foreachBatch(split_batch).option("checkpointLocation", checkpoint)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def reconsume_later(

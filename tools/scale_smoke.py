@@ -89,12 +89,6 @@ def main() -> None:
         "key_shared_histogram_oracle_md5",
         env.withColumn("c", key_shared_bucket(F.col("key"), 16)).groupBy("c").count(),
     )
-    run(
-        "key_shared_histogram_xxhash64",
-        env.withColumn(
-            "c", key_shared_bucket(F.col("key"), 16, oracle_compat=False)
-        ).groupBy("c").count(),
-    )
     skewed = synthetic_envelope(spark, n, skewed=True)
     run("salted_hot_key_agg_90pct_skew", salted_count_sum(skewed, "key", "value", "sequence_id"))
 
@@ -356,7 +350,7 @@ def main() -> None:
         F.col("id").alias("vec_id"), dims64.alias("embedding")
     )
     t0 = time.time()
-    cb = pq_codebook(emb64, kernel="arrow")
+    cb = pq_codebook(emb64)
     codes = pq_encode(emb64, cb, kernel="arrow")
     codes.write.mode("overwrite").parquet("/tmp/pq_codes_smoke")
     dt = time.time() - t0
